@@ -1,12 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at the given scale
-  * factor and prints ONE JSON line. Shuffle hygiene matters more than
-  * raw speed for a long multi-query sweep in one JVM: without periodic
-  * driver GC, Spark's ContextCleaner (default 30 min) never releases
-  * finished shuffle files and a local disk can fill mid-run — that is
-  * what killed the round-1 bench.
+  * factor in one [[Session]] and prints ONE JSON line.
   *
   * This box's disk throughput varies run-to-run by up to ~2×
   * (BASELINE.md documents identical plans at 4.6 s vs 37.8 s), so a
@@ -19,39 +14,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.cleaner.periodicGC.interval", "45s")
-      // this box is disk-bound (run-to-run spread tracks disk
-      // throughput, BASELINE.md): zstd halves shuffle bytes vs lz4 for
-      // a CPU cost the 32 idle-on-IO cores absorb. Parameterized for
-      // A/B probes (round 18, guide §2.3 "there is no universal
-      // answer — measure both"); the default stays the recorded arm.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
-      // subset-key co-partitioning (round 17, guide §2.4): the match
-      // chain is cached hash-partitioned by doc1, and its (doc1, doc2)
-      // joins — e.g. the pivot's full outer — are exchange-free only
-      // when co-partitioning accepts a subset of the join keys (the
-      // same rule aggregations/windows already use). No correctness
-      // effect; only which exchanges ENSURE_REQUIREMENTS inserts.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // parallel file-listing job sized to the session, not the 10000
-      // default (round 17, guide §6): listing q95's 5000 partition
-      // dirs as 5000 one-stat tasks was 8.1 s of pure scheduling on
-      // local[32]; 2×cores tasks do the same listing in ~0.5 s, and
-      // the value scales with the executor count on a real cluster
-      .config("spark.sql.sources.parallelPartitionDiscovery.parallelism",
-        (cpus.toInt * 2).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.fromEnv(32)
     // optional subset filter (comma-separated names) for scale probes;
     // the driver never sets it, so the recorded bench stays full-suite
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -66,115 +30,34 @@ object Bench {
     }
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_(n)) }
-    // run order is FAMILY-CLUSTERED (SweepOrder): each memo family's
-    // consumers run contiguously, so a finite cache budget rebuilds
-    // each family at most once instead of once per consumer cluster —
-    // the round-14 sf10 thrash was exactly the alphabetical order
-    // scattering the matchPairs consumers (2.54× like-for-like).
-    // Reported keys stay name-sorted; only execution order changes.
-    // SPARK_GRAFT_REVERSE=1 sweeps in reverse order — the
-    // order-independence probe for the shared-cache accounting below
-    // (two sweeps in opposite order should agree per-query once the
-    // cache build is its own step)
-    val clustered = SweepOrder.sort(sorted)
-    val names = if (sys.env.get("SPARK_GRAFT_REVERSE").contains("1"))
-      clustered.reverse else clustered
     // Full-suite sweeps pre-build the cross-query caches as an explicit
-    // `cache_build` step (VERDICT r7 item 6): the cost is real work and
-    // stays in the total, but per-query times become order-independent
-    // instead of loading the cold-cache build onto whichever of
-    // q13/q17/q19/q49 runs first. Subset probes (SPARK_GRAFT_ONLY)
-    // skip it so scale rows keep measuring the query as a user runs it.
-    // The warm is STAGED per family cluster (round 16): each group's
-    // families build right before its first query, so a family
-    // occupies cache budget only across its own consumer cluster — an
-    // up-front warm held every family resident from minute 0, and at
-    // sf10 that residency is what forced the one round-15 eviction
-    // (pivotedScores out at q43, q72 rebuilt it for 98 s).
-    // SPARK_GRAFT_WARM_UPFRONT=1 keeps the old all-at-once arm for A/B;
-    // either way the summed build cost reports as one `cache_build`.
+    // `cache_build` step (VERDICT r7 item 6), staged per family cluster
+    // (SweepOrder.sweep): the cost is real work and stays in the total,
+    // but per-query times become order-independent instead of loading
+    // the cold-cache build onto whichever consumer runs first. Subset
+    // probes (SPARK_GRAFT_ONLY) skip it so scale rows keep measuring
+    // the query as a user runs it. Reported keys stay name-sorted; only
+    // execution order is clustered.
     val warmCaches = only.isEmpty
-    val upfront = sys.env.get("SPARK_GRAFT_WARM_UPFRONT").contains("1")
-    // scheduler-informed cache release: a memo family's frames are
-    // dead the moment its last scheduled consumer has run — release
-    // them there instead of making the byte budget guess
-    // (SPARK_GRAFT_NO_RELEASE=1 keeps the budget-only arm for A/B)
-    val releaseAt: Map[Int, Seq[String]] =
-      if (sys.env.get("SPARK_GRAFT_NO_RELEASE").contains("1")) Map.empty
-      else SweepOrder.releaseSchedule(names.map(_._1))
     val samples = (1 to runs).map { run =>
-      var warmSec = 0.0
-      var warmOk = true
-      def timedWarm(what: String)(body: => Unit): Unit = {
-        // warm builds are UNATTRIBUTED in the touch report (curQuery
-        // would otherwise still name the previous query — the exact
-        // ADVICE-r15 misattribution, which shifts release points when
-        // the frozen consumer map is regenerated)
-        queries.Shared.beginQuery("")
+      val swept = SweepOrder.sweep(spark, sfDir, sorted, warmCaches,
+          s"[bench] run $run") { (name, query) =>
         val t0 = System.nanoTime()
-        // name the cause, as Verify does: a failed group warm degrades
-        // to lazy per-query builds, and a sweep read that way must not
-        // hide its reason behind the JSON ok-flag (VERDICT r16)
-        try body catch { case e: Throwable =>
-          warmOk = false
-          System.err.println(
-            s"[bench] cache_build $what failed: ${e.getMessage}")
-        }
-        warmSec += (System.nanoTime() - t0) / 1e9
-        System.err.println(
-          f"[bench] run $run cache_build $what, cum $warmSec%.1f s")
-      }
-      if (warmCaches && upfront)
-        timedWarm("upfront")(queries.Shared.warm(spark, sfDir))
-      val warmed = scala.collection.mutable.Set.empty[Int]
-      var prevGroup = -1
-      val times = names.zipWithIndex.map { case ((name, fn), i) =>
-        val group = SweepOrder.group(name)
-        if (group != prevGroup) {
-          // cluster boundary: the previous cluster's shuffle files are
-          // deleted but can stay mmap'd by the JVM until a GC — at
-          // sf10 that transient ran whole-disk df 20–40 G above du
-          // (round 15's 88 G spike). Force the unmap here instead of
-          // waiting out the periodic-GC interval mid-heavy-query.
-          // Full-suite sweeps only: a subset cold probe must not carry
-          // a GC pause production queries never see (VERDICT r16).
-          if (prevGroup >= 0 && only.isEmpty) System.gc()
-          prevGroup = group
-        }
-        // groups without staged families (3/4) skip the warm: timing a
-        // no-op would log bogus cache_build rows (ADVICE r16)
-        if (warmCaches && !upfront && queries.Shared.warmable(group) &&
-            warmed.add(group))
-          timedWarm(s"group $group")(
-            queries.Shared.warmGroup(spark, sfDir, group))
-        queries.Shared.beginQuery(name)
-        val t0 = System.nanoTime()
-        val n = try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val n = query().count()
         val dt = (System.nanoTime() - t0) / 1e9
         // per-query progress on stderr so a wedged run is diagnosable
         System.err.println(f"[bench] run $run $name rows=$n ${dt}%.1f s")
-        // cache retirement (round-13 verdict item 1): drop this
-        // query's transient persists now that it is done, and keep the
-        // total persisted working set under the scratch budget —
-        // without this a 207-query sf10 sweep accumulates ~55 G of
-        // dead rdd blocks and the late heavies ENOSPC on 80 G scratch
-        queries.Shared.retireTransients()
-        releaseAt.getOrElse(i, Nil).foreach(queries.Shared.releaseMemo)
-        queries.Shared.enforceBudget(spark)
-        name -> (dt, n >= 0)
+        dt
       }
-      // memo-consumption report (sweep-order design tool): which
-      // queries touched which cross-query cache family this run
-      if (sys.env.contains("SPARK_GRAFT_TOUCH_REPORT"))
-        queries.Shared.touchReport.foreach { case (k, qs) =>
-          System.err.println(s"[touch] $k -> ${qs.mkString(",")}")
-        }
       // drop every session-level cache so the next sweep is cold —
       // otherwise run 2 times the cached path, not the query
       queries.Shared.clear()
       val warmTime =
-        if (warmCaches) Seq("cache_build" -> (warmSec, warmOk)) else Nil
-      (warmTime ++ times).toMap
+        if (warmCaches) Seq("cache_build" -> (swept.warmSec, swept.warmOk))
+        else Nil
+      (warmTime ++ swept.results.map { case (name, r) =>
+        name -> (r.getOrElse(-1.0), r.isRight)
+      }).toMap
     }
     // min over SUCCESSFUL sweeps only — a crashed sweep's short
     // duration must not masquerade as a timing; all-failed → -1

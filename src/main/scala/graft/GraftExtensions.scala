@@ -4,14 +4,11 @@ import org.apache.spark.sql.SparkSessionExtensions
 import graft.functions.{AggExpressions, HashExpressions, StemExpression, VectorExpressions}
 
 /** Session extension installing graft's native Catalyst functions
-  * (currently `graft_stem`, the codegen'd Porter stemmer). Wire up
-  * either way:
-  *
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
-  *   // or: .config("spark.sql.extensions", "graft.GraftExtensions")
-  *
-  * after which `StemExpression.stem(col)` / SQL `graft_stem(col)`
-  * resolve in that session.
+  * (currently `graft_stem`, the codegen'd Porter stemmer). [[Session]]
+  * installs it; another session can set
+  * `spark.sql.extensions=graft.GraftExtensions`. Either way
+  * `StemExpression.stem(col)` / SQL `graft_stem(col)` then resolve in
+  * that session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,7 +1,11 @@
 package graft
 
-/** Family-clustered sweep order for multi-query harnesses (Bench,
-  * Verify).
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries.Shared
+
+/** Family-clustered sweep order for multi-query harnesses, and the one
+  * [[sweep]] loop that runs a query list in it (Bench, Verify,
+  * PlanDump, QueriesSpec).
   *
   * The round-14 sf10 run measured WHY order matters: the ~31 GiB
   * matchPairs/partScores family exceeds any reasonable cache budget
@@ -14,12 +18,12 @@ package graft
   * which is exactly how a user would schedule a multi-query session
   * over shared intermediates.
   *
-  * The group assignment below is GENERATED, not guessed: a discovery
-  * sweep (SPARK_GRAFT_TOUCH_REPORT=1, sf0.001, 2026-08-16) recorded
-  * which queries touch which memo key via [[queries.Shared]]'s touch
-  * log; each group is the consumer set of one cache-family cluster.
-  * Queries touching no memo run last (their transients are retired
-  * per-query, so they exert no cache pressure on anyone).
+  * A query's group is DERIVED from [[memoConsumers]] (which queries
+  * read which memo family; QueriesSpec checks it against the touch log
+  * of an sf0.001 sweep) and [[familyGroup]]: each group is the
+  * consumer set of one cache-family cluster. Queries touching no memo
+  * run last (their transients are retired per-query, so they exert no
+  * cache pressure on anyone).
   *
   * Group order runs the most expensive family FIRST, straight after
   * the warm pass builds it, so the big frames are consumed while
@@ -28,47 +32,41 @@ package graft
   */
 object SweepOrder {
 
-  // consumers of the quadratic match family (partCands, partScores,
-  // partSuppScores, pivotedScores, pairScores3, pairScores6, k6walk)
-  private val matchFamily = Set(
-    13, 14, 15, 16, 17, 18, 19, 20, 43, 44, 71, 72, 94,
-    159, 160, 161, 199, 200, 203)
+  /** Memo family → sweep group, by position: 0 match (the quadratic
+    * match chain), 1 text dedup, 2 vector, 3 the small graph/vocab
+    * families. The text families' consumer sets overlap (q59, q93,
+    * q111 and q197 read two of the three), so they schedule as one
+    * block. */
+  private val familyGroup: Map[String, Int] = Seq(
+    Seq("partCands", "partScores", "partSuppScores", "pivotedScores",
+      "pairScores2", "pairScores3", "pairScores6", "k3walk", "k6walk"),
+    Seq("dupPairs", "simhashes", "shingleTf3"),
+    Seq("lshBuckets", "candCosines", "knnEdges", "kmeans", "pqCodebook",
+      "pqCodes", "ivfpqBook", "ivfpqCodes", "mmrCands", "mmrSims",
+      "cosineWeights", "mlMinhashTf", "annBrute", "annLsh", "annIvfFlat",
+      "annIvfKmeans", "annSq8", "annPq", "annIvfpq", "annMlsh", "annMrl"),
+    Seq("prEdges", "bpeVocab"))
+    .zipWithIndex.flatMap { case (fams, g) => fams.map(_ -> g) }.toMap
 
-  // consumers of the text-dedup families (dupPairs, simhashes,
-  // shingleTf3) — overlapping consumer sets (q59, q93, q111, q197
-  // touch two of the three), so they schedule as one block
-  private val textFamily = Set(
-    26, 27, 36, 45, 49, 50, 59, 81, 93, 105, 111, 123, 129, 153,
-    190, 193, 197, 204)
+  // lazy: memoConsumers is declared below — a strict val here reads
+  // null during object init. A family missing from familyGroup fails
+  // here, loudly, at first use.
+  private lazy val queryGroup: Map[String, Int] =
+    memoConsumers.toSeq
+      .flatMap { case (fam, qs) => qs.map(_ -> familyGroup(fam)) }
+      .groupMapReduce(_._1)(_._2)(math.min)
 
-  // consumers of the vector families (lshBuckets, kmeans8, pqCodebook/
-  // pqCodes, ivfpqBook/ivfpqCodes, mmrCands/mmrSims, cosineWeights,
-  // mlMinhashTf) — plus q30, the brute-force truth the recall graders
-  // recompute inline
-  private val vectorFamily = Set(
-    29, 30, 31, 57, 74, 82, 106, 118, 158, 162, 163, 164, 168, 171,
-    172, 173, 174, 178, 186, 187, 194)
-
-  // consumers of the small graph/vocab families (prEdges, bpeVocab)
-  private val graphFamily = Set(119, 121, 131, 182)
-
-  // total on ANY name: one not shaped q<digits>… sorts into the
-  // no-memo tail group instead of throwing NumberFormatException out
-  // of a harness's startup sort (ADVICE r15 — "".toInt)
+  // total on ANY name: one not shaped q<digits>… sorts last instead
+  // of throwing NumberFormatException out of a harness's startup sort
+  // (ADVICE r15 — "".toInt)
   private def numericId(name: String): Int =
     name.drop(1).takeWhile(_.isDigit).toIntOption.getOrElse(Int.MaxValue)
 
   /** Memo-family group of a query name (0 match, 1 text, 2 vector,
-    * 3 graph, 4 none) — the staged warm pass builds group g's cache
-    * families right before its first query runs. */
-  def group(name: String): Int = {
-    val id = numericId(name)
-    if (matchFamily(id)) 0
-    else if (textFamily(id)) 1
-    else if (vectorFamily(id)) 2
-    else if (graphFamily(id)) 3
-    else 4
-  }
+    * 3 graph, 4 none): the lowest group among the families it reads.
+    * The staged warm pass builds group g's cache families right before
+    * its first query runs. */
+  def group(name: String): Int = queryGroup.getOrElse(name, 4)
 
   /** Derivation depth of a memo family — how long the rebuild chain
     * under it is ([[graft.queries.Shared.derivedFrom]]): partCands 0,
@@ -116,9 +114,9 @@ object SweepOrder {
   def sort[T](qs: Seq[(String, T)]): Seq[(String, T)] =
     qs.sortBy { case (n, _) => key(n) }
 
-  /** Memo-key prefix → its consumer queries, from the same discovery
-    * sweep as the group sets (prefixes because parameterized keys
-    * carry scale-derived suffixes, e.g. kmeans⟨K⟩). This is the
+  /** Memo-key prefix → its consumer queries (prefixes because
+    * parameterized keys carry scale-derived suffixes, e.g. kmeans⟨K⟩);
+    * [[group]] and [[releaseSchedule]] derive from it. This is the
     * scheduler's knowledge the byte budget cannot infer: once a
     * family's LAST scheduled consumer has run, its frames are dead
     * weight no matter how expensive they were to build — Bench/Verify
@@ -126,7 +124,7 @@ object SweepOrder {
     * so the budget never has to choose between a dead expensive
     * family and a live cheap one. A drifted entry (a new query
     * consuming a released family) costs one visible rebuild, never a
-    * wrong answer. Regenerate with SPARK_GRAFT_TOUCH_REPORT=1. */
+    * wrong answer. QueriesSpec fails on any touch not declared here. */
   val memoConsumers: Map[String, Set[String]] = Map(
     // round-18 families: the shared candidate-cosine verifier frame
     // and the memoized ANN search legs (each leg = its standalone
@@ -215,5 +213,70 @@ object SweepOrder {
         if (hits.isEmpty) None else Some(prefix -> hits.max)
       }
       .groupBy(_._2).view.mapValues(_.map(_._1).sorted).toMap
+  }
+
+  /** What one [[sweep]] did: each query's action result or failure, in
+    * run order, and the staged warm's wall seconds and whether every
+    * group built. */
+  final case class Swept[R](results: Seq[(String, Either[Throwable, R])],
+                            warmSec: Double, warmOk: Boolean)
+
+  /** Run `qs` the way one user session over shared memos runs them: in
+    * clustered order; on a `full` sweep, each warmable group's memo
+    * families built right before its first query (a family occupies
+    * cache budget only across its own consumer cluster, and a derived
+    * family left to build lazily AFTER its parent's release would
+    * silently rebuild the parent) and a GC at each group boundary
+    * (deleted shuffle files stay mmap'd until a GC; at sf10 that
+    * transient ran df 20–40 G above du); then per query, `action` on
+    * the query's frame builder, and the cache retirement: the query's
+    * transients, every family whose last consumer it was, and the byte
+    * budget (without it a 207-query sf10 sweep accumulated ~55 G of
+    * dead blocks). Subset runs skip warm and GC, so a replayed query
+    * builds only what it reads and carries no pause production queries
+    * never see. A failed warm degrades to lazy builds; a failed query
+    * is recorded and the sweep goes on. Both print their cause on
+    * stderr after `log`. */
+  def sweep[R](spark: SparkSession, dir: String,
+               qs: Seq[(String, (SparkSession, String) => DataFrame)],
+               full: Boolean, log: String)
+              (action: (String, () => DataFrame) => R): Swept[R] = {
+    def cause(e: Throwable) = s"${e.getClass.getName}: ${e.getMessage}"
+    val order = sort(qs)
+    val releaseAt = releaseSchedule(order.map(_._1))
+    var warmSec = 0.0
+    var warmOk = true
+    var prevGroup = -1
+    val results = order.zipWithIndex.map { case ((name, fn), i) =>
+      // the order is clustered: a group change is the group's first query
+      val g = group(name)
+      if (full && g != prevGroup) {
+        if (prevGroup >= 0) System.gc()
+        if (Shared.warmable(g)) {
+          // warm builds are unattributed in the touch report
+          Shared.beginQuery("")
+          val t0 = System.nanoTime()
+          try Shared.warmGroup(spark, dir, g) catch { case e: Throwable =>
+            warmOk = false
+            System.err.println(s"$log cache_build group $g failed: ${cause(e)}")
+          }
+          warmSec += (System.nanoTime() - t0) / 1e9
+          System.err.println(f"$log cache_build group $g, cum $warmSec%.1f s")
+        }
+      }
+      prevGroup = g
+      Shared.beginQuery(name)
+      val r = try Right(action(name, () => fn(spark, dir)))
+        catch { case e: Throwable =>
+          System.err.println(s"$log $name failed: ${cause(e)}")
+          Left(e)
+        }
+      Shared.retireTransients()
+      releaseAt.getOrElse(i, Nil).foreach(Shared.releaseMemo)
+      Shared.enforceBudget(spark)
+      name -> r
+    }
+    Shared.beginQuery("")
+    Swept(results, warmSec, warmOk)
   }
 }

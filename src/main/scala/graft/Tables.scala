@@ -84,8 +84,8 @@ object Tables {
       case TimestampNTZType =>
         // The NTZ → TIMESTAMP cast reinterprets the wall-clock value in
         // the session zone; it is value-preserving only under UTC.
-        // Every entrypoint (Verify/Bench/tools/specs) pins UTC in its
-        // session builder — fail loudly here rather than silently
+        // graft.Session, which every entrypoint uses, pins UTC — fail
+        // loudly here rather than silently
         // re-zoning a caller's deliberately non-UTC session (ADVICE r7).
         val tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
         require(tz == "UTC",

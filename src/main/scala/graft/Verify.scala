@@ -1,73 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare
+  * (`tools/check_oracle.py`). Runs the same
+  * [[SweepOrder.sweep]] as Bench, so sf10 replay sweeps hit the
+  * identical cache budget; a subset run skips the staged warm, and a
+  * single replayed query builds only what it reads. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.cleaner.periodicGC.interval", "45s")
-      // subset-key co-partitioning — see Bench.scala (round 17)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // listing-job parallelism sized to the session — see Bench.scala
-      .config("spark.sql.sources.parallelPartitionDiscovery.parallelism",
-        (cpus.toInt * 2).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.fromEnv(4)
     new java.io.File(outDir).mkdirs()
-    // same family-clustered order as Bench: sf10 replay sweeps run
-    // through this main and hit the identical cache budget
-    val ordered = SweepOrder.sort(SparkEntry.queries.toSeq)
+    val qs = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
-    // scheduler-informed release, as in Bench: a family's frames drop
-    // the moment its last scheduled consumer has run
-    val releaseAt = SweepOrder.releaseSchedule(ordered.map(_._1))
-    // staged warm + boundary GC, as in Bench: full-suite sweeps build
-    // each memo family at its cluster's first query (a family whose
-    // derived frames — e.g. pairScores2 off pivotedScores — were left
-    // to build lazily AFTER the parent's scheduled release would
-    // silently rebuild the parent), and a GC at each cluster boundary
-    // unmaps deleted-but-still-mmap'd shuffle files. Subset runs skip
-    // the warm: a single replayed query builds only what it reads.
-    val warmed = scala.collection.mutable.Set.empty[Int]
-    var prevGroup = -1
-    ordered.zipWithIndex.foreach { case ((name, fn), i) =>
-      val group = SweepOrder.group(name)
-      if (group != prevGroup) {
-        // boundary GC on full sweeps only — a subset replay must not
-        // carry a pause production queries never see (VERDICT r16)
-        if (prevGroup >= 0 && only.isEmpty) System.gc()
-        prevGroup = group
-      }
-      // groups 3/4 have no staged families — skip the no-op warm
-      if (only.isEmpty && queries.Shared.warmable(group) &&
-          warmed.add(group)) {
-        queries.Shared.beginQuery("")
-        try queries.Shared.warmGroup(spark, sfDir, group)
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] warm group $group failed: ${e.getMessage}")
-        }
-      }
-      queries.Shared.beginQuery(name)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // same cache retirement as Bench: sf10 replay sweeps run through
-      // this main and hit the identical scratch budget
-      queries.Shared.retireTransients()
-      releaseAt.getOrElse(i, Nil).foreach(queries.Shared.releaseMemo)
-      queries.Shared.enforceBudget(spark)
+    SweepOrder.sweep(spark, sfDir, qs, only.isEmpty, "[verify]") {
+      (name, query) =>
+        query().coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

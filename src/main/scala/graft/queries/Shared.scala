@@ -484,37 +484,6 @@ object Shared {
     }
   }
 
-  /** Build + force every expensive cross-query cache up-front
-    * (VERDICT r7 item 6): with the caches warm, per-query bench times
-    * no longer depend on which query first touches a cold cache — the
-    * build cost shows up as one explicit `cache_build` line instead of
-    * inflating whichever of q13/q17/q19/q49 ran first. */
-  def warm(s: SparkSession, dir: String): Unit = {
-    // the four cache families are independent — build them as
-    // concurrent Spark jobs so the warm pass uses the whole box
-    // instead of serializing four sub-cluster-sized builds
-    // (12.0 → 6.7 s at sf0.1; memoized's TrieMap is concurrent and
-    // Spark job submission is thread-safe)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    Seq(
-      Future(warmGroup(s, dir, 0)),
-      Future(warmGroup(s, dir, 1)),
-      Future(warmGroup(s, dir, 2)))
-      .foreach(Await.result(_, Duration.Inf))
-  }
-
-  /** Build ONE sweep-order group's cache families
-    * ([[graft.SweepOrder.group]]: 0 match, 1 text, 2 vector) — the
-    * staged spelling of [[warm]]. An up-front warm holds every family
-    * resident from minute 0 even when its first consumer is an hour
-    * away; at sf10 that residency is exactly what forced the one
-    * round-15 eviction (pivotedScores pushed out at q43 → q72's 98 s
-    * rebuild). Sweeps call this at each cluster's FIRST query instead,
-    * so a family occupies budget only across its own consumer cluster.
-    * The graph-family frames (prEdges, bpeVocab) are sub-MiB and build
-    * lazily at first consumer — no stage needed. */
   /** Sweep groups with staged-warm cache families ([[graft.SweepOrder]]:
     * 0 match, 1 text, 2 vector). Groups 3/4 have none — their sub-MiB
     * frames build lazily at first consumer — so warming them is a
@@ -523,11 +492,20 @@ object Shared {
     * warm on this. */
   def warmable(group: Int): Boolean = group <= 2
 
+  /** Build ONE sweep-order group's cache families, before the group's
+    * first query runs ([[graft.SweepOrder.sweep]]): with the caches
+    * warm, per-query bench times no longer depend on which query first
+    * touches a cold cache (VERDICT r7 item 6), and staging per group
+    * keeps a family resident only across its own consumer cluster. An
+    * up-front warm of every group held each family from minute 0; at
+    * sf10 that residency forced the one round-15 eviction
+    * (pivotedScores pushed out at q43 → q72's 98 s rebuild). */
   def warmGroup(s: SparkSession, dir: String, group: Int): Unit = group match {
     case 0 => MatchingQueries.warmShared(s, dir)
     case 1 =>
-      // three independent text families — build concurrently, same
-      // rationale as warm()
+      // three independent text families — build them as concurrent
+      // Spark jobs so the warm uses the whole box (memoized's TrieMap
+      // is concurrent and Spark job submission is thread-safe)
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration

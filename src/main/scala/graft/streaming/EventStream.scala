@@ -31,7 +31,7 @@ object EventStream {
     * join), so a bounded ~100k-event drain wants single-digit
     * partitions, while a 1000-executor deployment sizes it to total
     * state across executors. Measured at sf0.1 for the stream-stream
-    * join (tools/StreamProbe): 32 partitions → 9.4 s, 8 → 3.6 s,
+    * join: 32 partitions → 9.4 s, 8 → 3.6 s,
     * 4 → 2.5 s, identical results. */
   private val drainStatePartitions = 8
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthetic embedding fixture for the q106 KMax-crossover drill
@@ -18,13 +17,7 @@ object EmbeddingGen {
   def main(args: Array[String]): Unit = {
     val n = args(0).toLong
     val dst = args(1)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(16)
     spark.range(0, n, 1, 64)
       .select(col("id").as("vec_id"),
         transform(sequence(lit(0), lit(63)), d =>

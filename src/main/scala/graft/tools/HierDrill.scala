@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Pinned-K agreement drill (round-12 verdict item 6): on an
   * [[EmbeddingGen]] fixture large enough to pin K at 65536 (n ≥ ~4.2M),
   * measure how often the hierarchical Lloyd assignment agrees with the
@@ -22,15 +20,7 @@ object HierDrill {
     val sampleEvery = if (args.length > 1) args(1).toLong else 450L
     val nprobe = if (args.length > 2) args(2).toInt
       else graft.queries.VectorQueries.HierNProbe
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.periodicGC.interval", "45s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(32)
     val t0 = System.nanoTime()
     val row = graft.queries.VectorQueries
       .hierAgreementProbe(spark, dir, sampleEvery, nprobe).collect()(0)

@@ -2,10 +2,9 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
-import graft.GraftExtensions
+import graft.Session
 import graft.queries.VectorQueries
 
 /** Per-leg scale verification of q172's unified retrieval-metrics
@@ -24,16 +23,7 @@ object LegVerify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.fromEnv(4)
     new java.io.File(outDir).mkdirs()
     val methods = VectorQueries.q172Methods
       .filter(m => only.isEmpty || only(m))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.classification.RandomForestClassifier
 import org.apache.spark.ml.feature.{VectorAssembler, Word2Vec}
@@ -26,14 +25,7 @@ object MlFixtureGen {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(16)
 
     // ---- RandomForest over the q56 feature frame (train split only) --
     val feats = graft.queries.MlQueries.q56Features(spark, sfDir)

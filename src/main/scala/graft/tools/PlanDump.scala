@@ -1,53 +1,34 @@
-// Round-17 measurement harness: capture .explain("formatted") + warm
-// per-query timings for a list of queries in ONE JVM, with the memo
-// families staged exactly as Bench stages them — so the captured plan
-// and seconds are the in-sweep shape, not a cold-cache anomaly.
+// Capture .explain("formatted") + warm per-query timings for a list of
+// queries in ONE JVM, run through the sweep Bench runs (staged memo
+// warm, clustered order) — so the captured plan and seconds are the
+// in-sweep shape, not a cold-cache anomaly.
 // Usage: tools/run.sh graft.tools.PlanDump <sfDir> <outDir> <q1> [q2...]
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val outDir = args(1)
-    val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match the Bench session so captured plans are the sweep's
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // match the Bench session's shuffle codec too (round 18): a
-      // codec mismatch made warm probe timings diverge from in-sweep
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
-      .config("spark.sql.sources.parallelPartitionDiscovery.parallelism",
-        (cpus.toInt * 2).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = args.drop(2).toSet
+    val unknown = names -- graft.SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = graft.Session.fromEnv(32)
     Files.createDirectories(Paths.get(outDir))
-    // stage every warmable group once so memo reads are warm, as in a
-    // full sweep (group 3's sub-MiB families build lazily, as there)
-    (0 to 2).foreach(g => graft.queries.Shared.warmGroup(spark, dir, g))
-    names.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
-      val df = fn(spark, dir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      Files.write(Paths.get(s"$outDir/$name.txt"), plan.getBytes("UTF-8"))
-      val ts = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        val n = fn(spark, dir).count()
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      println(f"[plandump] $name rows=${ts.head._2} " +
-        f"t1=${ts(0)._1}%.2f s t2=${ts(1)._1}%.2f s min=${ts.map(_._1).min}%.2f s")
+    val qs = graft.SparkEntry.queries.toSeq.filter { case (n, _) => names(n) }
+    graft.SweepOrder.sweep(spark, dir, qs, full = true, "[plandump]") {
+      (name, query) =>
+        val plan = query().queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.write(Paths.get(s"$outDir/$name.txt"), plan.getBytes("UTF-8"))
+        val ts = (1 to 2).map { _ =>
+          val t0 = System.nanoTime()
+          val n = query().count()
+          ((System.nanoTime() - t0) / 1e9, n)
+        }
+        println(f"[plandump] $name rows=${ts.head._2} " +
+          f"t1=${ts(0)._1}%.2f s t2=${ts(1)._1}%.2f s min=${ts.map(_._1).min}%.2f s")
     }
     try spark.stop() catch { case _: Throwable => () }
   }

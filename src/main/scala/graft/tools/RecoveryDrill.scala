@@ -7,7 +7,6 @@
 //   tools/run.sh graft.tools.RecoveryDrill <sfDir> batch   # oracle hash
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 import graft.streaming.{CurationStream, StreamStage}
@@ -16,18 +15,9 @@ object RecoveryDrill {
 
   def main(args: Array[String]): Unit = {
     val dir = args(0); val mode = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val root = sys.env.getOrElse("SPARK_GRAFT_DRILL_DIR",
       "/tmp/graft_recovery_drill")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.fromEnv(8)
 
     // order-independent content hash: the resumed stream's parquet
     // part-file layout and row order differ from the batch run's, so

@@ -109,14 +109,7 @@ object ScaleUp {
     val dst = args.lift(1).getOrElse("/tmp/graft_sf0.3")
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val stride = args.lift(3).map(_.toLong).getOrElse(100000000L)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(16)
     replicate(spark, src, dst, reps, stride)
     spark.stop()
   }

@@ -3,16 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all specs. */
+/** Shared session for all specs: the session users get. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new GraftExtensions)
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session(4)
   val sf: String = "/root/testdata/sf0.001"
 }
 
@@ -26,29 +19,24 @@ class QueriesSpec extends AnyFunSuite {
   // (lab_name, country) block ever holds two labs at that scale.
   private val allowedEmpty = Set("q07_anti_join", "q96_lab_dedup")
 
-  // Full sweep under the SAME protocol as Bench/Verify: clustered
-  // order, each group's cache families warmed UNATTRIBUTED at its
-  // cluster's first query — so the touch report this records has the
-  // same provenance as the one SweepOrder.memoConsumers was frozen
-  // from (a different order attributes a family's transitive chain
-  // builds to whichever consumer happens to run first).
+  // Full sweep through the one sweep loop Bench/Verify run, so the
+  // touch report it records has the same provenance as the one
+  // SweepOrder.memoConsumers declares (a different order attributes a
+  // family's transitive chain builds to whichever consumer happens to
+  // run first).
   private def runAttributedSweep(): Unit = {
     queries.Shared.clear()
-    val warmed = scala.collection.mutable.Set.empty[Int]
-    SweepOrder.sort(SparkEntry.queries.toSeq).foreach { case (name, fn) =>
-      val g = SweepOrder.group(name)
-      if (warmed.add(g)) {
-        queries.Shared.beginQuery("")
-        queries.Shared.warmGroup(spark, sf, g)
-      }
-      queries.Shared.beginQuery(name)
-      val df = fn(spark, sf)
+    val swept = SweepOrder.sweep(spark, sf, SparkEntry.queries.toSeq,
+        full = true, "[queries-spec]") { (name, query) =>
+      val df = query()
       assert(df.columns.nonEmpty, s"$name has no columns")
       val n = df.count()
       if (allowedEmpty(name)) assert(n >= 0, s"$name failed to execute")
       else assert(n > 0, s"$name returned 0 rows at sf0.001")
     }
-    queries.Shared.beginQuery("")
+    val failed = swept.results.collect { case (n, Left(e)) => s"$n: $e" }
+    assert(swept.warmOk, "a staged warm failed (cause on stderr)")
+    assert(failed.isEmpty, failed.mkString("failed queries:\n", "\n", ""))
   }
 
   test("every declared query runs and (unless allowlisted) returns rows") {
@@ -56,12 +44,12 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("every observed memo touch is declared in SweepOrder.memoConsumers") {
-    // The frozen consumer map drives scheduler release: a NEW query
-    // consuming a released family silently pays a full rebuild at sf10
-    // (VERDICT r15 missing #3). This regenerates the touch report at
-    // sf0.001 from the sweep above and fails when a touch is not
-    // declared — update SweepOrder.memoConsumers (and the group sets)
-    // when adding a consumer; discover with SPARK_GRAFT_TOUCH_REPORT=1.
+    // The declared consumer map drives the sweep groups and scheduler
+    // release: a NEW query consuming a released family silently pays a
+    // full rebuild at sf10 (VERDICT r15 missing #3). This regenerates
+    // the touch report at sf0.001 from the sweep above and fails when a
+    // touch is not declared — add the consumer to
+    // SweepOrder.memoConsumers; its sweep group derives from that.
     if (queries.Shared.touchReport.isEmpty)
       runAttributedSweep() // self-sufficient under -z test filtering
     val report = queries.Shared.touchReport
@@ -72,7 +60,7 @@ class QueriesSpec extends AnyFunSuite {
         s"memo key '$key' matches ${prefixes.size} memoConsumers prefixes ($prefixes); release scheduling needs exactly one")
       val undeclared = qs.toSet -- SweepOrder.memoConsumers(prefixes.head)
       assert(undeclared.isEmpty,
-        s"memo '$key' touched by consumers missing from SweepOrder.memoConsumers('${prefixes.head}'): ${undeclared.toSeq.sorted.mkString(", ")}")
+        s"memo '$key' touched by consumers missing from SweepOrder.memoConsumers('${prefixes.head}'): ${undeclared.toSeq.sorted.mkString(", ")} — add them there; the sweep group derives from it")
     }
     queries.Shared.clear()
   }

@@ -28,6 +28,16 @@ class SweepOrderSpec extends AnyFunSuite {
       s"match-family consumers not contiguous: $idxs")
   }
 
+  test("every declared consumer sits in its family's group") {
+    // the group derives from memoConsumers: a family's consumers run in
+    // one cluster, so its release point and its staged warm agree
+    SweepOrder.memoConsumers.foreach { case (fam, qs) =>
+      val groups = qs.toSeq.sorted.map(q => q -> SweepOrder.group(q))
+      assert(groups.map(_._2).distinct.size === 1 && groups.head._2 < 4,
+        s"consumers of '$fam' are not in one memo group: $groups")
+    }
+  }
+
   test("every declared memo consumer is a real query name") {
     val known = SparkEntry.queries.keySet
     val ghosts = SweepOrder.memoConsumers.values.flatten.toSet -- known
