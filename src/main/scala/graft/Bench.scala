@@ -49,6 +49,11 @@ object Bench {
         System.err.println(f"[bench] run $run $name rows=$n ${dt}%.1f s")
         dt
       }
+      // one line per memo build: shows a cost moved out of the warm
+      queries.Shared.buildRecord(spark, sfDir).foreach { case (key, sec, by) =>
+        System.err.println(f"[bench] run $run memo $key $sec%.1f s by " +
+          (if (by.isEmpty) "warm" else by))
+      }
       // drop every session-level cache so the next sweep is cold —
       // otherwise run 2 times the cached path, not the query
       queries.Shared.clear()

@@ -124,7 +124,9 @@ object SweepOrder {
     * so the budget never has to choose between a dead expensive
     * family and a live cheap one. A drifted entry (a new query
     * consuming a released family) costs one visible rebuild, never a
-    * wrong answer. QueriesSpec fails on any touch not declared here. */
+    * wrong answer. QueriesSpec fails on any touch not declared here;
+    * SweepOrderSpec on a lazily built family with a consumer that one
+    * of its parents does not declare. */
   val memoConsumers: Map[String, Set[String]] = Map(
     // round-18 families: the shared candidate-cosine verifier frame
     // and the memoized ANN search legs (each leg = its standalone
@@ -175,11 +177,15 @@ object SweepOrder {
     "mlMinhashTf" -> Set("q57_ml_minhash"),
     "mmrCands" -> Set("q163_mmr_rerank"),
     "mmrSims" -> Set("q163_mmr_rerank"),
-    "pairScores2" -> Set("q20_weight_grid", "q72_weight_refine"),
-    // q160 reads the memoized k3 walk since round 17; q161 still reads
-    // the score table directly for serving
-    "pairScores3" -> Set("q159_weight_grid_k3", "q161_trained_total"),
-    "pairScores6" -> Set("q199_weight_grid_k6", "q203_trained_total_k6"),
+    // k=3/k=6 consumers may build their tables from it (small to hold)
+    "pairScores2" -> Set("q20_weight_grid", "q72_weight_refine",
+      "q159_weight_grid_k3", "q160_weight_refine_k3", "q161_trained_total",
+      "q199_weight_grid_k6", "q200_weight_refine_k6",
+      "q203_trained_total_k6"),
+    "pairScores3" -> Set("q159_weight_grid_k3", "q160_weight_refine_k3",
+      "q161_trained_total"),
+    "pairScores6" -> Set("q199_weight_grid_k6", "q200_weight_refine_k6",
+      "q203_trained_total_k6"),
     "partCands" -> Set("q13_entity_candidates"),
     "partScores" -> Set("q14_entity_scores", "q15_type_filter",
       "q16_date_filter", "q17_multitype_filter", "q18_match_stats",
@@ -222,11 +228,11 @@ object SweepOrder {
                             warmSec: Double, warmOk: Boolean)
 
   /** Run `qs` the way one user session over shared memos runs them: in
-    * clustered order; on a `full` sweep, each warmable group's memo
-    * families built right before its first query (a family occupies
-    * cache budget only across its own consumer cluster, and a derived
-    * family left to build lazily AFTER its parent's release would
-    * silently rebuild the parent) and a GC at each group boundary
+    * clustered order; on a `full` sweep, each warmable group's
+    * release-critical memo families ([[Shared.warmGroup]]: those whose
+    * parent the sweep may release before their first consumer) built
+    * right before its first query, every other family at its first
+    * consumer, and a GC at each group boundary
     * (deleted shuffle files stay mmap'd until a GC; at sf10 that
     * transient ran df 20–40 G above du); then per query, `action` on
     * the query's frame builder, and the cache retirement: the query's

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
 
 /** Parquet star-schema loaders over the driver-generated testdata
   * (TESTDATA.md). In the reference these were JDBC subqueries pushed to
@@ -31,16 +33,27 @@ object Tables {
   // (and the footer-read of the schema) are memoized per (session,
   // dir, table) — plans are immutable, so handing back the same
   // DataFrame is safe and saves a footer read per call.
+  // Keyed by the session object, so two live sessions never share
+  // scans; a cached frame pins its session, so a weak key would never
+  // clear, and stopped sessions are dropped at the next scan instead.
   private val MinParallelizeBytes = 256L << 10
-  private val scans = scala.collection.concurrent.TrieMap
-    .empty[(Int, String, String), DataFrame]
+  private val scans =
+    mutable.HashMap.empty[SparkSession, TrieMap[(String, String), DataFrame]]
 
   private def diskBytes(f: java.io.File): Long =
-    if (f.isDirectory) f.listFiles.map(diskBytes).sum else f.length
+    if (f.isDirectory) Option(f.listFiles).fold(0L)(_.map(diskBytes).sum)
+    else f.length
+
+  private[graft] def scanSessions: Seq[SparkSession] =
+    scans.synchronized(scans.keys.toSeq)
+
+  private def scansOf(spark: SparkSession) = scans.synchronized {
+    scans.filterInPlace((s, _) => !s.sparkContext.isStopped)
+    scans.getOrElseUpdate(spark, TrieMap.empty)
+  }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    scans.getOrElseUpdate(
-      (System.identityHashCode(spark), dir, name), {
+    scansOf(spark).getOrElseUpdate((dir, name), {
         val df = spark.read.parquet(s"$dir/$name.parquet")
         val target = spark.sparkContext.defaultParallelism
         val parts = df.rdd.getNumPartitions

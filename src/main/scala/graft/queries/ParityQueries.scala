@@ -91,10 +91,6 @@ object ParityQueries {
         explode(TextFns.shingles(TextFns.tokens(col("text")), 3)).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
 
-  /** Force the shared 3-shingle tf cache (q49/q50/q53/q81 band). */
-  private[queries] def warmShared(s: SparkSession, dir: String): Unit =
-    Shared.memoized(s, dir, "shingleTf3")(shingleTf(s, dir)).count()
-
   /** P8 + A4: rare-word matcher — keep terms passing the rare-word
     * predicate (document frequency in [2, 30], length in [5, 90],
     * letters/spaces only), pair documents sharing ≥2 rare terms, score

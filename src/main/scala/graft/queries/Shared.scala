@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 import graft.Tables
 import graft.functions.TextFns
 import graft.operators.TextDedup
@@ -40,10 +41,10 @@ object Shared {
   private val buildLocks =
     scala.collection.concurrent.TrieMap.empty[String, Object]
 
-  // measured build wall-seconds per memo key (the rebuild price the
-  // eviction policy weighs against bytes freed)
-  private val buildSec =
-    scala.collection.concurrent.TrieMap.empty[String, Double]
+  // every build in order: (memo key, wall seconds, triggering query,
+  // "" = warm). A key's last build is its eviction rebuild price.
+  private val builds =
+    new java.util.concurrent.ConcurrentLinkedQueue[(String, Double, String)]
 
   // budget-enforcement epoch of each frame's last access: enforceBudget
   // runs once per query in a sweep, so "lastEpoch == current epoch"
@@ -69,12 +70,23 @@ object Shared {
   def touchReport: Seq[(String, Seq[String])] = touches.keys.toSeq
     .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toSeq.sortBy(_._1)
 
-  /** Test hook: overwrite a frame's measured rebuild cost so the
-    * eviction-policy specs are deterministic (real costs are wall
+  /** Test hook: record a frame's rebuild cost as its latest build so
+    * the eviction-policy specs are deterministic (real costs are wall
     * time). */
   private[graft] def setBuildCostForTest(s: SparkSession, dir: String,
                                          key: String, sec: Double): Unit =
-    buildSec.put(s"${s.sparkContext.applicationId}|$dir|$key", sec)
+    builds.add((s"${s.sparkContext.applicationId}|$dir|$key", sec, ""))
+
+  /** Every memo build for (session, dir) since the last [[clear]], in
+    * build order: (key name, wall seconds, triggering query, "" when
+    * the staged warm built it). */
+  private[graft] def buildRecord(s: SparkSession, dir: String)
+      : Seq[(String, Double, String)] = {
+    val scope = s"${s.sparkContext.applicationId}|$dir|"
+    builds.asScala.toSeq.collect {
+      case (k, sec, q) if k.startsWith(scope) => (k.drop(scope.length), sec, q)
+    }
+  }
 
   /** Memo-family derivation edges: child key-name prefix → the parent
     * family prefixes its build READS (prefixes, because parameterized
@@ -115,15 +127,16 @@ object Shared {
   /** TRUE rebuild price of memo key `mk`: its own measured build plus
     * the last measured build of every ancestor family that is no
     * longer cached — rebuilding `mk` would silently rebuild those
-    * first. buildSec alone records the INCREMENTAL cost measured
+    * first. Its own build records the INCREMENTAL cost measured
     * while the parents were still cached; once the scheduler releases
     * a parent (pivotedScores at q19), pricing the survivors at that
     * incremental cost makes the evictor see the most dangerous frames
     * as near-free victims — a mid-cluster eviction of pairScores2
     * would re-run the full ~150 s (sf10) pivot chain the round-16
     * redesign exists to avoid (ADVICE r16). Ancestor prices survive
-    * release/eviction because buildSec is only dropped by clear(). */
+    * release/eviction because builds are only dropped by clear(). */
   private def effectiveCost(mk: String): Double = {
+    val buildSec = builds.asScala.map(b => b._1 -> b._2).toMap // last wins
     val scope = mk.take(mk.lastIndexOf('|') + 1) // "app|dir|"
     val cached = memo.keysIterator.filter(_.startsWith(scope))
       .map(_.drop(scope.length)).toSet
@@ -429,7 +442,7 @@ object Shared {
     memo.values.foreach(_.unpersist(false))
     memo.clear()
     lastEpoch.clear()
-    buildSec.clear()
+    builds.clear()
     buildLocks.clear()
     // reset the touch attribution too: without this, run 2's warm
     // builds are attributed to run 1's LAST query in the touch report,
@@ -476,7 +489,7 @@ object Shared {
             else build.repartition(n, parts.map(col): _*)
           val p = df.persist(StorageLevel.MEMORY_AND_DISK)
           p.count()
-          buildSec.put(mk, (System.nanoTime() - t0) / 1e9)
+          builds.add((mk, (System.nanoTime() - t0) / 1e9, curQuery))
           memo.put(mk, p)
           p
         }
@@ -492,25 +505,24 @@ object Shared {
     * warm on this. */
   def warmable(group: Int): Boolean = group <= 2
 
-  /** Build ONE sweep-order group's cache families, before the group's
-    * first query runs ([[graft.SweepOrder.sweep]]): with the caches
-    * warm, per-query bench times no longer depend on which query first
-    * touches a cold cache (VERDICT r7 item 6), and staging per group
-    * keeps a family resident only across its own consumer cluster. An
-    * up-front warm of every group held each family from minute 0; at
-    * sf10 that residency forced the one round-15 eviction
-    * (pivotedScores pushed out at q43 → q72's 98 s rebuild). */
+  /** Build ONE sweep-order group's staged families right before its
+    * first query ([[graft.SweepOrder.sweep]]): match the chain whose
+    * parents q13/q19 release (partCands ‖ partSuppScores → partScores
+    * → pivotedScores → pairScores2), text dupPairs ‖ simhashes, vector
+    * lshBuckets → candCosines. Every other family builds at its first
+    * consumer, its parents still cached (their consumers include its
+    * own). Per-group staging bounds residency to the cluster: an
+    * up-front warm forced the one round-15 sf10 eviction. */
   def warmGroup(s: SparkSession, dir: String, group: Int): Unit = group match {
     case 0 => MatchingQueries.warmShared(s, dir)
     case 1 =>
-      // three independent text families — build them as concurrent
+      // two independent text families — build them as concurrent
       // Spark jobs so the warm uses the whole box (memoized's TrieMap
       // is concurrent and Spark job submission is thread-safe)
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
       Seq(
-        Future(ParityQueries.warmShared(s, dir)),
         Future { dupPairs(s, dir).count(); () },
         Future { simhashes(s, dir).count(); () })
         .foreach(Await.result(_, Duration.Inf))

@@ -348,4 +348,40 @@ class CacheRetirementSpec extends AnyFunSuite {
     assert(m.storageLevel === StorageLevel.NONE)
     assert(t.storageLevel === StorageLevel.NONE)
   }
+
+  /** Memo builds of a warmed (full) sweep over `names`, by key name. */
+  private def sweepBuilds(names: Seq[String]): Seq[(String, String)] = {
+    Shared.clear()
+    val swept = SweepOrder.sweep(spark, sf,
+        names.map(n => n -> SparkEntry.queries(n)), full = true,
+        "[cache-spec]") { (_, query) => query().count() }
+    assert(swept.warmOk && swept.results.forall(_._2.isRight),
+      "the sweep failed (cause on stderr)")
+    val built = Shared.buildRecord(spark, sf).map(b => b._1 -> b._3)
+    Shared.clear()
+    built
+  }
+
+  test("the staged match warm leaves the k=3/k=6 training chains to " +
+      "their consumers") {
+    // the benchmark's match workload reads none of them
+    val built = sweepBuilds(Seq("q13_entity_candidates",
+      "q14_entity_scores", "q19_score_pivot", "q20_weight_grid",
+      "q43_total_score", "q44_pair_dedup")).map(_._1)
+    assert(built.contains("pairScores2"))
+    val kChains = Set("pairScores3", "pairScores6", "k3walk", "k6walk")
+    assert(built.filter(kChains).isEmpty, s"built: $built")
+  }
+
+  test("lazy k-chain builds never rebuild a released parent") {
+    // q161/q203 are the first to build pairScores3/6 from pairScores2
+    // after q20, its only consumer here before they were declared on it
+    val built = sweepBuilds(Seq("q20_weight_grid", "q161_trained_total",
+      "q203_trained_total_k6"))
+    val counts = built.groupMapReduce(_._1)(_ => 1)(_ + _)
+    assert(counts.get("pivotedScores") === Some(1), s"built: $built")
+    assert(counts.get("pairScores2") === Some(1), s"built: $built")
+    assert(built.toSet.contains("pairScores3" -> "q161_trained_total"))
+    assert(built.toSet.contains("k6walk" -> "q203_trained_total_k6"))
+  }
 }

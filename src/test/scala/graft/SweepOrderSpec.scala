@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.Shared
 
 /** The family-clustered sweep order + scheduler-informed release plan
   * (round 15): the round-14 sf10 run priced what happens without them
@@ -90,6 +91,43 @@ class SweepOrderSpec extends AnyFunSuite {
     val vec = ordered.filter(n => SweepOrder.group(n) == 2)
     assert(vec.take(3) === Seq("q29_cosine_shingles", "q57_ml_minhash",
       "q163_mmr_rerank"))
+  }
+
+  /** (family, parent) pairs breaking the lazy-build rule: a family the
+    * staged warm does not build must declare no consumer its parent
+    * lacks, or a schedule may release the parent before the family's
+    * first consumer builds it (and so rebuilds the parent). */
+  private def unsafeLazyFamilies(consumers: Map[String, Set[String]],
+                                 warmed: Set[String]): Seq[(String, String)] =
+    Shared.derivedFrom.toSeq.sortBy(_._1).flatMap { case (fam, parents) =>
+      if (warmed.exists(_.startsWith(fam))) Nil
+      else parents.filterNot(p => consumers(fam).subsetOf(consumers(p)))
+        .map(fam -> _)
+    }
+
+  test("a family built at its first consumer is never outlived by a " +
+      "parent's release") {
+    import TestSpark._
+    // the exempt set is what the staged warm really builds
+    val warmed = (0 to 2).filter(Shared.warmable).flatMap { g =>
+      Shared.clear()
+      Shared.warmGroup(spark, sf, g)
+      Shared.buildRecord(spark, sf).map(_._1)
+    }.toSet
+    Shared.clear()
+    assert(warmed.contains("pairScores2") && !warmed.contains("k3walk"),
+      s"unexpected staged warm: $warmed")
+    val undeclared = Shared.derivedFrom.toSeq
+      .flatMap { case (f, ps) => f +: ps }
+      .filterNot(SweepOrder.memoConsumers.contains)
+    assert(undeclared.isEmpty, s"derivation edges name undeclared families: $undeclared")
+    assert(unsafeLazyFamilies(SweepOrder.memoConsumers, warmed).isEmpty)
+    // the rule bites: without the k-chain consumers on pairScores2 a
+    // subset sweep would release it before q159/q199 build from it
+    val reverted = SweepOrder.memoConsumers.updated("pairScores2",
+      Set("q20_weight_grid", "q72_weight_refine"))
+    assert(unsafeLazyFamilies(reverted, warmed).toSet ===
+      Set("pairScores3" -> "pairScores2", "pairScores6" -> "pairScores2"))
   }
 
   test("clustered order covers exactly the input and reverse respects it") {
