@@ -50,9 +50,10 @@ object Bench {
         dt
       }
       // one line per memo build: shows a cost moved out of the warm
-      queries.Shared.buildRecord(spark, sfDir).foreach { case (key, sec, by) =>
-        System.err.println(f"[bench] run $run memo $key $sec%.1f s by " +
-          (if (by.isEmpty) "warm" else by))
+      // (self = without the memo builds it triggered, so self times sum)
+      queries.Shared.buildRecord(spark, sfDir).foreach { b =>
+        System.err.println(f"[bench] run $run memo ${b.key} ${b.sec}%.1f s " +
+          f"(self ${b.selfSec}%.1f s) by " + (if (b.by.isEmpty) "warm" else b.by))
       }
       // drop every session-level cache so the next sweep is cold —
       // otherwise run 2 times the cached path, not the query

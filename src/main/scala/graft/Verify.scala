@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
   * oracle_sql.json, for the DuckDB oracle compare
   * (`tools/check_oracle.py`). Runs the same
   * [[SweepOrder.sweep]] as Bench, so sf10 replay sweeps hit the
-  * identical cache budget; a subset run skips the staged warm, and a
+  * identical cache schedule; a subset run skips the staged warm, and a
   * single replayed query builds only what it reads. */
 object Verify {
   def main(args: Array[String]): Unit = {

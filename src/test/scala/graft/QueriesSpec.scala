@@ -21,7 +21,7 @@ class QueriesSpec extends AnyFunSuite {
 
   // Full sweep through the one sweep loop Bench/Verify run, so the
   // touch report it records has the same provenance as the one
-  // SweepOrder.memoConsumers declares (a different order attributes a
+  // SweepOrder.families declares (a different order attributes a
   // family's transitive chain builds to whichever consumer happens to
   // run first).
   private def runAttributedSweep(): Unit = {
@@ -44,23 +44,23 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("every observed memo touch is declared in SweepOrder.memoConsumers") {
-    // The declared consumer map drives the sweep groups and scheduler
+    // The declared consumer sets drive the sweep groups and scheduler
     // release: a NEW query consuming a released family silently pays a
     // full rebuild at sf10 (VERDICT r15 missing #3). This regenerates
     // the touch report at sf0.001 from the sweep above and fails when a
-    // touch is not declared — add the consumer to
-    // SweepOrder.memoConsumers; its sweep group derives from that.
+    // touch is not declared — add the consumer to its family's row in
+    // SweepOrder.families; its sweep group derives from that.
     if (queries.Shared.touchReport.isEmpty)
       runAttributedSweep() // self-sufficient under -z test filtering
     val report = queries.Shared.touchReport
     assert(report.nonEmpty, "no memo touches recorded")
     report.foreach { case (key, qs) =>
-      val prefixes = SweepOrder.memoConsumers.keys.filter(key.startsWith).toSeq
-      assert(prefixes.size === 1,
-        s"memo key '$key' matches ${prefixes.size} memoConsumers prefixes ($prefixes); release scheduling needs exactly one")
-      val undeclared = qs.toSet -- SweepOrder.memoConsumers(prefixes.head)
+      val fams = SweepOrder.families.filter(f => key.startsWith(f.prefix))
+      assert(fams.size === 1,
+        s"memo key '$key' matches ${fams.size} family prefixes (${fams.map(_.prefix)}); release scheduling needs exactly one")
+      val undeclared = qs.toSet -- fams.head.consumers
       assert(undeclared.isEmpty,
-        s"memo '$key' touched by consumers missing from SweepOrder.memoConsumers('${prefixes.head}'): ${undeclared.toSeq.sorted.mkString(", ")} — add them there; the sweep group derives from it")
+        s"memo '$key' touched by consumers missing from the '${fams.head.prefix}' row of SweepOrder.families: ${undeclared.toSeq.sorted.mkString(", ")} — add them there; the sweep group derives from it")
     }
     queries.Shared.clear()
   }

@@ -6,21 +6,16 @@ import graft.queries.Shared
 /** The family-clustered sweep order + scheduler-informed release plan
   * (round 15): the round-14 sf10 run priced what happens without them
   * — 101 evictions, 2.54× like-for-like — because the alphabetical
-  * order scattered each memo family's consumers and the byte budget
-  * had no knowledge of which families were already dead. */
+  * order scattered each memo family's consumers and nothing knew
+  * which families were already dead. */
 class SweepOrderSpec extends AnyFunSuite {
+  import SweepOrder.{Family, families}
 
   test("match-family consumers are contiguous in the clustered order") {
     val names = SparkEntry.queries.keys.toSeq.sorted
     val ordered = SweepOrder.sort(names.map(_ -> ())).map(_._1)
-    val matchQs = SweepOrder.memoConsumers("partScores") ++
-      SweepOrder.memoConsumers("pivotedScores") ++
-      SweepOrder.memoConsumers("pairScores2") ++
-      SweepOrder.memoConsumers("pairScores3") ++
-      SweepOrder.memoConsumers("pairScores6") ++
-      SweepOrder.memoConsumers("k3walk") ++
-      SweepOrder.memoConsumers("k6walk") ++
-      SweepOrder.memoConsumers("partCands")
+    val matchQs = families.filter(_.group == SweepOrder.Match)
+      .flatMap(_.consumers).toSet
     val idxs = ordered.zipWithIndex.collect {
       case (n, i) if matchQs(n) => i
     }
@@ -30,18 +25,18 @@ class SweepOrderSpec extends AnyFunSuite {
   }
 
   test("every declared consumer sits in its family's group") {
-    // the group derives from memoConsumers: a family's consumers run in
-    // one cluster, so its release point and its staged warm agree
-    SweepOrder.memoConsumers.foreach { case (fam, qs) =>
-      val groups = qs.toSeq.sorted.map(q => q -> SweepOrder.group(q))
-      assert(groups.map(_._2).distinct.size === 1 && groups.head._2 < 4,
-        s"consumers of '$fam' are not in one memo group: $groups")
+    // the group derives from the family rows: a family's consumers run
+    // in one cluster, so its release point and its staged warm agree
+    families.foreach { f =>
+      val groups = f.consumers.toSeq.sorted.map(q => q -> SweepOrder.group(q))
+      assert(groups.map(_._2).distinct === Seq(f.group),
+        s"consumers of '${f.prefix}' are not all in group ${f.group}: $groups")
     }
   }
 
   test("every declared memo consumer is a real query name") {
     val known = SparkEntry.queries.keySet
-    val ghosts = SweepOrder.memoConsumers.values.flatten.toSet -- known
+    val ghosts = families.flatMap(_.consumers).toSet -- known
     assert(ghosts.isEmpty, s"consumer map names unknown queries: $ghosts")
   }
 
@@ -73,7 +68,7 @@ class SweepOrderSpec extends AnyFunSuite {
     // the rule: a query that is the only consumer of a memo family
     // opens its cluster (release-early), deepest derivation chain
     // first. q19/pivotedScores (depth 2) and q13/partCands (depth 0)
-    // fall out of memoConsumers + Shared.derivedFrom — no literal ids.
+    // fall out of the family rows' consumers and parents — no literal ids.
     assert(SweepOrder.openerDepth("q19_score_pivot") === 2)
     assert(SweepOrder.openerDepth("q13_entity_candidates") === 0)
     assert(!SweepOrder.openerDepth.contains("q14_entity_scores"),
@@ -97,13 +92,15 @@ class SweepOrderSpec extends AnyFunSuite {
     * staged warm does not build must declare no consumer its parent
     * lacks, or a schedule may release the parent before the family's
     * first consumer builds it (and so rebuilds the parent). */
-  private def unsafeLazyFamilies(consumers: Map[String, Set[String]],
-                                 warmed: Set[String]): Seq[(String, String)] =
-    Shared.derivedFrom.toSeq.sortBy(_._1).flatMap { case (fam, parents) =>
-      if (warmed.exists(_.startsWith(fam))) Nil
-      else parents.filterNot(p => consumers(fam).subsetOf(consumers(p)))
-        .map(fam -> _)
+  private def unsafeLazyFamilies(fams: Seq[Family],
+                                 warmed: Set[String]): Seq[(String, String)] = {
+    val consumers = fams.map(f => f.prefix -> f.consumers).toMap
+    fams.sortBy(_.prefix).flatMap { f =>
+      if (warmed.exists(_.startsWith(f.prefix))) Nil
+      else f.parents.filterNot(p => f.consumers.subsetOf(consumers(p)))
+        .map(f.prefix -> _)
     }
+  }
 
   test("a family built at its first consumer is never outlived by a " +
       "parent's release") {
@@ -112,25 +109,35 @@ class SweepOrderSpec extends AnyFunSuite {
     val warmed = (0 to 2).filter(Shared.warmable).flatMap { g =>
       Shared.clear()
       Shared.warmGroup(spark, sf, g)
-      Shared.buildRecord(spark, sf).map(_._1)
+      Shared.buildRecord(spark, sf).map(_.key)
     }.toSet
     Shared.clear()
     assert(warmed.contains("pairScores2") && !warmed.contains("k3walk"),
       s"unexpected staged warm: $warmed")
-    val undeclared = Shared.derivedFrom.toSeq
-      .flatMap { case (f, ps) => f +: ps }
-      .filterNot(SweepOrder.memoConsumers.contains)
-    assert(undeclared.isEmpty, s"derivation edges name undeclared families: $undeclared")
-    assert(unsafeLazyFamilies(SweepOrder.memoConsumers, warmed).isEmpty)
+    assert(unsafeLazyFamilies(families, warmed).isEmpty)
     // the rule bites: without the k-chain consumers on pairScores2 a
     // subset sweep would release it before q159/q199 build from it
-    val reverted = SweepOrder.memoConsumers.updated("pairScores2",
-      Set("q20_weight_grid", "q72_weight_refine"))
+    val reverted = families.map { f =>
+      if (f.prefix != "pairScores2") f
+      else f.copy(consumers = Set("q20_weight_grid", "q72_weight_refine"))
+    }
     assert(unsafeLazyFamilies(reverted, warmed).toSet ===
       Set("pairScores3" -> "pairScores2", "pairScores6" -> "pairScores2"))
   }
 
-  test("clustered order covers exactly the input and reverse respects it") {
+  test("every family row names declared parents and a disjoint prefix") {
+    val prefixes = families.map(_.prefix)
+    assert(prefixes.distinct === prefixes, "a family is declared twice")
+    val undeclared = families.flatMap(_.parents).toSet -- prefixes
+    assert(undeclared.isEmpty, s"parents name undeclared families: $undeclared")
+    // releaseMemo(p) drops every key starting with p: a prefix that
+    // starts another family's would release that live sibling too
+    val clashes = for (a <- prefixes; b <- prefixes
+      if a != b && b.startsWith(a)) yield s"$a < $b"
+    assert(clashes.isEmpty, s"family prefixes overlap: $clashes")
+  }
+
+  test("clustered order is a permutation of its input") {
     val names = SparkEntry.queries.keys.toSeq.sorted
     val ordered = SweepOrder.sort(names.map(_ -> ())).map(_._1)
     assert(ordered.sorted === names)
