@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.queries.Shared
+import graft.queries.{MatchingQueries, Shared, VectorQueries}
 
 /** Family-clustered sweep order for multi-query harnesses, and the one
   * [[sweep]] loop that runs a query list in it (Bench, Verify,
@@ -47,11 +47,14 @@ object SweepOrder {
   final case class Family(prefix: String, group: Int, parents: Seq[String],
                           consumers: Set[String])
 
-  /** The memo families. A drifted consumer set (a new query reading a
-    * released family) costs one visible rebuild, never a wrong answer;
-    * QueriesSpec fails on any touch not declared here, SweepOrderSpec
-    * on a lazily built family with a consumer one of its parents does
-    * not declare, and on one prefix starting another (a release would
+  /** The memo families: the rows below, then one row per ANN-leg
+    * family and two per training chain, derived from
+    * [[VectorQueries.annLegs]] and [[MatchingQueries.trainingChains]].
+    * A drifted consumer set (a new query reading a released family)
+    * costs one visible rebuild, never a wrong answer; QueriesSpec
+    * fails on any touch not declared here, SweepOrderSpec on a lazily
+    * built family with a consumer one of its parents does not
+    * declare, and on one prefix starting another (a release would
     * drop the live sibling). */
   val families: Seq[Family] = Seq(
     Family("partCands", Match, Nil, Set("q13_entity_candidates")),
@@ -67,19 +70,10 @@ object SweepOrder {
     // sitting resident until q72
     Family("pivotedScores", Match, Seq("partScores", "partSuppScores"),
       Set("q19_score_pivot")),
-    // k=3/k=6 consumers may build their tables from it (small to hold)
+    // every training-chain query may build its chain's table from it
+    // (small to hold)
     Family("pairScores2", Match, Seq("pivotedScores"), Set("q20_weight_grid",
-      "q72_weight_refine", "q159_weight_grid_k3", "q160_weight_refine_k3",
-      "q161_trained_total", "q199_weight_grid_k6", "q200_weight_refine_k6",
-      "q203_trained_total_k6")),
-    Family("pairScores3", Match, Seq("pairScores2"), Set("q159_weight_grid_k3",
-      "q160_weight_refine_k3", "q161_trained_total")),
-    Family("pairScores6", Match, Seq("pairScores2"), Set("q199_weight_grid_k6",
-      "q200_weight_refine_k6", "q203_trained_total_k6")),
-    Family("k3walk", Match, Seq("pairScores3"), Set("q160_weight_refine_k3",
-      "q161_trained_total")),
-    Family("k6walk", Match, Seq("pairScores6"), Set("q200_weight_refine_k6",
-      "q203_trained_total_k6")),
+      "q72_weight_refine") ++ MatchingQueries.trainingChains.flatMap(_.queries)),
     Family("dupPairs", Text, Nil, Set("q105_survivorship",
       "q111_curation_report", "q123_split_leakage", "q129_triangles",
       "q153_degree_dist", "q190_incremental_cc", "q193_source_contamination",
@@ -95,9 +89,7 @@ object SweepOrder {
       "q162_embedding_dup_clusters", "q168_knn_graph", "q171_label_prop",
       "q172_retrieval_metrics", "q178_dbscan", "q194_multiprobe_lsh",
       "q31_knn_lsh", "q74_embedding_dups")),
-    // round-18 families: the shared candidate-cosine verifier frame
-    // and the memoized ANN search legs (each leg = its standalone
-    // query + the graders that re-read it)
+    // round 18: the shared candidate-cosine verifier frame
     Family("candCosines", Vector, Seq("lshBuckets"), Set("q74_embedding_dups",
       "q162_embedding_dup_clusters", "q168_knn_graph", "q171_label_prop",
       "q178_dbscan")),
@@ -119,27 +111,34 @@ object SweepOrder {
     Family("mmrSims", Vector, Nil, Set("q163_mmr_rerank")),
     Family("cosineWeights", Vector, Nil, Set("q29_cosine_shingles")),
     Family("mlMinhashTf", Vector, Nil, Set("q57_ml_minhash")),
-    Family("annBrute", Vector, Nil, Set("q30_knn_brute", "q118_ann_recall",
-      "q172_retrieval_metrics", "q188_matryoshka_recall",
-      "q194_multiprobe_lsh")),
-    Family("annLsh", Vector, Seq("lshBuckets"), Set("q31_knn_lsh",
-      "q118_ann_recall", "q172_retrieval_metrics", "q194_multiprobe_lsh")),
-    Family("annIvfFlat", Vector, Nil, Set("q70_ivf_ann", "q118_ann_recall",
-      "q172_retrieval_metrics")),
-    Family("annIvfKmeans", Vector, Seq("kmeans"), Set("q158_ivf_kmeans",
-      "q118_ann_recall", "q172_retrieval_metrics")),
-    Family("annSq8", Vector, Nil, Set("q166_sq8_ann", "q118_ann_recall",
-      "q172_retrieval_metrics")),
-    Family("annPq", Vector, Seq("pqCodes"), Set("q173_pq_ann",
-      "q118_ann_recall", "q172_retrieval_metrics")),
-    Family("annIvfpq", Vector, Seq("ivfpqCodes", "kmeans"), Set("q174_ivf_pq",
-      "q118_ann_recall", "q172_retrieval_metrics")),
-    Family("annMlsh", Vector, Seq("lshBuckets"), Set("q194_multiprobe_lsh",
-      "q172_retrieval_metrics")),
-    Family("annMrl", Vector, Nil, Set("q188_matryoshka_recall",
-      "q172_retrieval_metrics")),
     Family("prEdges", Graph, Nil, Set("q121_pagerank", "q182_trustrank")),
-    Family("bpeVocab", Graph, Nil, Set("q119_bpe_merges", "q131_bpe_encode")))
+    Family("bpeVocab", Graph, Nil, Set("q119_bpe_merges", "q131_bpe_encode"))
+  ) ++ annFamilies ++ chainFamilies
+
+  /** One family per ANN-leg memo prefix (the Matryoshka legs' keys
+    * annMrl8/16/32 are one family), read by each leg's standalone query
+    * and by every grader whose leg list holds it — the brute truth by
+    * every grader. */
+  private def annFamilies: Seq[Family] = {
+    val legs = VectorQueries.annLegs
+    legs.map(_.prefix).distinct.map { prefix =>
+      val mine = legs.filter(_.prefix == prefix)
+      val standalone = VectorQueries.legQueries
+        .collect { case (q, leg) if mine.contains(leg) => q }
+      val graders = VectorQueries.graders
+        .collect { case (q, g) if g.reads.exists(mine.contains) => q }
+      Family(prefix, Vector, mine.head.parents, (standalone ++ graders).toSet)
+    }
+  }
+
+  /** Each training chain's score table (built from pairScores2) and its
+    * Walker trajectory (built from the table). */
+  private def chainFamilies: Seq[Family] =
+    MatchingQueries.trainingChains.flatMap { c =>
+      Seq(Family(c.scoresKey, Match, Seq("pairScores2"), c.queries.toSet),
+        Family(c.walkKey, Match, Seq(c.scoresKey),
+          Set(c.walkQuery, c.serveQuery)))
+    }
 
   private val byPrefix: Map[String, Family] =
     families.map(f => f.prefix -> f).toMap

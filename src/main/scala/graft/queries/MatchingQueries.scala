@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -443,190 +443,147 @@ object MatchingQueries {
         withLabels(weightPairScores(s, dir)))
       .orderBy("round")
 
-  /** Three-type weight-training input: the q20 pair universe (matched
-    * by BOTH entity types) widened with a third score of a wholly
-    * different nature — date proximity, s3 = 100/(1+|year₁−year₂|) —
-    * mirroring how the reference mixes entity-overlap scores with
-    * non-overlap evidence across its ~9 active types. The year dim is
-    * a 2-column projection of orders joined per pair side; exact: one
-    * integer abs-difference and one double division per pair. */
-  private[graft] def weightPairScores3(s: SparkSession, dir: String): DataFrame =
-    // memoized: the k=3 training family (q159 grid, q160 Walker, q161
-    // serving) each drives MULTIPLE distributed passes over this frame
-    // (one per lattice/probe evaluation round) — a user tuning weights
-    // persists the score table once, so the sweep should too
-    // parts = doc1: the year-dim joins broadcast one side or the
-    // other, so the layout is re-pinned for the rank windows (same
-    // rationale as pairScores2; the frame is intersection-sized)
-    memoized(s, dir, "pairScores3", Seq("doc1")) {
-      val yrs = Tables.orders(s, dir)
-        .select(col("o_orderkey").as("doc_id"), year(col("o_orderdate")).as("yr"))
-      weightPairScores(s, dir)
-        .join(yrs.select(col("doc_id").as("doc1"), col("yr").as("y1")), Seq("doc1"))
-        .join(yrs.select(col("doc_id").as("doc2"), col("yr").as("y2")), Seq("doc2"))
-        .withColumn("s3", lit(100.0) / (lit(1) + abs(col("y1") - col("y2"))))
-        .select("doc1", "doc2", "s1", "s2", "s3")
+  /** One score type a training chain adds to the q20 pair universe:
+    * an orders-side column `value` (named `name` in the dim), scored
+    * per pair from its two sides' values. */
+  private[graft] final case class ScoreDim(name: String, value: Column,
+                                           score: (Column, Column) => Column)
+
+  /** `100 / (1 + |a − b|)`: proximity of two integer-valued sides. */
+  private def proximity(a: Column, b: Column): Column =
+    lit(100.0) / (lit(1) + abs(a - b))
+
+  /** 100 when both sides agree, else 0. */
+  private def sameValue(a: Column, b: Column): Column =
+    when(a === b, 100.0).otherwise(0.0)
+
+  /** One weight-training chain over k = 2 + |dims| score types (J7/A9
+    * at the reference's arity — `WeightTrainerStage.scala:321-456`
+    * walks ~9 types; q20/q72 are the 2-type base case). Its three
+    * queries and its two memo families (`pairScores<k>`, `k<k>walk`)
+    * derive from this row:
+    *
+    *  - `pairScores`: the q20 pair universe (matched by BOTH entity
+    *    types) widened with `dims`, signals of distinct natures — the
+    *    way the reference mixes entity-overlap scores with date /
+    *    numeric / categorical evidence. One dim of `dims` columns
+    *    projected from orders and joined per pair side: broadcast-
+    *    sized joins, no new quadratic work. Memoized, because the grid
+    *    and every Walker round each drive a distributed pass over it
+    *    (a user tuning weights persists the score table once);
+    *    parts = doc1, since the dim joins broadcast one side or the
+    *    other, so the layout is re-pinned for the rank windows (the
+    *    pairScores2 rationale; the frame is intersection-sized).
+    *  - `gridQuery`: the constrained k-type simplex lattice (Σnᵢ =
+    *    `gridSteps`) generated by iterated constrained cross joins,
+    *    every point evaluated in ONE distributed pass.
+    *  - `walkQuery`: Walker refinement on the k-type simplex (the q72
+    *    driver loop generalized past the 1-D case): coarse sub-simplex
+    *    (steps=4 at denom=32) then 3 halving rounds probing the
+    *    incumbent's ±step moves along every ordered axis pair. The
+    *    trajectory is memoized: the trained vector is the artifact a
+    *    user persists (train once, serve many), so the walk runs once
+    *    per (session, dir) for both its consumers.
+    *  - `serveQuery`: trained weights APPLIED — the reference's
+    *    train→score loop closed (`FullMatcherApp` runs
+    *    `WeightTrainerStage` and then `TotalStatisticStage` with the
+    *    trained weights; q43 used a fixed 0.7/0.3 dim). The final
+    *    incumbent's k lattice coordinates arrive as a driver scalar
+    *    (S9 shape), every pair is scored with wᵢ = nᵢ/32 exactly as
+    *    [[graft.operators.WeightTraining.evaluateSimplex]] scores a
+    *    grid point (total_micro = round(Σ wᵢsᵢ·1e6)), top-3 per doc1.
+    *
+    * The oracles replay each chain's walk in DuckDB (k=3: the full
+    * n/32 lattice; k=6: only the visited points) and apply the same
+    * final weights — training and serving provably agree. */
+  private[graft] final case class TrainingChain(gridSteps: Int,
+      dims: Seq[ScoreDim], gridQuery: String, walkQuery: String,
+      serveQuery: String) {
+    val k: Int = 2 + dims.size
+    val scoresKey: String = s"pairScores$k"
+    val walkKey: String = s"k${k}walk"
+    def queries: Seq[String] = Seq(gridQuery, walkQuery, serveQuery)
+
+    def pairScores(s: SparkSession, dir: String): DataFrame =
+      memoized(s, dir, scoresKey, Seq("doc1")) {
+        val dim = Tables.orders(s, dir).select(
+          col("o_orderkey").as("doc_id") +: dims.map(d => d.value.as(d.name)): _*)
+        def side(i: Int) = dim.select(col("doc_id").as(s"doc$i") +:
+          dims.map(d => col(d.name).as(s"${d.name}$i")): _*)
+        dims.zipWithIndex
+          .foldLeft(weightPairScores(s, dir)
+            .join(side(1), Seq("doc1")).join(side(2), Seq("doc2"))) {
+            case (df, (d, i)) => df.withColumn(s"s${i + 3}",
+              d.score(col(s"${d.name}1"), col(s"${d.name}2")))
+          }
+          .select(("doc1" +: "doc2" +: (1 to k).map(i => s"s$i")).map(col): _*)
+      }
+
+    def walk(s: SparkSession, dir: String): DataFrame =
+      memoized(s, dir, walkKey) {
+        WeightTraining.refineWeightsSimplexLabeled(s,
+          withLabels(pairScores(s, dir)), k = k)
+      }
+
+    def grid(s: SparkSession, dir: String): DataFrame =
+      WeightTraining.evaluateSimplexLabeled(
+          withLabels(pairScores(s, dir)),
+          WeightTraining.simplexGrid(s, k = k, steps = gridSteps), k = k)
+        .orderBy((1 until k).map(i => col(s"n$i")): _*)
+
+    def refine(s: SparkSession, dir: String): DataFrame =
+      walk(s, dir).orderBy("round")
+
+    def serve(s: SparkSession, dir: String): DataFrame = {
+      val fin = walk(s, dir)
+        .orderBy(col("round").desc).limit(1)
+        .select((1 to k).map(i => col(s"n$i")): _*).head
+      val ws = (0 until k).map(i => fin.getLong(i) / 32.0)
+      val scored = pairScores(s, dir).withColumn("total_micro",
+        round((1 to k).map(i => lit(ws(i - 1)) * col(s"s$i"))
+          .reduce(_ + _) * 1e6).cast("long"))
+      val w = Window.partitionBy("doc1")
+        .orderBy(col("total_micro").desc, col("doc2"))
+      scored.withColumn("rnk", row_number().over(w))
+        .filter(col("rnk") <= 3)
+        .select("doc1", "doc2", "total_micro", "rnk")
+        .orderBy("doc1", "rnk")
     }
 
-  /** q159: k-type weight-grid evaluation (J7/A9 at the reference's
-    * real arity — `WeightTrainerStage.scala:321-456` walks ~9 types;
-    * q20 is the 2-type base case): the constrained 3-type simplex
-    * lattice (Σnᵢ = 5, 21 points) generated by iterated constrained
-    * cross joins, every point evaluated in ONE distributed pass over
-    * the 3-score match table. */
-  def q159WeightGridK3(s: SparkSession, dir: String): DataFrame =
-    WeightTraining.evaluateSimplexLabeled(
-        withLabels(weightPairScores3(s, dir)),
-        WeightTraining.simplexGrid(s, k = 3, steps = 5), k = 3)
-      .orderBy("n1", "n2")
-
-  /** q160: Walker refinement on the 3-type simplex (the q72 driver
-    * loop generalized past the 1-D case): coarse sub-simplex
-    * (steps=4, 15 points, denom=32) then 3 halving rounds probing the
-    * incumbent's ±step moves along every ordered axis pair. Oracled
-    * by evaluating the full 561-point n/32 lattice once and unrolling
-    * the argmin walk in CTEs — the q72 scheme with 2-D probe sets;
-    * WeightSpec asserts the trajectory laws on top. */
-  /** The k=3 Walker trajectory, memoized (round 17 — the k6Walk
-    * pattern applied at k=3): the trained vector is the persisted
-    * artifact; q160 reports it and q161 applies it, so the
-    * 4-evaluation-pass walk runs once per (session, dir) instead of
-    * once per consumer. */
-  private def k3Walk(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "k3walk") {
-      WeightTraining.refineWeightsSimplexLabeled(s,
-        withLabels(weightPairScores3(s, dir)), k = 3)
-    }
-
-  def q160WeightRefineK3(s: SparkSession, dir: String): DataFrame =
-    k3Walk(s, dir).orderBy("round")
-
-  /** q161: trained weights APPLIED — the reference's train→score loop
-    * closed (`FullMatcherApp` runs `WeightTrainerStage` and then
-    * `TotalStatisticStage` with the trained weights; q43 used a fixed
-    * 0.7/0.3 dim). Runs the q160 Walker to its final incumbent,
-    * collects the 3 lattice coordinates (a driver scalar — S9 shape,
-    * 3 ints), and scores every pair with w_i = n_i/32 exactly as
-    * [[graft.operators.WeightTraining.evaluateSimplex]] scores a grid
-    * point: total_micro = round(Σ wᵢsᵢ·1e6), top-3 per doc1. The
-    * oracle replays the whole walk (the q160 CTE chain) and applies
-    * the same r3 weights — training and serving provably agree. */
-  def q161TrainedTotal(s: SparkSession, dir: String): DataFrame = {
-    val ps = weightPairScores3(s, dir)
-    val fin = k3Walk(s, dir)
-      .orderBy(col("round").desc).limit(1)
-      .select("n1", "n2", "n3").head
-    val Seq(w1, w2, w3) =
-      (0 until 3).map(i => fin.getLong(i) / 32.0)
-    val scored = ps.withColumn("total_micro",
-      round((lit(w1) * col("s1") + lit(w2) * col("s2") +
-        lit(w3) * col("s3")) * 1e6).cast("long"))
-    val w = Window.partitionBy("doc1")
-      .orderBy(col("total_micro").desc, col("doc2"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
-      .select("doc1", "doc2", "total_micro", "rnk")
-      .orderBy("doc1", "rnk")
+    def registry: Seq[(String, Q)] =
+      Seq(gridQuery -> (grid _), walkQuery -> (refine _),
+        serveQuery -> (serve _))
   }
 
-  /** Six-type weight-training input — the reference's REAL arity
-    * (`WeightTrainerStage.scala:321-456` walks ~9 active score types;
-    * q159/q160 proved the machinery at k=3). The q20 pair universe
-    * widened with four more signals of distinct natures, mirroring how
-    * the reference mixes entity-overlap scores with date / numeric /
-    * categorical evidence: s3 = year proximity, s4 = total-price band
-    * proximity (exact integer cents // 1e6 banding, the q177 cents
-    * rule), s5 = same-customer flag, s6 = same-priority flag. One
-    * 5-column dim joined per pair side — two broadcast-sized joins,
-    * no new quadratic work. */
-  private[graft] def weightPairScores6(s: SparkSession, dir: String): DataFrame =
-    // memoized: the k=6 family (q199 grid, q200 Walker) drives many
-    // distributed passes over this frame (126-point coarse lattice +
-    // up to 31 probes per round)
-    // parts = doc1 — same rank-window rationale as pairScores2/3
-    memoized(s, dir, "pairScores6", Seq("doc1")) {
-      val dim = Tables.orders(s, dir).select(
-        col("o_orderkey").as("doc_id"),
-        year(col("o_orderdate")).as("yr"),
-        expr("cast(round(o_totalprice * 100) as bigint) div 1000000").as("pband"),
-        col("o_custkey").as("cust"),
-        col("o_orderpriority").as("prio"))
-      weightPairScores(s, dir)
-        .join(dim.select(col("doc_id").as("doc1"), col("yr").as("y1"),
-          col("pband").as("pb1"), col("cust").as("c1"), col("prio").as("pr1")),
-          Seq("doc1"))
-        .join(dim.select(col("doc_id").as("doc2"), col("yr").as("y2"),
-          col("pband").as("pb2"), col("cust").as("c2"), col("prio").as("pr2")),
-          Seq("doc2"))
-        .withColumn("s3", lit(100.0) / (lit(1) + abs(col("y1") - col("y2"))))
-        .withColumn("s4", lit(100.0) / (lit(1) + abs(col("pb1") - col("pb2"))))
-        .withColumn("s5", when(col("c1") === col("c2"), 100.0).otherwise(0.0))
-        .withColumn("s6", when(col("pr1") === col("pr2"), 100.0).otherwise(0.0))
-        .select("doc1", "doc2", "s1", "s2", "s3", "s4", "s5", "s6")
-    }
+  /** Year proximity, s3 = 100/(1+|year₁−year₂|): one integer
+    * abs-difference and one double division per pair. */
+  private val yearProximity =
+    ScoreDim("yr", year(col("o_orderdate")), proximity)
 
+  /** k=3 (q159 grid over the 21-point Σnᵢ = 5 lattice, q160 walk, q161
+    * serve): the pair universe plus year proximity — the dim is a
+    * 2-column projection of orders. */
+  private[graft] val k3Chain = TrainingChain(gridSteps = 5,
+    Seq(yearProximity),
+    "q159_weight_grid_k3", "q160_weight_refine_k3", "q161_trained_total")
 
-  /** q199: weight-grid evaluation at the reference's real arity (k=6;
-    * J7/A9): the constrained 6-type simplex lattice (Σnᵢ = 4,
-    * C(9,5) = 126 points) generated by iterated constrained cross
-    * joins, every point evaluated in ONE distributed pass over the
-    * 6-score match table — the |pairs|×|grid| shuffle the verdict
-    * flagged as the cost that grows with k, measured here as its own
-    * BASELINE row. */
-  def q199WeightGridK6(s: SparkSession, dir: String): DataFrame =
-    WeightTraining.evaluateSimplexLabeled(
-        withLabels(weightPairScores6(s, dir)),
-        WeightTraining.simplexGrid(s, k = 6, steps = 4), k = 6)
-      .orderBy("n1", "n2", "n3", "n4", "n5")
+  /** k=6, the reference's REAL arity (q199 grid over the C(9,5) = 126
+    * points of Σnᵢ = 4 — the |pairs|×|grid| shuffle that grows with k,
+    * measured as its own BASELINE row; q200 walk, probing up to
+    * k(k−1) = 30 moves + the incumbent per round; q203 serve): year
+    * proximity, total-price band proximity (exact integer cents
+    * // 1e6 banding, the q177 cents rule), same customer, same
+    * priority. */
+  private[graft] val k6Chain = TrainingChain(gridSteps = 4, Seq(
+      yearProximity,
+      ScoreDim("pband",
+        expr("cast(round(o_totalprice * 100) as bigint) div 1000000"),
+        proximity),
+      ScoreDim("cust", col("o_custkey"), sameValue),
+      ScoreDim("prio", col("o_orderpriority"), sameValue)),
+    "q199_weight_grid_k6", "q200_weight_refine_k6", "q203_trained_total_k6")
 
-  /** The k=6 Walker trajectory, memoized: the trained weight vector
-    * is THE artifact a user persists (train once, serve many) — q200
-    * reports it and q203 applies it, so the 4-evaluation-pass walk
-    * runs once per (session, dir). The frame is 4 rows; the cost is
-    * the eager driver loop at build. */
-  private def k6Walk(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "k6walk") {
-      WeightTraining.refineWeightsSimplexLabeled(s,
-        withLabels(weightPairScores6(s, dir)), k = 6)
-    }
-
-  /** q200: Walker refinement on the 6-type simplex — the full
-    * Cartographer+Walker shape at reference dimensionality. Coarse
-    * sub-simplex (steps=4 at denom=32, 126 points = multiples of 8)
-    * then 3 halving rounds probing the incumbent's ±step moves along
-    * every ordered axis pair (≤ k(k−1) = 30 probes + incumbent per
-    * round). The full n/32 6-simplex has C(37,5) ≈ 436k points —
-    * far too many for the q160 evaluate-everything oracle — so the
-    * oracle instead replays exactly the VISITED points: it generates
-    * each round's probe set from the previous argmin row with the
-    * same ±step·(eᵢ−eⱼ) moves and evaluates only those. */
-  def q200WeightRefineK6(s: SparkSession, dir: String): DataFrame =
-    k6Walk(s, dir).orderBy("round")
-
-  /** q203: k=6 TRAINED WEIGHTS APPLIED — the q161 train→serve closure
-    * at the reference's real arity: run the q200 Walker to its final
-    * incumbent (6 lattice coordinates, an S9 driver scalar), score
-    * every pair with wᵢ = nᵢ/32 exactly as evaluateSimplex scores a
-    * grid point, keep the top-3 per doc1. The oracle replays the
-    * whole k=6 walk (the q200 visited-points chain) and applies the
-    * same round-3 weights — training and serving provably agree at
-    * k=6 as they do at k=3. */
-  def q203TrainedTotalK6(s: SparkSession, dir: String): DataFrame = {
-    val ps = weightPairScores6(s, dir)
-    val fin = k6Walk(s, dir)
-      .orderBy(col("round").desc).limit(1)
-      .select("n1", "n2", "n3", "n4", "n5", "n6").head
-    val ws = (0 until 6).map(i => fin.getLong(i) / 32.0)
-    val scored = ps.withColumn("total_micro",
-      round((1 to 6).map(i => lit(ws(i - 1)) * col(s"s$i"))
-        .reduce(_ + _) * 1e6).cast("long"))
-    val w = Window.partitionBy("doc1")
-      .orderBy(col("total_micro").desc, col("doc2"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
-      .select("doc1", "doc2", "total_micro", "rnk")
-      .orderBy("doc1", "rnk")
-  }
+  private[graft] val trainingChains: Seq[TrainingChain] = Seq(k3Chain, k6Chain)
 
   /** q94: the FullMatcherApp end-to-end composite (reference
     * `matching/app/FullMatcherApp.scala:38-67`, pipelines 1-2) — the
@@ -956,17 +913,12 @@ object MatchingQueries {
     "q43_total_score" -> (q43TotalScore _),
     "q44_pair_dedup" -> (q44PairDedup _),
     "q71_rank_eval" -> (q71RankEval _),
-    "q72_weight_refine" -> (q72WeightRefine _),
-    "q159_weight_grid_k3" -> (q159WeightGridK3 _),
-    "q160_weight_refine_k3" -> (q160WeightRefineK3 _),
-    "q161_trained_total" -> (q161TrainedTotal _),
-    "q199_weight_grid_k6" -> (q199WeightGridK6 _),
-    "q200_weight_refine_k6" -> (q200WeightRefineK6 _),
-    "q203_trained_total_k6" -> (q203TrainedTotalK6 _))
+    "q72_weight_refine" -> (q72WeightRefine _)) ++
+    trainingChains.flatMap(_.registry)
 
   /** The 3-type weight-training input as a CTE chain ending in
     * `pairsc3(doc1, doc2, s1, s2, s3)` — the oracle replay of
-    * [[weightPairScores3]] (q159/q160). */
+    * [[k3Chain]]'s pair scores (q159/q160). */
   private def pairsc3Sql: String =
     s"""$bothScoresSql,
        pairsc AS (SELECT doc1, doc2, s1, s2 FROM (
@@ -993,7 +945,7 @@ object MatchingQueries {
     * TF-IDF + 561-point-lattice chain once per round CONCURRENTLY —
     * at sf1 that blew past 60 GiB of temp spill; materialized, the
     * identical query runs in ~2 min. */
-  private def walkCtesSql: String =
+  private def walk3CtesSql: String =
     s"""$pairsc3Sql,
        lat AS (SELECT a.n1, b.n2, 32 - a.n1 - b.n2 AS n3
          FROM range(0, 33) a(n1), range(0, 33) b(n2)
@@ -1022,7 +974,7 @@ object MatchingQueries {
 
   /** The 6-type weight-training input as a CTE chain ending in
     * `pairsc6(doc1, doc2, s1..s6)` — the oracle replay of
-    * [[weightPairScores6]] (q199/q200). */
+    * [[k6Chain]]'s pair scores (q199/q200). */
   private def pairsc6Sql: String =
     s"""$bothScoresSql,
        pairsc AS (SELECT doc1, doc2, s1, s2 FROM (
@@ -1088,7 +1040,7 @@ object MatchingQueries {
     * sub-simplex pick `k6r0` → probe rounds `k6r1`..`k6r3`. Unlike
     * q160's oracle (full 561-point lattice), only VISITED points are
     * evaluated — the full n/32 6-simplex is ~436k points. */
-  private def k6WalkCtesSql: String = {
+  private def walk6CtesSql: String = {
     val axes = (1 to 5).map(i => s"range(0, 5) a$i(n$i)").mkString(", ")
     val sum5 = (1 to 5).map(i => s"a$i.n$i").mkString(" + ")
     s"""$pairsc6Sql,
@@ -1265,7 +1217,7 @@ object MatchingQueries {
            p_mic
          FROM trj ORDER BY iter""",
     "q161_trained_total" ->
-      s"""WITH $walkCtesSql,
+      s"""WITH $walk3CtesSql,
          tot AS (SELECT p.doc1, p.doc2,
            CAST(round((r3.n1/32.0 * p.s1 + r3.n2/32.0 * p.s2 +
              (32 - r3.n1 - r3.n2)/32.0 * p.s3) * 1e6) AS BIGINT) AS total_micro
@@ -1296,7 +1248,7 @@ object MatchingQueries {
     // and the three halving rounds (±4, ±2, ±1 along every ordered
     // axis pair) as argmin CTEs — the q72 scheme in 2-D coordinates
     "q160_weight_refine_k3" ->
-      s"""WITH $walkCtesSql
+      s"""WITH $walk3CtesSql
          SELECT CAST(0 AS INTEGER) AS round, n1, n2, 32 - n1 - n2 AS n3,
            n1/32.0 AS w1, n2/32.0 AS w2, (32 - n1 - n2)/32.0 AS w3, error FROM r0
          UNION ALL SELECT 1, n1, n2, 32 - n1 - n2,
@@ -1334,7 +1286,7 @@ object MatchingQueries {
     // incumbent's weights applied to every pair (the q161 scheme)
     "q203_trained_total_k6" -> {
       val total = (1 to 6).map(i => s"r.n$i/32.0 * p.s$i").mkString(" + ")
-      s"""WITH $k6WalkCtesSql,
+      s"""WITH $walk6CtesSql,
          tot AS (SELECT p.doc1, p.doc2,
            CAST(round(($total) * 1e6) AS BIGINT) AS total_micro
            FROM pairsc6 p, k6r3 r),
@@ -1350,7 +1302,7 @@ object MatchingQueries {
         s"""SELECT CAST($r AS INTEGER) AS round, $k6N,
            ${(1 to 6).map(i => s"n$i/32.0 AS w$i").mkString(", ")}, error
            FROM k6r$r"""
-      s"""WITH $k6WalkCtesSql
+      s"""WITH $walk6CtesSql
          ${(0 to 3).map(row).mkString(" UNION ALL ")}
          ORDER BY round"""
     },

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -145,55 +145,128 @@ object VectorQueries {
     * scale, where the corpus has 500 vectors and the cap is loose). */
   private val QBatchMax = 1000L
 
+  /** The query batch as a predicate on `vec_id`. */
+  private def inQueryBatch: Column =
+    col("vec_id") % 50 === 0 && col("vec_id") < QBatchMax
+
+  /** [[inQueryBatch]] in the oracle SQL. */
+  private val QBatchSql = s"vec_id % 50 = 0 AND vec_id < $QBatchMax"
+
   private def queriesOf(emb: DataFrame): DataFrame =
-    emb.filter(col("vec_id") % 50 === 0 && col("vec_id") < QBatchMax)
+    emb.filter(inQueryBatch)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
 
-  /** Brute-force truth, memoized pre-sort (round 18, guide §2.4):
-    * the SAME ranked batch grades every approximate index — q118's
-    * six recall legs, q172's ten metric legs, q188's Matryoshka curve
-    * and q194's multi-probe report each re-ran the O(batch·n) corpus
-    * scan; one session computes it once. Batch·K rows — bytes. */
-  private def annBrute(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    Shared.memoized(s, dir, "annBrute")(
-      VectorSearch.cosineTopK(
-        emb.select("vec_id", "embedding"), queriesOf(emb), K))
+  /** The query batch micro-quantized: `(qid, qe)`, the probe side of
+    * the k-means-cell legs. */
+  private def quantizedQueries(emb: DataFrame): DataFrame =
+    quantized(emb.filter(inQueryBatch))
+      .select(col("vec_id").as("qid"), col("qe"))
+
+  /** Each query's [[NProbe]] nearest centroids of `cents(cl, c)` by
+    * integer L2 over `qs(qid, qe)`, ties to the smaller cell id. */
+  private def probeCells(qs: DataFrame, cents: DataFrame): DataFrame =
+    qs.crossJoin(broadcast(cents))
+      .withColumn("d",
+        graft.functions.VectorExpressions.l2q(col("qe"), col("c")))
+      .withColumn("crnk", row_number().over(
+        Window.partitionBy("qid").orderBy(col("d"), col("cl"))))
+      .filter(col("crnk") <= NProbe)
+
+  /** Exact-cosine top-[[K]] per query over rows carrying the query
+    * (`qemb`) and corpus (`embedding`) vectors: `(qid, vec_id,
+    * extra…, cosine, rnk)`, ties to the smaller vec_id. */
+  private def topKByCosine(scored: DataFrame, extra: String*): DataFrame =
+    scored
+      .withColumn("cosine", r6(cosine(col("qemb"), col("embedding"))))
+      .withColumn("rnk", row_number().over(
+        Window.partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))))
+      .filter(col("rnk") <= K)
+      .select((Seq("qid", "vec_id") ++ extra ++ Seq("cosine", "rnk")).map(col): _*)
+
+  /** The exact re-rank every index leg ends in: attach both
+    * embeddings to candidate `(qid, vec_id, extra…)` rows, then
+    * [[topKByCosine]]. */
+  private def rerank(cands: DataFrame, emb: DataFrame,
+                     extra: String*): DataFrame =
+    topKByCosine(cands
+      .join(emb.select("vec_id", "embedding"), Seq("vec_id"))
+      .join(emb.select(col("vec_id").as("qid"),
+        col("embedding").as("qemb")), Seq("qid")), extra: _*)
+
+  // ---- ANN search legs -------------------------------------------------
+
+  /** A leg's DuckDB replay. `topK` selects its ranked rows (`qid`,
+    * `vec_id`, `rnk` ≤ [[K]], maybe more); `ordered` is the standalone
+    * query's oracle. */
+  private[graft] sealed trait LegSql {
+    def topK: String
+    def ordered: String
   }
 
-  /** Brute-force cosine top-k: broadcast query batch × corpus scan. */
-  def q30KnnBrute(s: SparkSession, dir: String): DataFrame =
-    annBrute(s, dir).orderBy("qid", "rnk")
+  /** A CTE chain ending in `ranked(qid, vec_id, cosine, rnk)`, rnk
+    * unbounded. */
+  private final case class RankedCtes(ctes: String) extends LegSql {
+    def topK: String =
+      s"WITH $ctes SELECT qid, vec_id, rnk FROM ranked WHERE rnk <= $K"
+    def ordered: String =
+      s"""WITH $ctes
+         SELECT qid, vec_id, cosine, rnk FROM ranked
+         WHERE rnk <= $K ORDER BY qid, rnk"""
+  }
 
-  /** LSH-bucketed ANN: sign-bit signatures over fixed hyperplanes at
-    * the corpus-derived band width (see the derivation block above),
-    * banded; candidates = corpus vectors sharing any band key with the
-    * query; exact cosine + top-k within candidates only. */
-  /** q31's ranked result pre-sort, memoized for the graders (q118/
-    * q172/q194) — the annBrute pattern. */
-  private def annLsh(s: SparkSession, dir: String): DataFrame =
-    Shared.memoized(s, dir, "annLsh") {
+  /** A standalone SELECT of the top-[[K]] rows. */
+  private final case class TopKSelect(topK: String) extends LegSql {
+    def ordered: String = s"SELECT * FROM ($topK) ORDER BY qid, rnk"
+  }
+
+  /** One ANN search leg over the fixed query batch: its `method` label
+    * in the graders' output, its memo-family `prefix` (`param`, when
+    * set, suffixes the memo key: annMrl8), the memo families its
+    * build reads, the ranked top-[[K]] Spark result `(qid, vec_id,
+    * [extra…,] cosine, rnk)` and its DuckDB replay. Its standalone
+    * query ([[legQueries]]), the graders that read it ([[graders]]),
+    * their oracles and its [[graft.SweepOrder]] family row all derive
+    * from this row. */
+  private[graft] final case class AnnLeg(method: String, prefix: String,
+      parents: Seq[String], body: Q, sql: LegSql,
+      param: Option[Int] = None) {
+    def key: String = prefix + param.fold("")(_.toString)
+
+    /** The ranked result pre-sort, memoized (round 18, guide §2.4):
+      * the standalone query and every grader read one build. */
+    def result(s: SparkSession, dir: String): DataFrame =
+      Shared.memoized(s, dir, key)(body(s, dir))
+  }
+
+  /** Brute-force cosine top-k (q30): broadcast query batch × corpus
+    * scan. The ground truth every grader scores the other legs
+    * against — one O(batch·n) scan per session, batch·K rows. */
+  private[graft] lazy val bruteLeg: AnnLeg =
+    AnnLeg("brute", "annBrute", Nil, { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
-      val (buckets, _) = bucketsOf(s, dir)
-      val qIds = queriesOf(emb).select("qid")
-      val qBuckets = buckets
-        .join(qIds, buckets("vec_id") === qIds("qid"))
-        .select(col("qid"), col("band"), col("key"))
-      val cands = qBuckets.join(buckets, Seq("band", "key"))
-        .filter(col("vec_id") =!= col("qid"))
-        .select("qid", "vec_id").distinct()
-      val scored = cands
-        .join(Tables.embeddings(s, dir).select(col("vec_id").as("qid"), col("embedding").as("qemb")), Seq("qid"))
-        .join(Tables.embeddings(s, dir).select("vec_id", "embedding"), Seq("vec_id"))
-        .withColumn("cosine", r6(cosine(col("qemb"), col("embedding"))))
-      val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
-      scored.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= K)
-        .select("qid", "vec_id", "cosine", "rnk")
-    }
+      VectorSearch.cosineTopK(
+        emb.select("vec_id", "embedding"), queriesOf(emb), K)
+    }, RankedCtes(bruteCtes))
 
-  def q31KnnLsh(s: SparkSession, dir: String): DataFrame =
-    annLsh(s, dir).orderBy("qid", "rnk")
+  /** LSH-bucketed ANN (q31): sign-bit signatures over fixed
+    * hyperplanes at the corpus-derived band width (see the derivation
+    * block above), banded; candidates = corpus vectors sharing any
+    * band key with the query; exact cosine + top-k within candidates
+    * only. */
+  private[graft] lazy val lshLeg: AnnLeg =
+    AnnLeg("lsh", "annLsh", Seq("lshBuckets"), { (s, dir) =>
+      val (buckets, _) = bucketsOf(s, dir)
+      val qb = buckets.filter(inQueryBatch)
+        .select(col("vec_id").as("qid"), col("band"), col("key"))
+      rerank(lshCands(qb, buckets), Tables.embeddings(s, dir))
+    }, RankedCtes(lshCtes))
+
+  /** Corpus vectors sharing a (band, key) probe with their query:
+    * distinct `(qid, vec_id)`, the query itself excluded. */
+  private def lshCands(probes: DataFrame, buckets: DataFrame): DataFrame =
+    probes.join(buckets.select("band", "key", "vec_id"), Seq("band", "key"))
+      .filter(col("vec_id") =!= col("qid"))
+      .select("qid", "vec_id").distinct()
 
   /** Per-label centroids, elementwise over the array column. Sums are
     * micro-quantized so the distributed aggregation is exact. */
@@ -209,21 +282,16 @@ object VectorQueries {
         col("n_vecs"))
       .orderBy("label", "pos")
 
-  /** IVF-style ANN: the label cells are the inverted file, the exact
-    * micro-quantized per-cell centroids (q32) are the coarse
+  /** IVF-style ANN (q70): the label cells are the inverted file, the
+    * exact micro-quantized per-cell centroids (q32) are the coarse
     * quantizer, and each query probes its `NProbe` nearest centroids,
     * scanning only those cells. At 100 TB the corpus is bucketed by
     * cell id, the centroid table is a broadcast dim, and a probe reads
     * `NProbe / nCells` of the data — the standard IVF trade. */
-  /** q70's ranked result pre-sort, memoized for the graders (q118/
-    * q172) — the annBrute pattern. */
-  private def annIvf(s: SparkSession, dir: String): DataFrame =
-    Shared.memoized(s, dir, "annIvfFlat")(q70Body(s, dir))
+  private[graft] lazy val ivfLeg: AnnLeg =
+    AnnLeg("ivf", "annIvfFlat", Nil, ivfBody, RankedCtes(ivfCtes))
 
-  def q70IvfAnn(s: SparkSession, dir: String): DataFrame =
-    annIvf(s, dir).orderBy("qid", "rnk")
-
-  private def q70Body(s: SparkSession, dir: String): DataFrame = {
+  private def ivfBody(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val centroids = emb
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
@@ -241,14 +309,9 @@ object VectorQueries {
         Window.partitionBy("qid").orderBy(col("ccos").desc, col("label"))))
       .filter(col("crnk") <= NProbe)
       .select("qid", "qemb", "label")
-    val scored = probes
+    topKByCosine(probes
       .join(emb.select(col("vec_id"), col("embedding"), col("label")), Seq("label"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cosine", r6(cosine(col("qemb"), col("embedding"))))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
-      .select("qid", "vec_id", "cosine", "rnk")
+      .filter(col("vec_id") =!= col("qid")))
   }
 
   /** Embedding-cosine near-duplicate pairs over the whole corpus:
@@ -563,40 +626,108 @@ object VectorQueries {
       .orderBy("vec_id")
   }
 
-  /** q118: ANN recall evaluation — recall@K of every approximate
-    * search path (q31 hyperplane-LSH, q70 probe-2 label-cell IVF,
-    * q158 content-derived k-means-cell IVF, q166 SQ8, q173 PQ,
-    * q174 IVF-PQ) against the q30 brute-force ground truth, per
-    * query point. "Measure, don't
-    * guess": the approximate indexes' quality is a number the pipeline
-    * watches, not an assertion — the q158 leg exists BECAUSE this
-    * report exposed the label cells' clone-corpus failure (RECALL.md),
-    * so the fix it bought is watched continuously too. Exact integer
-    * output (hits, k, recall in milli-units).
+  // ---- graders: quality reports over the ANN legs ---------------------
+
+  /** A quality report over `legs`, each graded per query point against
+    * the brute-force truth ([[bruteLeg]]): recall@[[K]], or with
+    * `rankAware` MRR and nDCG@[[K]]. Its Spark plan, oracle and memo
+    * reads derive from the leg rows; [[graders]] names its query.
+    * Exact integer output.
     *
-    * Scale shape: the ground truth is computed on the FIXED-SIZE
-    * query batch all three paths share ([[QBatchMax]]): a sampled
-    * batch is how recall is estimated at any scale — the brute leg is
-    * O(batch · n), linear in the corpus, never quadratic. The joins
-    * are on (qid, vec_id) — K·|batch| rows per side, tiny relative to
-    * the corpus, shuffled once per method. */
-  def q118AnnRecall(s: SparkSession, dir: String): DataFrame = {
-    val truth = annBrute(s, dir).select("qid", "vec_id")
-    def recall(approx: DataFrame, method: String): DataFrame =
-      truth.join(approx.select(col("qid"), col("vec_id"))
+    * Scale shape: the truth is computed on the FIXED-SIZE query batch
+    * every leg shares ([[QBatchMax]]) — a sampled batch is how index
+    * quality is estimated at any scale, and the brute leg is
+    * O(batch · n), linear in the corpus. The joins are on (qid,
+    * vec_id): K·|batch| rows per side, shuffled once per leg. */
+  private[graft] final case class Grader(legs: Seq[AnnLeg],
+                                         rankAware: Boolean = false) {
+    /** Every leg whose memo the report reads: the truth, then `legs`. */
+    def reads: Seq[AnnLeg] = bruteLeg +: legs
+
+    def run(s: SparkSession, dir: String): DataFrame =
+      if (rankAware) rankMetrics(s, dir, legs) else recall(s, dir, legs)
+
+    def sql: String = if (rankAware) metricsSql(legs) else recallSql(legs)
+  }
+
+  /** q118: ANN recall of the bit- and cell-truncation indexes (the
+    * q31/q70/q158/q166/q173/q174 legs). "Measure, don't guess": the
+    * approximate indexes' quality is a number the pipeline watches,
+    * not an assertion — the q158 leg exists BECAUSE this report
+    * exposed the label cells' clone-corpus failure (RECALL.md), so the
+    * fix it bought is watched continuously too. */
+  private[graft] lazy val annRecall: Grader =
+    Grader(Seq(lshLeg, ivfLeg, ivfKmeansLeg, sq8Leg, pqLeg, ivfpqLeg))
+
+  /** q172: RANKING-AWARE retrieval metrics — MRR and nDCG@[[K]] for
+    * every approximate leg in [[annLegs]]: ONE oracle-verified
+    * artifact for the whole recall/MRR/nDCG ladder, completing q118's
+    * recall with ORDER sensitivity: recall treats a hit at rank 5 like
+    * a hit at rank 1; a production retrieval stack watches MRR/nDCG
+    * because the model consumes the top of the list first. Per-
+    * position DCG terms are micro-rounded (the q136 ln precedent —
+    * both engines compute the identical double before the round), the
+    * ideal DCG is the same Σ over ranks 1..K (the truth list always
+    * holds K entries), and MRR is 1000 DIV first-relevant-rank. */
+  private[graft] lazy val retrievalMetrics: Grader =
+    Grader(annLegs.filterNot(_ == bruteLeg), rankAware = true)
+
+  /** q188: MATRYOSHKA-TRUNCATION RECALL — the recall curve over the
+    * prefix widths of [[mrlLegs]], graded against the full-dimension
+    * truth: the measured curve that tells a deployment which prefix
+    * is safe to serve. The DIMENSION-truncation axis next to q118's
+    * BIT-truncation axes. */
+  private[graft] lazy val matryoshkaRecall: Grader = Grader(mrlLegs)
+
+  /** q194: MULTI-PROBE LSH report — plain q31 LSH vs the multi-probe
+    * leg ([[mlshLeg]]) on the same corpus-derived buckets: the
+    * measured before/after of the recall lever. */
+  private[graft] lazy val multiprobeRecall: Grader =
+    Grader(Seq(lshLeg, mlshLeg))
+
+  /** Per (method, qid): the K truth rows, the hits among them, and
+    * recall in milli-units. */
+  private def recall(s: SparkSession, dir: String,
+                     legs: Seq[AnnLeg]): DataFrame = {
+    val truth = bruteLeg.result(s, dir).select("qid", "vec_id")
+    legs.map { leg =>
+      truth.join(leg.result(s, dir).select(col("qid"), col("vec_id"))
           .withColumn("hit", lit(1L)), Seq("qid", "vec_id"), "left")
         .groupBy("qid")
         .agg(count(lit(1)).as("k"),
           sum(coalesce(col("hit"), lit(0L))).as("hits"))
-        .withColumn("method", lit(method))
-    recall(annLsh(s, dir), "lsh")
-      .unionByName(recall(annIvf(s, dir), "ivf"))
-      .unionByName(recall(annIvfKmeans(s, dir), "ivf_kmeans"))
-      .unionByName(recall(annSq8(s, dir), "sq8"))
-      .unionByName(recall(annPq(s, dir), "pq"))
-      .unionByName(recall(annIvfPq(s, dir), "ivfpq"))
+        .withColumn("method", lit(leg.method))
+    }.reduce(_.unionByName(_))
       .withColumn("recall_milli", expr("hits * 1000 div k"))
       .select("method", "qid", "k", "hits", "recall_milli")
+      .orderBy("method", "qid")
+  }
+
+  /** Per (method, qid): hits, MRR in milli-units and nDCG in
+    * micro-units over each leg's ranked list. */
+  private def rankMetrics(s: SparkSession, dir: String,
+                          legs: Seq[AnnLeg]): DataFrame = {
+    val truth = bruteLeg.result(s, dir).select("qid", "vec_id")
+      .withColumn("rel", lit(1L))
+    val idcg = (1 to K)
+      .map(i => math.round(1e6 / (math.log(i + 1) / math.log(2.0)))).sum
+    legs.map { leg =>
+      leg.result(s, dir).select("qid", "vec_id", "rnk")
+        .join(truth, Seq("qid", "vec_id"), "left")
+        .na.fill(0L, Seq("rel"))
+        .groupBy("qid")
+        .agg(count(lit(1)).as("k"),
+          sum("rel").as("hits"),
+          min(when(col("rel") === 1L, col("rnk"))).as("first_rel"),
+          sum(when(col("rel") === 1L,
+            expr("CAST(round(1e6 / log2(rnk + 1)) AS BIGINT)"))
+            .otherwise(0L)).as("dcg_micro"))
+        .withColumn("method", lit(leg.method))
+    }.reduce(_.unionByName(_))
+      .withColumn("mrr_milli",
+        coalesce(expr("1000 DIV first_rel"), lit(0L)))
+      .withColumn("ndcg_micro", expr(s"dcg_micro * 1000000 DIV $idcg"))
+      .select("method", "qid", "k", "hits", "mrr_milli", "ndcg_micro")
       .orderBy("method", "qid")
   }
 
@@ -644,56 +775,6 @@ object VectorQueries {
         coalesce(col("predicted") === col("true_label"), lit(false)))
       .select("vec_id", "true_label", "predicted", "is_seed", "correct")
       .orderBy("vec_id")
-  }
-
-  /** q172: RANKING-AWARE retrieval metrics — MRR and nDCG@[[K]] for
-    * ALL TEN approximate index families against the q30 brute-force
-    * truth: the six bit/cell-truncation indexes (lsh, ivf, ivf_kmeans,
-    * sq8, pq, ivfpq), the multi-probe query-fan-out lever (mlsh,
-    * q194's lever graded with rank sensitivity), and the three
-    * Matryoshka dimension-truncation prefixes (mrl8/16/32, q188's
-    * axis) — ONE oracle-verified artifact for the whole recall/MRR/
-    * nDCG ladder, completing q118's recall with ORDER sensitivity: recall
-    * treats a hit at rank 5 like a hit at rank 1; a production
-    * retrieval stack watches MRR/nDCG because the model consumes the
-    * top of the list first. Exact integers end-to-end: per-position
-    * DCG terms are micro-rounded (the q136 ln precedent — both
-    * engines compute the identical double before the round), the
-    * ideal DCG is the same Σ over ranks 1..K (the truth list always
-    * holds K entries), and MRR is 1000 DIV first-relevant-rank.
-    * Same fixed query batch as q30/q118 — O(batch·K) work after the
-    * index scans, at any corpus size. */
-  def q172RetrievalMetrics(s: SparkSession, dir: String): DataFrame = {
-    val truth = annBrute(s, dir).select("qid", "vec_id")
-      .withColumn("rel", lit(1L))
-    def metrics(approx: DataFrame, method: String): DataFrame =
-      approx.select("qid", "vec_id", "rnk")
-        .join(truth, Seq("qid", "vec_id"), "left")
-        .na.fill(0L, Seq("rel"))
-        .groupBy("qid")
-        .agg(count(lit(1)).as("k"),
-          sum("rel").as("hits"),
-          min(when(col("rel") === 1L, col("rnk"))).as("first_rel"),
-          sum(when(col("rel") === 1L,
-            expr("CAST(round(1e6 / log2(rnk + 1)) AS BIGINT)"))
-            .otherwise(0L)).as("dcg_micro"))
-        .withColumn("method", lit(method))
-    val idcg = (1 to K)
-      .map(i => math.round(1e6 / (math.log(i + 1) / math.log(2.0)))).sum
-    metrics(annLsh(s, dir), "lsh")
-      .unionByName(metrics(annIvf(s, dir), "ivf"))
-      .unionByName(metrics(annIvfKmeans(s, dir), "ivf_kmeans"))
-      .unionByName(metrics(annSq8(s, dir), "sq8"))
-      .unionByName(metrics(annPq(s, dir), "pq"))
-      .unionByName(metrics(annIvfPq(s, dir), "ivfpq"))
-      .unionByName(metrics(mlshResult(s, dir), "mlsh"))
-      .unionByName(MrlDims.map(p =>
-        metrics(mrlResult(s, dir, p), s"mrl$p")).reduce(_.unionByName(_)))
-      .withColumn("mrr_milli",
-        coalesce(expr("1000 DIV first_rel"), lit(0L)))
-      .withColumn("ndcg_micro", expr(s"dcg_micro * 1000000 DIV $idcg"))
-      .select("method", "qid", "k", "hits", "mrr_milli", "ndcg_micro")
-      .orderBy("method", "qid")
   }
 
   /** Drill support ([[graft.tools.HierDrill]]): the pinned-K regime's
@@ -805,8 +886,7 @@ object VectorQueries {
     * bounded batches, it does not scale its batch with the corpus. */
   def q132HardNegatives(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val anchors = emb
-      .filter(col("vec_id") % 50 === 0 && col("vec_id") < QBatchMax)
+    val anchors = emb.filter(inQueryBatch)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"),
         col("label").as("qlabel"))
     val scored = emb.crossJoin(broadcast(anchors))
@@ -837,8 +917,7 @@ object VectorQueries {
     * scans swap to the q70/q158 IVF probe, as q132 documents. */
   def q191ContrastiveTriplets(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val anchors = emb
-      .filter(col("vec_id") % 50 === 0 && col("vec_id") < QBatchMax)
+    val anchors = emb.filter(inQueryBatch)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"),
         col("label").as("qlabel"))
     def top1(sameLabel: Boolean) = {
@@ -865,7 +944,7 @@ object VectorQueries {
       .orderBy("qid")
   }
 
-  /** q158: k-means-cell IVF ANN — the content-derived index the
+  /** k-means-cell IVF ANN (q158) — the content-derived index the
     * RECALL.md sf1 rows showed q70's per-label cells lack: on a
     * corpus where near-duplicates span labels, an
     * attribute-partitioned inverted file probes the wrong cells
@@ -883,150 +962,69 @@ object VectorQueries {
     * the scanned fraction FALLS as the corpus grows at fixed probe
     * count; the clustering is one Lloyd pass amortized across every
     * search batch (and maintained incrementally by the q116 shape). */
-  /** q158's ranked result pre-sort, memoized for the graders (q118/
-    * q172) — the annBrute pattern. */
-  private def annIvfKmeans(s: SparkSession, dir: String): DataFrame =
-    Shared.memoized(s, dir, "annIvfKmeans")(q158Body(s, dir))
+  private[graft] lazy val ivfKmeansLeg: AnnLeg =
+    AnnLeg("ivf_kmeans", "annIvfKmeans", Seq("kmeans"), ivfKmeansBody,
+      TopKSelect(ivfKmeansSql))
 
-  def q158IvfKmeans(s: SparkSession, dir: String): DataFrame =
-    annIvfKmeans(s, dir).orderBy("qid", "rnk")
-
-  private def q158Body(s: SparkSession, dir: String): DataFrame = {
+  private def ivfKmeansBody(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val k = semDedupK(emb.count())
     val asg = kmeansAssignment(s, dir, k)
     val cents = recomputeCentroids(asg)
-    val q = quantized(
-        emb.filter(col("vec_id") % 50 === 0 && col("vec_id") < QBatchMax))
-      .select(col("vec_id").as("qid"), col("qe"))
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("d",
-        graft.functions.VectorExpressions.l2q(col("qe"), col("c")))
-      .withColumn("crnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("d"), col("cl"))))
-      .filter(col("crnk") <= NProbe)
+    rerank(probeCells(quantizedQueries(emb), cents)
       .select("qid", "cl")
-    val scored = probes
       .join(asg.select("vec_id", "cl"), Seq("cl"))
-      .filter(col("vec_id") =!= col("qid"))
-      .join(emb.select("vec_id", "embedding"), Seq("vec_id"))
-      .join(emb.select(col("vec_id").as("qid"),
-        col("embedding").as("qemb")), Seq("qid"))
-      .withColumn("cosine", r6(cosine(col("qemb"), col("embedding"))))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
-      .select("qid", "vec_id", "cosine", "rnk")
+      .filter(col("vec_id") =!= col("qid")), emb)
   }
 
-  /** Matryoshka prefix widths evaluated by q188. */
+  /** Matryoshka prefix widths, one [[mrlLegs]] leg each. */
   private val MrlDims = Seq(8, 16, 32)
 
-  /** q188: MATRYOSHKA-TRUNCATION RECALL — retrieval quality when the
+  /** MATRYOSHKA-TRUNCATION legs (q188's curve) — retrieval when the
     * index stores only the first P dimensions of each embedding
     * (Kusupati et al. 2022, "Matryoshka Representation Learning"; the
     * production trick where a prefix of the vector IS a valid smaller
     * embedding, so the store trades dimensions for memory the same
     * way q166/q173 trade bits): brute top-K on the P-dim prefix
-    * cosine, graded against the full-dimension q30 truth, for
-    * P ∈ 8/16/32 — the measured curve that tells a deployment which
-    * prefix is safe to serve. Joins q118's watched family as the
-    * DIMENSION-truncation axis next to its BIT-truncation axes.
+    * cosine, one leg per P in [[MrlDims]], all in the one annMrl
+    * memo family.
     *
     * Scale shape: each leg is the q30 broadcast-batch × linear-corpus
-    * scan over a SHORTER vector (the slice is map-side); grading is
-    * batch·K-row joins. */
-  def q188MatryoshkaRecall(s: SparkSession, dir: String): DataFrame = {
-    val truth = annBrute(s, dir).select(col("qid"),
-      col("vec_id"), lit(1L).as("rel"))
-    val legs = MrlDims.map { p =>
-      val res = mrlResult(s, dir, p)
-      truth.join(res.select(col("qid"), col("vec_id"),
-          lit(1L).as("found")), Seq("qid", "vec_id"), "left")
-        .groupBy("qid")
-        .agg(count(lit(1)).as("k"),
-          sum(coalesce(col("found"), lit(0L))).as("hits"))
-        .withColumn("method", lit(s"mrl$p"))
-    }
-    legs.reduce(_.unionByName(_))
-      .withColumn("recall_milli", expr("hits * 1000 div k"))
-      .select("method", "qid", "k", "hits", "recall_milli")
-      .orderBy("method", "qid")
-  }
-
-  /** q194: MULTI-PROBE LSH (Lv et al. 2007) — the standard recall
-    * lever that does NOT grow the index: each query probes its own
-    * band bucket AND every 1-bit-flip neighbour key (bits probes per
-    * band), because a near neighbour that lands one sign-bit away is
-    * the most likely miss of sign-LSH. The index stays exactly q31's
-    * bucket table (no extra storage, no extra bands); only the QUERY
-    * fans out, by bands·(1+bits) lookups — a per-query constant.
-    * Output is a self-graded recall report (the q188 shape): plain
-    * q31 LSH vs multi-probe on the same corpus-derived buckets
-    * against the q30 truth — the measured before/after of the lever.
-    *
-    * Scale shape: the probe fan-out multiplies a FIXED query batch;
-    * the candidate join stays (band, key)-bucketed against the
-    * memoized table; grading is batch·K joins. */
-  /** Multi-probe ranked result (qid, vec_id, rnk ≤ K) — shared by
-    * q194's recall report and q172's graded metrics family. */
-  private def mlshResult(s: SparkSession, dir: String): DataFrame =
-    Shared.memoized(s, dir, "annMlsh")(mlshBody(s, dir))
-
-  private def mlshBody(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val (buckets, bits) = bucketsOf(s, dir)
-    val qb = buckets
-      .filter(col("vec_id") % 50 === 0 && col("vec_id") < QBatchMax)
-      .select(col("vec_id").as("qid"), col("band"), col("key"))
-    val probes = qb.unionByName(
-      graft.operators.Blocking.bitFlipProbes(qb, "key", bits))
-    val cand = probes
-      .join(buckets.select(col("band"), col("key"), col("vec_id")),
-        Seq("band", "key"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select("qid", "vec_id").distinct()
-    cand
-      .join(emb.select(col("vec_id").as("qid"),
-        col("embedding").as("qemb")), Seq("qid"))
-      .join(emb.select("vec_id", "embedding"), Seq("vec_id"))
-      .withColumn("cosine", r6(cosine(col("qemb"), col("embedding"))))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))))
-      .filter(col("rnk") <= K)
-  }
-
-  /** Matryoshka P-dim prefix ranked result (qid, vec_id, rnk ≤ K) —
-    * shared by q188's recall curve and q172's graded metrics. */
-  private def mrlResult(s: SparkSession, dir: String, p: Int): DataFrame =
-    Shared.memoized(s, dir, s"annMrl$p") {
+    * scan over a SHORTER vector (the slice is map-side). */
+  private[graft] lazy val mrlLegs: Seq[AnnLeg] = MrlDims.map { p =>
+    AnnLeg(s"mrl$p", "annMrl", Nil, { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       VectorSearch.cosineTopK(
         emb.select(col("vec_id"), slice(col("embedding"), 1, p).as("embedding")),
         queriesOf(emb).select(col("qid"), slice(col("qemb"), 1, p).as("qemb")),
         K)
-    }
-
-  def q194MultiprobeLsh(s: SparkSession, dir: String): DataFrame = {
-    val res = mlshResult(s, dir)
-    val truth = annBrute(s, dir).select(col("qid"), col("vec_id"))
-    def recall(df: DataFrame, m: String) = truth
-      .join(df.select(col("qid"), col("vec_id"), lit(1L).as("found")),
-        Seq("qid", "vec_id"), "left")
-      .groupBy("qid")
-      .agg(count(lit(1)).as("k"),
-        sum(coalesce(col("found"), lit(0L))).as("hits"))
-      .withColumn("method", lit(m))
-    recall(annLsh(s, dir), "lsh")
-      .unionByName(recall(res, "mlsh"))
-      .withColumn("recall_milli", expr("hits * 1000 div k"))
-      .select("method", "qid", "k", "hits", "recall_milli")
-      .orderBy("method", "qid")
+    }, TopKSelect(mrlTopKSql(p)), Some(p))
   }
+
+  /** MULTI-PROBE LSH (Lv et al. 2007) — the standard recall lever that
+    * does NOT grow the index: each query probes its own band bucket
+    * AND every 1-bit-flip neighbour key (bits probes per band),
+    * because a near neighbour that lands one sign-bit away is the most
+    * likely miss of sign-LSH. The index stays exactly q31's bucket
+    * table (no extra storage, no extra bands); only the QUERY fans
+    * out, by bands·(1+bits) lookups — a per-query constant.
+    *
+    * Scale shape: the probe fan-out multiplies a FIXED query batch;
+    * the candidate join stays (band, key)-bucketed against the
+    * memoized table. */
+  private[graft] lazy val mlshLeg: AnnLeg =
+    AnnLeg("mlsh", "annMlsh", Seq("lshBuckets"), { (s, dir) =>
+      val (buckets, bits) = bucketsOf(s, dir)
+      val qb = buckets.filter(inQueryBatch)
+        .select(col("vec_id").as("qid"), col("band"), col("key"))
+      val probes = qb.unionByName(
+        graft.operators.Blocking.bitFlipProbes(qb, "key", bits))
+      rerank(lshCands(probes, buckets), Tables.embeddings(s, dir))
+    }, RankedCtes(mlshCtes))
 
   /** Tombstoned vector predicate for the q186/q187 delete drills:
     * every vec_id ≡ 3 (mod 10) has been deleted from the store. */
-  private def tombstoned(c: org.apache.spark.sql.Column) = c % 10 === 3
+  private def tombstoned(c: Column) = c % 10 === 3
 
   /** q186: TOMBSTONE-AWARE ANN SERVE — q158's probe-2 search over a
     * store with DELETES: 10% of vectors are tombstoned, and the serve
@@ -1047,28 +1045,11 @@ object VectorQueries {
     val k = semDedupK(emb.count())
     val asg = kmeansAssignment(s, dir, k)
     val cents = recomputeCentroids(asg)
-    val q = quantized(
-        emb.filter(col("vec_id") % 50 === 0 && col("vec_id") < QBatchMax))
-      .select(col("vec_id").as("qid"), col("qe"))
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("d",
-        graft.functions.VectorExpressions.l2q(col("qe"), col("c")))
-      .withColumn("crnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("d"), col("cl"))))
-      .filter(col("crnk") <= NProbe)
+    rerank(probeCells(quantizedQueries(emb), cents)
       .select("qid", "cl")
-    val scored = probes
       .join(asg.select("vec_id", "cl")
         .filter(!tombstoned(col("vec_id"))), Seq("cl"))
-      .filter(col("vec_id") =!= col("qid"))
-      .join(emb.select("vec_id", "embedding"), Seq("vec_id"))
-      .join(emb.select(col("vec_id").as("qid"),
-        col("embedding").as("qemb")), Seq("qid"))
-      .withColumn("cosine", r6(cosine(col("qemb"), col("embedding"))))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
-      .select("qid", "vec_id", "cosine", "rnk")
+      .filter(col("vec_id") =!= col("qid")), emb)
       .orderBy("qid", "rnk")
   }
 
@@ -1567,7 +1548,7 @@ object VectorQueries {
       .orderBy("cl")
   }
 
-  /** q166: SCALAR-QUANTIZED (SQ8) ANN — the memory-side trick every
+  /** SCALAR-QUANTIZED (SQ8) ANN (q166) — the memory-side trick every
     * production vector store ships (FAISS `SQ8`, Lucene/Elasticsearch
     * `int8_hnsw`): compress each dimension to an 8-bit code against
     * the corpus per-dimension min/max, generate candidates on the
@@ -1584,15 +1565,10 @@ object VectorQueries {
     * ⌊(x_i−lo_i)·255/(hi_i−lo_i)⌋ over the micro-quantized grid; the
     * candidate metric is the quantized cosine qdot/√‖code‖² (the
     * query norm is constant per qid). */
-  /** q166's ranked result pre-sort, memoized for the graders (q118/
-    * q172) — the annBrute pattern. */
-  private def annSq8(s: SparkSession, dir: String): DataFrame =
-    Shared.memoized(s, dir, "annSq8")(q166Body(s, dir))
+  private[graft] lazy val sq8Leg: AnnLeg =
+    AnnLeg("sq8", "annSq8", Nil, sq8Body, TopKSelect(sq8Sql))
 
-  def q166Sq8Ann(s: SparkSession, dir: String): DataFrame =
-    annSq8(s, dir).orderBy("qid", "rnk")
-
-  private def q166Body(s: SparkSession, dir: String): DataFrame = {
+  private def sq8Body(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val q = quantized(emb)
     val bounds = q.select(posexplode(col("qe")).as(Seq("pos", "v")))
@@ -1629,15 +1605,7 @@ object VectorQueries {
     val pool = scored.withColumn("crnk", row_number().over(wq))
       .filter(col("crnk") <= Sq8Pool)
       .select("qid", "vec_id", "qdot")
-    val rer = pool
-      .join(emb.select("vec_id", "embedding"), Seq("vec_id"))
-      .join(emb.select(col("vec_id").as("qid"),
-        col("embedding").as("qemb")), Seq("qid"))
-      .withColumn("cosine", r6(cosine(col("qemb"), col("embedding"))))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
-    rer.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
-      .select("qid", "vec_id", "qdot", "cosine", "rnk")
+    rerank(pool, emb, "qdot")
   }
 
   // PQ constants: M subspaces of Dim/M dims, Ks codes per subspace —
@@ -1702,7 +1670,7 @@ object VectorQueries {
     (book, codes)
   }
 
-  /** q173: PRODUCT-QUANTIZATION ANN (Jégou, Douze & Schmid 2011,
+  /** PRODUCT-QUANTIZATION ANN (q173; Jégou, Douze & Schmid 2011,
     * "Product quantization for nearest neighbor search" — FAISS
     * `IndexPQ`): the memory-scale companion to q166's SQ8 — each
     * vector is M codebook ids (16 bits here vs 2048-bit float32), and
@@ -1723,19 +1691,13 @@ object VectorQueries {
     * sum over the codes scan (shuffle carries (qid, vec_id, partial
     * sum) — embeddings never move); the exact re-rank touches
     * batch·pool rows. */
-  /** q173's ranked result pre-sort, memoized for the graders (q118/
-    * q172) — the annBrute pattern. */
-  private def annPq(s: SparkSession, dir: String): DataFrame =
-    Shared.memoized(s, dir, "annPq")(q173Body(s, dir))
+  private[graft] lazy val pqLeg: AnnLeg =
+    AnnLeg("pq", "annPq", Seq("pqCodes"), pqBody, TopKSelect(pqSql))
 
-  def q173PqAnn(s: SparkSession, dir: String): DataFrame =
-    annPq(s, dir).orderBy("qid", "rnk")
-
-  private def q173Body(s: SparkSession, dir: String): DataFrame = {
+  private def pqBody(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val (book, codes) = pqIndex(s, dir)
-    val qsub = pqSubs(quantized(
-        emb.filter(col("vec_id") % 50 === 0 && col("vec_id") < QBatchMax)))
+    val qsub = pqSubs(quantized(emb.filter(inQueryBatch)))
       .select(col("vec_id").as("qid"), col("m"), col("sub").as("qsub"))
     val dtab = qsub.join(broadcast(book), Seq("m"))
       .select(col("qid"), col("m"), col("cl"),
@@ -1748,15 +1710,7 @@ object VectorQueries {
     val pool = scored.withColumn("crnk", row_number().over(wq))
       .filter(col("crnk") <= PqPool)
       .select("qid", "vec_id", "adist")
-    val rer = pool
-      .join(emb.select("vec_id", "embedding"), Seq("vec_id"))
-      .join(emb.select(col("vec_id").as("qid"),
-        col("embedding").as("qemb")), Seq("qid"))
-      .withColumn("cosine", r6(cosine(col("qemb"), col("embedding"))))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
-    rer.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
-      .select("qid", "vec_id", "adist", "cosine", "rnk")
+    rerank(pool, emb, "adist")
   }
 
   /** Residual-PQ index over the q158 coarse cells: `(book, codes)`
@@ -1790,7 +1744,7 @@ object VectorQueries {
     (cents, book, codes)
   }
 
-  /** q174: IVF-PQ ANN — the composition every production
+  /** IVF-PQ ANN (q174) — the composition every production
     * billion-vector index ships (FAISS `IVFx,PQy`): the q158 coarse
     * k-means cells PRUNE (a probe reads [[NProbe]] cells' codes
     * only — the scanned fraction falls as the corpus grows, q158's
@@ -1809,26 +1763,14 @@ object VectorQueries {
     * M lookups per member — no corpus-sized shuffle anywhere (codes
     * are pre-partitioned by cell; the ADC table broadcasts); the
     * re-rank is batch·pool rows. */
-  /** q174's ranked result pre-sort, memoized for the graders (q118/
-    * q172) — the annBrute pattern. */
-  private def annIvfPq(s: SparkSession, dir: String): DataFrame =
-    Shared.memoized(s, dir, "annIvfpq")(q174Body(s, dir))
+  private[graft] lazy val ivfpqLeg: AnnLeg =
+    AnnLeg("ivfpq", "annIvfpq", Seq("ivfpqCodes", "kmeans"), ivfpqBody,
+      TopKSelect(ivfPqSql))
 
-  def q174IvfPq(s: SparkSession, dir: String): DataFrame =
-    annIvfPq(s, dir).orderBy("qid", "rnk")
-
-  private def q174Body(s: SparkSession, dir: String): DataFrame = {
+  private def ivfpqBody(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val (cents, book, codes) = ivfPqIndex(s, dir)
-    val q = quantized(
-        emb.filter(col("vec_id") % 50 === 0 && col("vec_id") < QBatchMax))
-      .select(col("vec_id").as("qid"), col("qe"))
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("d",
-        graft.functions.VectorExpressions.l2q(col("qe"), col("c")))
-      .withColumn("crnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("d"), col("cl"))))
-      .filter(col("crnk") <= NProbe)
+    val probes = probeCells(quantizedQueries(emb), cents)
       .select(col("qid"), col("cl").as("cell"),
         zip_with(col("qe"), col("c"), (a, b) => a - b).as("qres"))
     val qsub = probes
@@ -1848,15 +1790,7 @@ object VectorQueries {
     val pool = scored.withColumn("crnk", row_number().over(wq))
       .filter(col("crnk") <= PqPool)
       .select("qid", "vec_id", "adist")
-    val rer = pool
-      .join(emb.select("vec_id", "embedding"), Seq("vec_id"))
-      .join(emb.select(col("vec_id").as("qid"),
-        col("embedding").as("qemb")), Seq("qid"))
-      .withColumn("cosine", r6(cosine(col("qemb"), col("embedding"))))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
-    rer.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
-      .select("qid", "vec_id", "adist", "cosine", "rnk")
+    rerank(pool, emb, "adist")
   }
 
   /** q164: PERSISTED ANN index — the build-once/serve-many lifecycle
@@ -1883,120 +1817,132 @@ object VectorQueries {
       .parquet(s"$root/assignments")
     val cents = s.read.parquet(s"$root/centroids")
     val loadedAsg = s.read.parquet(s"$root/assignments")
-    val q = quantized(
-        emb.filter(col("vec_id") % 50 === 0 && col("vec_id") < QBatchMax))
-      .select(col("vec_id").as("qid"), col("qe"))
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("d",
-        graft.functions.VectorExpressions.l2q(col("qe"), col("c")))
-      .withColumn("crnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("d"), col("cl"))))
-      .filter(col("crnk") <= NProbe)
+    rerank(probeCells(quantizedQueries(emb), cents)
       .select("qid", "cl")
-    val scored = probes
       .join(loadedAsg, Seq("cl"))
-      .filter(col("vec_id") =!= col("qid"))
-      .join(emb.select("vec_id", "embedding"), Seq("vec_id"))
-      .join(emb.select(col("vec_id").as("qid"),
-        col("embedding").as("qemb")), Seq("qid"))
-      .withColumn("cosine", r6(cosine(col("qemb"), col("embedding"))))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
-      .select("qid", "vec_id", "cosine", "rnk")
+      .filter(col("vec_id") =!= col("qid")), emb)
       .orderBy("qid", "rnk")
   }
 
+  /** Every ANN search leg, the truth first: the brute-force scan, then
+    * the approximate indexes in q172's output order. */
+  private[graft] lazy val annLegs: Seq[AnnLeg] =
+    Seq(bruteLeg, lshLeg, ivfLeg, ivfKmeansLeg, sq8Leg, pqLeg, ivfpqLeg,
+      mlshLeg) ++ mrlLegs
+
+  /** The legs served as standalone queries: the ranked result in
+    * (qid, rnk) order. */
+  private[graft] lazy val legQueries: Seq[(String, AnnLeg)] = Seq(
+    "q30_knn_brute" -> bruteLeg,
+    "q31_knn_lsh" -> lshLeg,
+    "q70_ivf_ann" -> ivfLeg,
+    "q158_ivf_kmeans" -> ivfKmeansLeg,
+    "q166_sq8_ann" -> sq8Leg,
+    "q173_pq_ann" -> pqLeg,
+    "q174_ivf_pq" -> ivfpqLeg)
+
+  /** The quality-report queries. */
+  private[graft] lazy val graders: Seq[(String, Grader)] = Seq(
+    "q118_ann_recall" -> annRecall,
+    "q172_retrieval_metrics" -> retrievalMetrics,
+    "q188_matryoshka_recall" -> matryoshkaRecall,
+    "q194_multiprobe_lsh" -> multiprobeRecall)
+
   val queries: Map[String, Q] = Map(
-    "q173_pq_ann" -> (q173PqAnn _),
-    "q174_ivf_pq" -> (q174IvfPq _),
     "q168_knn_graph" -> (q168KnnGraph _),
     "q169_embedding_profile" -> (q169EmbeddingProfile _),
     "q171_label_prop" -> (q171LabelProp _),
-    "q172_retrieval_metrics" -> (q172RetrievalMetrics _),
     "q170_embedding_drift" -> (q170EmbeddingDrift _),
-    "q166_sq8_ann" -> (q166Sq8Ann _),
     "q164_persisted_index" -> (q164PersistedIndex _),
     "q163_mmr_rerank" -> (q163MmrRerank _),
     "q162_embedding_dup_clusters" -> (q162EmbeddingDupClusters _),
     "q178_dbscan" -> (q178Dbscan _),
     "q180_pca_power" -> (q180PcaPower _),
     "q186_tombstone_serve" -> (q186TombstoneServe _),
-    "q188_matryoshka_recall" -> (q188MatryoshkaRecall _),
     "q191_contrastive_triplets" -> (q191ContrastiveTriplets _),
-    "q194_multiprobe_lsh" -> (q194MultiprobeLsh _),
     "q187_compaction_report" -> (q187CompactionReport _),
-    "q158_ivf_kmeans" -> (q158IvfKmeans _),
     "q116_incremental_ann" -> (q116IncrementalAnn _),
     "q106_semdedup" -> (q106SemDedup _),
     "q132_hard_negatives" -> (q132HardNegatives _),
-    "q30_knn_brute" -> (q30KnnBrute _),
-    "q31_knn_lsh" -> (q31KnnLsh _),
     "q32_label_centroids" -> (q32LabelCentroids _),
-    "q70_ivf_ann" -> (q70IvfAnn _),
     "q74_embedding_dups" -> (q74EmbeddingDups _),
-    "q118_ann_recall" -> (q118AnnRecall _),
-    "q82_kmeans" -> (q82Kmeans _))
+    "q82_kmeans" -> (q82Kmeans _)) ++
+    legQueries.map { case (q, leg) =>
+      q -> { (s: SparkSession, dir: String) =>
+        leg.result(s, dir).orderBy("qid", "rnk") } } ++
+    graders.map { case (q, g) => q -> (g.run _) }
 
   // ---- oracle SQL --------------------------------------------------
 
   private def r6Sql(e: String): String =
     s"CAST(round(($e)*1e6) AS BIGINT)/1e6"
 
-  /** The ten q172 method legs, in output order. */
-  private[graft] lazy val q172Methods: Seq[String] =
-    Seq("lsh", "ivf", "ivf_kmeans", "sq8", "pq", "ivfpq", "mlsh") ++
-      MrlDims.map(p => s"mrl$p")
+  /** The q172 method legs, in output order. */
+  private[graft] def q172Methods: Seq[String] =
+    retrievalMetrics.legs.map(_.method)
 
   /** Single-leg q172 oracle (round 12, verdict item 4): the full
     * metric computation for ONE method — truth chain + that leg's
-    * index chain only. The all-ten-chains replay exceeds this box's
-    * temp disk at sf3 (an IO bound, not a mismatch); replaying leg by
-    * leg materializes at most two index chains at a time, so the one
+    * index chain only. The all-legs replay exceeds ~20 GB of free
+    * temp disk at sf3 (an IO bound, not a mismatch); replaying leg by leg
+    * materializes at most two index chains at a time, so the one
     * unified quality artifact gets its own hash rows at scale via
-    * graft.tools.LegVerify + check_oracle. Metric SQL is textually
-    * the same aggregation as the main q172 oracle. */
+    * graft.tools.LegVerify + check_oracle. */
   private[graft] def q172LegOracle(method: String): String = {
-    val legSelect = method match {
-      case "lsh" =>
-        s"(WITH $lshCtes SELECT qid, vec_id, rnk FROM ranked WHERE rnk <= $K)"
-      case "ivf" =>
-        s"(WITH $ivfCtes SELECT qid, vec_id, rnk FROM ranked WHERE rnk <= $K)"
-      case "ivf_kmeans" => s"($ivfKmeansSql)"
-      case "sq8"        => s"($sq8Sql)"
-      case "pq"         => s"($pqSql)"
-      case "ivfpq"      => s"($ivfPqSql)"
-      case "mlsh" =>
-        s"(WITH $mlshCtes SELECT qid, vec_id, rnk FROM mranked WHERE rnk <= $K)"
-      case m if m.startsWith("mrl") => s"(${mrlTopKSql(m.drop(3).toInt)})"
-      case m => throw new IllegalArgumentException(s"unknown q172 leg $m")
-    }
-    s"""WITH truth AS (SELECT qid, vec_id FROM
-         (WITH $bruteCtes SELECT qid, vec_id FROM ranked WHERE rnk <= $K)),
-       leg AS (SELECT qid, vec_id, rnk FROM $legSelect),
-       m AS (SELECT '$method' AS method, a.qid, a.rnk,
-           CASE WHEN t.vec_id IS NOT NULL THEN 1 ELSE 0 END AS rel
-         FROM leg a LEFT JOIN truth t
-           ON t.qid = a.qid AND t.vec_id = a.vec_id),
-       g AS (SELECT method, qid,
-           CAST(count(*) AS BIGINT) AS k,
-           CAST(sum(rel) AS BIGINT) AS hits,
-           min(CASE WHEN rel = 1 THEN rnk END) AS first_rel,
-           CAST(sum(CASE WHEN rel = 1
-             THEN CAST(round(1e6 / log2(rnk + 1)) AS BIGINT)
-             ELSE 0 END) AS BIGINT) AS dcg_micro
-         FROM m GROUP BY 1, 2),
-       i AS (SELECT CAST(sum(CAST(round(1e6 / log2(t.range + 1))
-           AS BIGINT)) AS BIGINT) AS idcg FROM range(1, ${K + 1}) t)
-       SELECT method, qid, k, hits,
-         coalesce(CAST(1000 AS BIGINT) // first_rel, 0) AS mrr_milli,
-         dcg_micro * 1000000 // idcg AS ndcg_micro
-       FROM g CROSS JOIN i ORDER BY method, qid"""
+    val legs = retrievalMetrics.legs.filter(_.method == method)
+    require(legs.nonEmpty, s"unknown q172 leg $method")
+    metricsSql(legs)
   }
 
-  private val bruteCtes =
+  /** The brute-force truth `(qid, vec_id)` as a CTE, and each leg's
+    * top-K rows as one CTE per leg — the head every grader oracle
+    * shares. */
+  private def gradedCtes(legs: Seq[AnnLeg], cols: String): String =
+    (s"truth AS (SELECT qid, vec_id FROM (${bruteLeg.sql.topK}))" +:
+      legs.map(l => s"leg_${l.method} AS (SELECT $cols FROM (${l.sql.topK}))"))
+      .mkString(",\n         ")
+
+  /** [[recall]] in DuckDB: per (method, qid) the truth rows found. */
+  private def recallSql(legs: Seq[AnnLeg]): String =
+    s"""WITH ${gradedCtes(legs, "qid, vec_id")},
+         rec AS (
+           ${legs.map(l => s"""SELECT '${l.method}' AS method, t.qid,
+             CAST(count(*) AS BIGINT) AS k,
+             CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+               AS BIGINT) AS hits
+           FROM truth t LEFT JOIN leg_${l.method} a
+             ON t.qid = a.qid AND t.vec_id = a.vec_id
+           GROUP BY t.qid""").mkString("\n           UNION ALL\n           ")})
+         SELECT method, qid, k, hits, hits * 1000 // k AS recall_milli
+         FROM rec ORDER BY method, qid"""
+
+  /** [[rankMetrics]] in DuckDB: per (method, qid) hits, MRR and nDCG. */
+  private def metricsSql(legs: Seq[AnnLeg]): String =
+    s"""WITH ${gradedCtes(legs, "qid, vec_id, rnk")},
+         m AS (
+           ${legs.map(l => s"""SELECT '${l.method}' AS method, a.qid, a.rnk,
+             CASE WHEN t.vec_id IS NOT NULL THEN 1 ELSE 0 END AS rel
+           FROM leg_${l.method} a LEFT JOIN truth t
+             ON t.qid = a.qid AND t.vec_id = a.vec_id""")
+             .mkString("\n           UNION ALL\n           ")}),
+         g AS (SELECT method, qid,
+             CAST(count(*) AS BIGINT) AS k,
+             CAST(sum(rel) AS BIGINT) AS hits,
+             min(CASE WHEN rel = 1 THEN rnk END) AS first_rel,
+             CAST(sum(CASE WHEN rel = 1
+               THEN CAST(round(1e6 / log2(rnk + 1)) AS BIGINT)
+               ELSE 0 END) AS BIGINT) AS dcg_micro
+           FROM m GROUP BY 1, 2),
+         i AS (SELECT CAST(sum(CAST(round(1e6 / log2(t.range + 1))
+             AS BIGINT)) AS BIGINT) AS idcg FROM range(1, ${K + 1}) t)
+         SELECT method, qid, k, hits,
+           coalesce(CAST(1000 AS BIGINT) // first_rel, 0) AS mrr_milli,
+           dcg_micro * 1000000 // idcg AS ndcg_micro
+         FROM g CROSS JOIN i ORDER BY method, qid"""
+
+  private lazy val bruteCtes =
     s"""q AS (SELECT vec_id AS qid, embedding AS qemb
-         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < $QBatchMax),
+         FROM embeddings WHERE $QBatchSql),
        scored AS (SELECT qid, vec_id,
          ${r6Sql(sqlCosine("qemb", "embedding"))} AS cosine
          FROM embeddings CROSS JOIN q WHERE qid <> vec_id),
@@ -2019,10 +1965,10 @@ object VectorQueries {
          CAST(sum(bit * CAST(power(2, h % bits) AS BIGINT)) AS BIGINT) AS key
          FROM sbits GROUP BY vec_id, h // bits)"""
 
-  private val lshCtes =
+  private lazy val lshCtes =
     s"""$bucketsCtes,
        qb AS (SELECT vec_id AS qid, band, key FROM buckets
-         WHERE vec_id % 50 = 0 AND vec_id < $QBatchMax),
+         WHERE $QBatchSql),
        cand AS (SELECT DISTINCT qb.qid, b.vec_id
          FROM qb JOIN buckets b ON qb.band = b.band AND qb.key = b.key
          WHERE b.vec_id <> qb.qid),
@@ -2034,33 +1980,31 @@ object VectorQueries {
        ranked AS (SELECT *, row_number() OVER (PARTITION BY qid
          ORDER BY cosine DESC, vec_id) AS rnk FROM scored)"""
 
-  /** Multi-probe LSH ranked chain (ends in `mranked`, rnk unbounded) —
-    * the oracle replay of [[mlshResult]], shared by the q194 and q172
-    * oracles. */
+  /** Multi-probe LSH ranked chain — the oracle replay of
+    * [[mlshLeg]]. */
   private lazy val mlshCtes =
     s"""$bucketsCtes,
-       mqb AS (SELECT vec_id AS qid, band, key FROM buckets
-         WHERE vec_id % 50 = 0 AND vec_id < $QBatchMax),
-       mprobes AS (SELECT qid, band, key FROM mqb
+       qb AS (SELECT vec_id AS qid, band, key FROM buckets
+         WHERE $QBatchSql),
+       probes AS (SELECT qid, band, key FROM qb
          UNION ALL
          SELECT qid, band,
            CAST(xor(key, CAST(power(2, j.range) AS BIGINT)) AS BIGINT)
-         FROM mqb, range(0, $MaxBits) j, nb WHERE j.range < nb.bits),
-       mcand AS (SELECT DISTINCT p.qid, b.vec_id
-         FROM mprobes p JOIN buckets b
+         FROM qb, range(0, $MaxBits) j, nb WHERE j.range < nb.bits),
+       cand AS (SELECT DISTINCT p.qid, b.vec_id
+         FROM probes p JOIN buckets b
            ON p.band = b.band AND p.key = b.key
          WHERE b.vec_id <> p.qid),
-       mscored AS (SELECT mcand.qid, mcand.vec_id,
+       scored AS (SELECT cand.qid, cand.vec_id,
          ${r6Sql(sqlCosine("eq.embedding", "ev.embedding"))} AS cosine
-         FROM mcand
-         JOIN embeddings eq ON eq.vec_id = mcand.qid
-         JOIN embeddings ev ON ev.vec_id = mcand.vec_id),
-       mranked AS (SELECT *, row_number() OVER (PARTITION BY qid
-           ORDER BY cosine DESC, vec_id) AS rnk FROM mscored)"""
+         FROM cand
+         JOIN embeddings eq ON eq.vec_id = cand.qid
+         JOIN embeddings ev ON ev.vec_id = cand.vec_id),
+       ranked AS (SELECT *, row_number() OVER (PARTITION BY qid
+           ORDER BY cosine DESC, vec_id) AS rnk FROM scored)"""
 
   /** Matryoshka P-dim-prefix ranked top-K as a standalone subquery
-    * (qid, vec_id, rnk ≤ K) — the oracle replay of [[mrlResult]],
-    * shared by the q188 and q172 oracles. */
+    * (qid, vec_id, rnk ≤ K) — the oracle replay of [[mrlLegs]]. */
   private def mrlTopKSql(p: Int): String =
     s"""SELECT qid, vec_id, rnk FROM (
          SELECT q.qid, e.vec_id, row_number() OVER (PARTITION BY q.qid
@@ -2069,7 +2013,7 @@ object VectorQueries {
                s"list_slice(e.embedding, 1, $p)"))} DESC, e.vec_id)
            AS rnk
          FROM (SELECT vec_id AS qid FROM embeddings
-           WHERE vec_id % 50 = 0 AND vec_id < $QBatchMax) q
+           WHERE $QBatchSql) q
          JOIN embeddings eq ON eq.vec_id = q.qid
          CROSS JOIN embeddings e
          WHERE e.vec_id <> q.qid)
@@ -2091,8 +2035,8 @@ object VectorQueries {
        FROM a$n, range(1, ${Dim + 1}) t(i) GROUP BY cl, i),
      c$n AS (SELECT cl, list(v ORDER BY i) AS c FROM m$n GROUP BY cl)"""
 
-  /** The q166 SQ8 chain as a standalone SELECT, shared with the q118
-    * recall oracle (the q158/ivfKmeansSql precedent). */
+  /** The q166 SQ8 chain as a standalone SELECT — the replay of
+    * [[sq8Leg]]. */
   private lazy val sq8Sql: String =
     s"""WITH q AS (SELECT vec_id, list_transform(embedding,
            x -> CAST(round(CAST(x AS DOUBLE)*1e6) AS BIGINT) + 1000000)
@@ -2109,7 +2053,7 @@ object VectorQueries {
                    / (bl.hi[i] - bl.lo[i])) AS BIGINT) END) AS code
            FROM q CROSS JOIN bl),
          qc AS (SELECT vec_id AS qid, code AS qcode FROM coded
-           WHERE vec_id % 50 = 0 AND vec_id < $QBatchMax),
+           WHERE $QBatchSql),
          scored AS (SELECT qid, vec_id,
              CAST(list_sum(list_transform(range(1, ${Dim + 1}),
                i -> qcode[i] * code[i])) AS BIGINT) AS qdot,
@@ -2151,8 +2095,8 @@ object VectorQueries {
        FROM pa$n, range(1, ${PqDs + 1}) t(i) GROUP BY m, cl, i),
      pc$n AS (SELECT m, cl, list(v ORDER BY i) AS c FROM pm$n GROUP BY m, cl)"""
 
-  /** The q173 PQ-ADC chain as a standalone SELECT (the sq8Sql
-    * precedent, shared with the q118/q172 oracles): per-subspace
+  /** The q173 PQ-ADC chain as a standalone SELECT — the replay of
+    * [[pqLeg]]: per-subspace
     * codebooks (two Lloyd iterations + final integer-mean recompute =
     * `pc2`), corpus encoded by a third assignment pass (`pa3`), query
     * ADC tables against `pc2`, candidates = sum of M lookups, exact
@@ -2175,7 +2119,7 @@ object VectorQueries {
          ${pqIterSql(3, "pc2")},
          codes AS MATERIALIZED (SELECT vec_id, m, cl FROM pa3),
          qb AS (SELECT vec_id AS qid, m, sub AS qsub FROM sub
-           WHERE vec_id % 50 = 0 AND vec_id < $QBatchMax),
+           WHERE $QBatchSql),
          dtab AS (SELECT qid, c.m, c.cl,
              CAST(list_sum(list_transform(range(1, ${PqDs + 1}),
                i -> (qsub[i]-c.c[i])*(qsub[i]-c.c[i]))) AS BIGINT) AS d
@@ -2232,7 +2176,7 @@ object VectorQueries {
              pa3.cl AS pqcl, r.cell
            FROM pa3 JOIN res r ON r.vec_id = pa3.vec_id),
          qb AS (SELECT vec_id AS qid, qe FROM q
-           WHERE vec_id % 50 = 0 AND vec_id < $QBatchMax),
+           WHERE $QBatchSql),
          pdq AS (SELECT qid, cl, qe, c,
              CAST(list_sum(list_transform(range(1, ${Dim + 1}),
                i -> (qe[i]-c[i])*(qe[i]-c[i]))) AS BIGINT) AS d
@@ -2271,10 +2215,6 @@ object VectorQueries {
          WHERE rnk <= $K"""
 
   val oracles: Map[String, String] = Map(
-    "q173_pq_ann" ->
-      s"SELECT * FROM ($pqSql) ORDER BY qid, rnk",
-    "q174_ivf_pq" ->
-      s"SELECT * FROM ($ivfPqSql) ORDER BY qid, rnk",
     "q171_label_prop" ->
       s"""WITH $bucketsCtes,
          cand AS (SELECT DISTINCT b1.vec_id AS v1, b2.vec_id AS v2
@@ -2324,48 +2264,6 @@ object VectorQueries {
            coalesce(l2.lab = CAST(e.label AS BIGINT), false) AS correct
          FROM embeddings e JOIN l2 ON l2.vec_id = e.vec_id
          ORDER BY e.vec_id""",
-    "q172_retrieval_metrics" ->
-      s"""WITH truth AS (SELECT qid, vec_id FROM
-           (WITH $bruteCtes SELECT qid, vec_id FROM ranked WHERE rnk <= $K)),
-         lsh AS (SELECT qid, vec_id, rnk FROM
-           (WITH $lshCtes SELECT qid, vec_id, rnk FROM ranked WHERE rnk <= $K)),
-         ivf AS (SELECT qid, vec_id, rnk FROM
-           (WITH $ivfCtes SELECT qid, vec_id, rnk FROM ranked WHERE rnk <= $K)),
-         ivfk AS (SELECT qid, vec_id, rnk FROM ($ivfKmeansSql)),
-         sq8c AS (SELECT qid, vec_id, rnk FROM ($sq8Sql)),
-         pqc AS (SELECT qid, vec_id, rnk FROM ($pqSql)),
-         ivfpqc AS (SELECT qid, vec_id, rnk FROM ($ivfPqSql)),
-         mlshc AS (SELECT qid, vec_id, rnk FROM
-           (WITH $mlshCtes SELECT qid, vec_id, rnk FROM mranked
-            WHERE rnk <= $K)),
-         ${MrlDims.map(p =>
-            s"mrlc$p AS (SELECT qid, vec_id, rnk FROM (${mrlTopKSql(p)}))")
-            .mkString(",\n         ")},
-         m AS (
-           ${(Seq("lsh" -> "lsh", "ivf" -> "ivf", "ivf_kmeans" -> "ivfk",
-              "sq8" -> "sq8c", "pq" -> "pqc", "ivfpq" -> "ivfpqc",
-              "mlsh" -> "mlshc") ++
-              MrlDims.map(p => s"mrl$p" -> s"mrlc$p"))
-             .map { case (name, cte) =>
-               s"""SELECT '$name' AS method, a.qid, a.rnk,
-                 CASE WHEN t.vec_id IS NOT NULL THEN 1 ELSE 0 END AS rel
-               FROM $cte a LEFT JOIN truth t
-                 ON t.qid = a.qid AND t.vec_id = a.vec_id"""
-             }.mkString("\n           UNION ALL\n           ")}),
-         g AS (SELECT method, qid,
-             CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(rel) AS BIGINT) AS hits,
-             min(CASE WHEN rel = 1 THEN rnk END) AS first_rel,
-             CAST(sum(CASE WHEN rel = 1
-               THEN CAST(round(1e6 / log2(rnk + 1)) AS BIGINT)
-               ELSE 0 END) AS BIGINT) AS dcg_micro
-           FROM m GROUP BY 1, 2),
-         i AS (SELECT CAST(sum(CAST(round(1e6 / log2(t.range + 1))
-             AS BIGINT)) AS BIGINT) AS idcg FROM range(1, ${K + 1}) t)
-         SELECT method, qid, k, hits,
-           coalesce(CAST(1000 AS BIGINT) // first_rel, 0) AS mrr_milli,
-           dcg_micro * 1000000 // idcg AS ndcg_micro
-         FROM g CROSS JOIN i ORDER BY method, qid""",
     "q169_embedding_profile" ->
       s"""WITH q AS (SELECT vec_id, list_transform(embedding,
            x -> CAST(round(CAST(x AS DOUBLE)*1e6) AS BIGINT) + 1000000)
@@ -2446,14 +2344,10 @@ object VectorQueries {
              / ((base_n + 1) / (base_tot + n_cells))) * 1e6) AS BIGINT)
            AS psi_micro
        FROM hist CROSS JOIN tot ORDER BY cl""",
-    "q166_sq8_ann" ->
-      s"SELECT * FROM ($sq8Sql) ORDER BY qid, rnk",
-    "q158_ivf_kmeans" ->
-      s"SELECT * FROM ($ivfKmeansSql) ORDER BY qid, rnk",
     "q132_hard_negatives" ->
       s"""WITH q AS (SELECT vec_id AS qid, embedding AS qemb,
            label AS qlabel
-           FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < $QBatchMax),
+           FROM embeddings WHERE $QBatchSql),
          scored AS (SELECT qid, qlabel, vec_id, label AS neg_label,
            ${r6Sql(sqlCosine("qemb", "embedding"))} AS cosine
            FROM embeddings CROSS JOIN q WHERE label <> qlabel),
@@ -2527,14 +2421,6 @@ object VectorQueries {
        FROM (SELECT cl, count(*) AS n_vecs, min(vec_id) AS min_vec_id,
            max(vec_id) AS max_vec_id FROM a2 GROUP BY cl) g
        JOIN ssq USING (cl) ORDER BY cl""",
-    "q30_knn_brute" ->
-      s"""WITH $bruteCtes
-         SELECT qid, vec_id, cosine, rnk FROM ranked
-         WHERE rnk <= $K ORDER BY qid, rnk""",
-    "q31_knn_lsh" ->
-      s"""WITH $lshCtes
-         SELECT qid, vec_id, cosine, rnk FROM ranked
-         WHERE rnk <= $K ORDER BY qid, rnk""",
     "q32_label_centroids" ->
       s"""SELECT label, i AS pos,
          ${r6Sql(s"CAST(sum(CAST(round(CAST(embedding[i+1] AS DOUBLE)*1e6) AS BIGINT)) AS BIGINT)/1e6 / count(*)")} AS centroid,
@@ -2548,32 +2434,6 @@ object VectorQueries {
     "q163_mmr_rerank" -> mmrSql,
     "q186_tombstone_serve" ->
       s"SELECT * FROM ($tombstoneServeSql) ORDER BY qid, rnk",
-    "q194_multiprobe_lsh" ->
-      s"""WITH $mlshCtes,
-         mres AS (SELECT qid, vec_id FROM mranked WHERE rnk <= $K),
-         truth AS (SELECT qid, vec_id FROM
-           (WITH $bruteCtes SELECT qid, vec_id FROM ranked
-            WHERE rnk <= $K)),
-         plainres AS (SELECT qid, vec_id FROM
-           (WITH $lshCtes SELECT qid, vec_id FROM ranked
-            WHERE rnk <= $K)),
-         rec AS (
-           SELECT 'lsh' AS method, t.qid,
-             CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS hits
-           FROM truth t LEFT JOIN plainres a
-             ON t.qid = a.qid AND t.vec_id = a.vec_id
-           GROUP BY t.qid
-           UNION ALL
-           SELECT 'mlsh', t.qid, CAST(count(*) AS BIGINT),
-             CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-               AS BIGINT)
-           FROM truth t LEFT JOIN mres a
-             ON t.qid = a.qid AND t.vec_id = a.vec_id
-           GROUP BY t.qid)
-         SELECT method, qid, k, hits, hits * 1000 // k AS recall_milli
-         FROM rec ORDER BY method, qid""",
     "q191_contrastive_triplets" -> {
       def top1Sql(cond: String, alias: String): String =
         s"""$alias AS (SELECT qid, qlabel, vec_id, cosine FROM (
@@ -2583,7 +2443,7 @@ object VectorQueries {
                  ${r6Sql(sqlCosine("eq.embedding", "e.embedding"))} DESC,
                  e.vec_id) AS rnk
              FROM (SELECT vec_id AS qid, label AS qlabel FROM embeddings
-               WHERE vec_id % 50 = 0 AND vec_id < $QBatchMax) q
+               WHERE $QBatchSql) q
              JOIN embeddings eq ON eq.vec_id = q.qid
              CROSS JOIN embeddings e
              WHERE e.vec_id <> q.qid AND e.label $cond q.qlabel)
@@ -2596,22 +2456,6 @@ object VectorQueries {
              AS margin_micro
          FROM pos p JOIN neg n ON n.qid = p.qid
          ORDER BY p.qid"""
-    },
-    "q188_matryoshka_recall" -> {
-      def legSql(p: Int): String =
-        s"""SELECT 'mrl$p' AS method, t.qid,
-             CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS hits
-           FROM truth t LEFT JOIN (${mrlTopKSql(p)}) a
-             ON t.qid = a.qid AND t.vec_id = a.vec_id
-           GROUP BY t.qid"""
-      s"""WITH truth AS (SELECT qid, vec_id FROM
-           (WITH $bruteCtes SELECT qid, vec_id FROM ranked
-            WHERE rnk <= $K)),
-         rec AS (${MrlDims.map(legSql).mkString(" UNION ALL ")})
-         SELECT method, qid, k, hits, hits * 1000 // k AS recall_milli
-         FROM rec ORDER BY method, qid"""
     },
     "q187_compaction_report" ->
       s"""WITH q AS (SELECT vec_id, list_transform(embedding,
@@ -2758,72 +2602,9 @@ object VectorQueries {
            JOIN embeddings e1 ON e1.vec_id = v1
            JOIN embeddings e2 ON e2.vec_id = v2)
          SELECT v1, v2, cosine FROM scored
-         WHERE cosine >= $MinDupCosine ORDER BY v1, v2""",
-    "q70_ivf_ann" ->
-      s"""WITH $ivfCtes
-         SELECT qid, vec_id, cosine, rnk FROM ranked
-         WHERE rnk <= $K ORDER BY qid, rnk""",
-    "q118_ann_recall" ->
-      s"""WITH truth AS (SELECT qid, vec_id FROM
-           (WITH $bruteCtes SELECT qid, vec_id FROM ranked WHERE rnk <= $K)),
-         lsh AS (SELECT qid, vec_id FROM
-           (WITH $lshCtes SELECT qid, vec_id FROM ranked WHERE rnk <= $K)),
-         ivf AS (SELECT qid, vec_id FROM
-           (WITH $ivfCtes SELECT qid, vec_id FROM ranked WHERE rnk <= $K)),
-         ivfk AS (SELECT qid, vec_id FROM ($ivfKmeansSql)),
-         sq8c AS (SELECT qid, vec_id FROM ($sq8Sql)),
-         pqc AS (SELECT qid, vec_id FROM ($pqSql)),
-         ivfpqc AS (SELECT qid, vec_id FROM ($ivfPqSql)),
-         rec AS (
-           SELECT 'lsh' AS method, t.qid,
-             CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS hits
-           FROM truth t LEFT JOIN lsh a
-             ON t.qid = a.qid AND t.vec_id = a.vec_id
-           GROUP BY t.qid
-           UNION ALL
-           SELECT 'ivf' AS method, t.qid,
-             CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS hits
-           FROM truth t LEFT JOIN ivf a
-             ON t.qid = a.qid AND t.vec_id = a.vec_id
-           GROUP BY t.qid
-           UNION ALL
-           SELECT 'ivf_kmeans' AS method, t.qid,
-             CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS hits
-           FROM truth t LEFT JOIN ivfk a
-             ON t.qid = a.qid AND t.vec_id = a.vec_id
-           GROUP BY t.qid
-           UNION ALL
-           SELECT 'sq8' AS method, t.qid,
-             CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS hits
-           FROM truth t LEFT JOIN sq8c a
-             ON t.qid = a.qid AND t.vec_id = a.vec_id
-           GROUP BY t.qid
-           UNION ALL
-           SELECT 'pq' AS method, t.qid,
-             CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS hits
-           FROM truth t LEFT JOIN pqc a
-             ON t.qid = a.qid AND t.vec_id = a.vec_id
-           GROUP BY t.qid
-           UNION ALL
-           SELECT 'ivfpq' AS method, t.qid,
-             CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS hits
-           FROM truth t LEFT JOIN ivfpqc a
-             ON t.qid = a.qid AND t.vec_id = a.vec_id
-           GROUP BY t.qid)
-         SELECT method, qid, k, hits, hits * 1000 // k AS recall_milli
-         FROM rec ORDER BY method, qid""")
+         WHERE cosine >= $MinDupCosine ORDER BY v1, v2""") ++
+    legQueries.map { case (q, leg) => q -> leg.sql.ordered } ++
+    graders.map { case (q, g) => q -> g.sql }
 
   /** The q163 MMR oracle: the brute top-[[MmrPool]] pool and its
     * pairwise sim matrix, then the [[MmrK]]-round greedy selection
@@ -2874,8 +2655,8 @@ object VectorQueries {
   }
 
   /** The complete q158 content-derived IVF search as a standalone
-    * (unordered) SELECT — the "q158_ivf_kmeans" oracle body and the
-    * q118 recall evaluation's third leg. */
+    * (unordered) SELECT — the replay of [[ivfKmeansLeg]], and q164's
+    * oracle body. */
   private lazy val ivfKmeansSql: String =
     s"""WITH q AS (SELECT vec_id, list_transform(embedding,
            x -> CAST(round(CAST(x AS DOUBLE)*1e6) AS BIGINT) + 1000000) AS qe
@@ -2887,7 +2668,7 @@ object VectorQueries {
        ${kmeansIterSql(1, "c0")},
        ${kmeansIterSql(2, "c1")},
        qb AS (SELECT vec_id AS qid, qe FROM q
-         WHERE vec_id % 50 = 0 AND vec_id < $QBatchMax),
+         WHERE $QBatchSql),
        pd AS (SELECT qid, cl,
            CAST(list_sum(list_transform(range(1, ${Dim + 1}),
              i -> (qe[i]-c[i])*(qe[i]-c[i]))) AS BIGINT) AS d
@@ -2921,7 +2702,7 @@ object VectorQueries {
        ${kmeansIterSql(1, "c0")},
        ${kmeansIterSql(2, "c1")},
        qb AS (SELECT vec_id AS qid, qe FROM q
-         WHERE vec_id % 50 = 0 AND vec_id < $QBatchMax),
+         WHERE $QBatchSql),
        pd AS (SELECT qid, cl,
            CAST(list_sum(list_transform(range(1, ${Dim + 1}),
              i -> (qe[i]-c[i])*(qe[i]-c[i]))) AS BIGINT) AS d
@@ -2942,9 +2723,8 @@ object VectorQueries {
        SELECT qid, vec_id, cosine, rnk FROM ranked
        WHERE rnk <= $K"""
 
-  /** The q70 IVF search as a reusable CTE chain ending in
-    * `ranked(qid, vec_id, cosine, rnk)` — shared with the q118 recall
-    * evaluation. */
+  /** The q70 IVF search as a CTE chain ending in
+    * `ranked(qid, vec_id, cosine, rnk)` — the replay of [[ivfLeg]]. */
   private lazy val ivfCtes =
     s"""comp AS (SELECT label, i AS pos,
            ${r6Sql(s"CAST(sum(CAST(round(CAST(embedding[i+1] AS DOUBLE)*1e6) AS BIGINT)) AS BIGINT)/1e6 / count(*)")} AS c
@@ -2953,7 +2733,7 @@ object VectorQueries {
          cents AS (SELECT label, list(c ORDER BY pos) AS centroid
            FROM comp GROUP BY label),
          q AS (SELECT vec_id AS qid, embedding AS qemb
-           FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < $QBatchMax),
+           FROM embeddings WHERE $QBatchSql),
          probes0 AS (SELECT qid, qemb, label,
            ${r6Sql(sqlCosine("qemb", "centroid"))} AS ccos
            FROM q CROSS JOIN cents),

@@ -9,7 +9,7 @@ import graft.queries.VectorQueries
 
 /** Per-leg scale verification of q172's unified retrieval-metrics
   * artifact (round 12, verdict item 4). The full q172 DuckDB replay
-  * materializes all ten index chains at once and exceeds this box's
+  * materializes every index chain at once and exceeds ~20 GB of free
   * temp disk at sf3; this tool dumps the SAME Spark result split per
   * method (`q172_leg_<m>` parquet each) plus a per-leg oracle_sql.json
   * where each leg's SQL carries only the truth chain + that one index
@@ -29,7 +29,7 @@ object LegVerify {
       .filter(m => only.isEmpty || only(m))
     // ONE evaluation of the unified artifact; legs split from it so
     // the verified rows are exactly the rows q172 itself returns
-    val full = VectorQueries.q172RetrievalMetrics(spark, sfDir)
+    val full = VectorQueries.retrievalMetrics.run(spark, sfDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     methods.foreach { m =>
       full.filter(col("method") === m)

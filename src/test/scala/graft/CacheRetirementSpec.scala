@@ -132,7 +132,8 @@ class CacheRetirementSpec extends AnyFunSuite {
       "q14_entity_scores", "q19_score_pivot", "q20_weight_grid",
       "q43_total_score", "q44_pair_dedup")).map(_._1)
     assert(built.contains("pairScores2"))
-    val kChains = Set("pairScores3", "pairScores6", "k3walk", "k6walk")
+    val kChains = graft.queries.MatchingQueries.trainingChains
+      .flatMap(c => Seq(c.scoresKey, c.walkKey)).toSet
     assert(built.filter(kChains).isEmpty, s"built: $built")
   }
 

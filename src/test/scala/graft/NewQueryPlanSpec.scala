@@ -347,7 +347,7 @@ class NewQueryPlanSpec extends AnyFunSuite {
     // memo builds legitimately hash on doc1 alone (the pinned layout),
     // so the assertion keys on a point column and doc1 TOGETHER
     for (df <- Seq(queries.MatchingQueries.q20WeightGrid(spark, sf),
-                   queries.MatchingQueries.q159WeightGridK3(spark, sf))) {
+                   queries.MatchingQueries.k3Chain.grid(spark, sf))) {
       val plan = executed(df)
       assert("hashpartitioning\\((weight_id|n1)[^)]*doc1".r
           .findFirstIn(plan).isEmpty,
@@ -530,7 +530,7 @@ class NewQueryPlanSpec extends AnyFunSuite {
   }
 
   test("q158: k-means centroids broadcast; probed cells join keyed on cl") {
-    val plan = executed(queries.VectorQueries.q158IvfKmeans(spark, sf))
+    val plan = executed(SparkEntry.queries("q158_ivf_kmeans")(spark, sf))
     assert(!plan.contains("CartesianProduct"),
       s"q158 must not plan a non-broadcast cartesian:\n$plan")
     assert(plan.contains("BroadcastNestedLoopJoin") ||
@@ -554,7 +554,7 @@ class NewQueryPlanSpec extends AnyFunSuite {
   }
 
   test("q159: simplex grid broadcasts; one distributed pass (window + combinable agg)") {
-    val plan = executed(queries.MatchingQueries.q159WeightGridK3(spark, sf))
+    val plan = executed(queries.MatchingQueries.k3Chain.grid(spark, sf))
     assert(!plan.contains("CartesianProduct"),
       s"q159's grid cross must broadcast, never cartesian:\n$plan")
     assert(plan.contains("BroadcastNestedLoopJoin") ||
@@ -637,8 +637,8 @@ class NewQueryPlanSpec extends AnyFunSuite {
     // more, and nothing cartesians.
     def joins(p: String): Int = finalPlan(p).sliding(4).count(_ == "Join")
     val pairPlan = executed(
-      queries.MatchingQueries.weightPairScores3(spark, sf))
-    val plan = executed(queries.MatchingQueries.q161TrainedTotal(spark, sf))
+      queries.MatchingQueries.k3Chain.pairScores(spark, sf))
+    val plan = executed(queries.MatchingQueries.k3Chain.serve(spark, sf))
     assert(!plan.contains("CartesianProduct"),
       s"q161 serving must not cartesian:\n$plan")
     assert(joins(plan) == joins(pairPlan),
@@ -699,7 +699,7 @@ class NewQueryPlanSpec extends AnyFunSuite {
   }
 
   test("q166: per-dim bounds combine map-side and broadcast; codes never shuffle") {
-    val plan = executed(queries.VectorQueries.q166Sq8Ann(spark, sf))
+    val plan = executed(SparkEntry.queries("q166_sq8_ann")(spark, sf))
     assert(!plan.contains("CartesianProduct"),
       s"q166's bounds/batch joins must broadcast, never cartesian:\n$plan")
     assert(plan.contains("BroadcastNestedLoopJoin") ||
@@ -737,7 +737,7 @@ class NewQueryPlanSpec extends AnyFunSuite {
   }
 
   test("q172: metric roll-up is one combinable agg per method over batch-sized lists") {
-    val plan = executed(queries.VectorQueries.q172RetrievalMetrics(spark, sf))
+    val plan = executed(SparkEntry.queries("q172_retrieval_metrics")(spark, sf))
     assert(!plan.contains("CartesianProduct"),
       s"q172's truth joins must stay keyed or broadcast:\n$plan")
     assert(plan.contains("partial_sum") && plan.contains("partial_min"),
@@ -745,7 +745,7 @@ class NewQueryPlanSpec extends AnyFunSuite {
   }
 
   test("q173: codebook and ADC tables broadcast; candidate sum combines map-side") {
-    val plan = executed(queries.VectorQueries.q173PqAnn(spark, sf))
+    val plan = executed(SparkEntry.queries("q173_pq_ann")(spark, sf))
     assert(!plan.contains("CartesianProduct"),
       s"q173's codebook/ADC joins must broadcast, never cartesian:\n$plan")
     assert(plan.contains("BroadcastHashJoin"),
@@ -757,7 +757,7 @@ class NewQueryPlanSpec extends AnyFunSuite {
   }
 
   test("q174: probes prune to NProbe cells; ADC join keyed on (cell, m, code)") {
-    val plan = executed(queries.VectorQueries.q174IvfPq(spark, sf))
+    val plan = executed(SparkEntry.queries("q174_ivf_pq")(spark, sf))
     assert(!plan.contains("CartesianProduct"),
       s"q174's centroid/codebook/ADC joins must broadcast, never cartesian:\n$plan")
     assert(plan.contains("BroadcastHashJoin"),
@@ -921,7 +921,7 @@ class NewQueryPlanSpec extends AnyFunSuite {
   }
 
   test("q188: matryoshka recall — query batch broadcast, grading is batch-sized joins") {
-    val plan = executed(queries.VectorQueries.q188MatryoshkaRecall(spark, sf))
+    val plan = executed(SparkEntry.queries("q188_matryoshka_recall")(spark, sf))
     assert(plan.contains("BroadcastNestedLoopJoin") ||
       plan.contains("BroadcastHashJoin"),
       s"q188's query batches must broadcast against the corpus scan:\n$plan")
@@ -963,7 +963,7 @@ class NewQueryPlanSpec extends AnyFunSuite {
   }
 
   test("q194: multi-probe — bucketed candidate join, broadcast grading") {
-    val plan = executed(queries.VectorQueries.q194MultiprobeLsh(spark, sf))
+    val plan = executed(SparkEntry.queries("q194_multiprobe_lsh")(spark, sf))
     assert(!plan.contains("CartesianProduct"),
       s"q194's probe join must stay (band,key)-bucketed:\n$plan")
     assert(plan.contains("partial_count") || plan.contains("partial_sum"),

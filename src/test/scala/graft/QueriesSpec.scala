@@ -75,6 +75,30 @@ class QueriesSpec extends AnyFunSuite {
       s"queries without oracle SQL: ${missing.mkString(", ")}")
   }
 
+  test("each grader's output methods are exactly its declared leg list") {
+    // the union each grader runs is derived from its leg rows: a leg
+    // missing from (or added to) the output would drift from the
+    // SweepOrder family rows that are derived from the same list
+    queries.VectorQueries.graders.foreach { case (name, g) =>
+      val got = SparkEntry.queries(name)(spark, sf)
+        .select("method").distinct().collect().map(_.getString(0)).toSet
+      assert(got === g.legs.map(_.method).toSet, s"$name methods")
+    }
+    queries.Shared.clear()
+  }
+
+  test("every query name is spelled `\"name\" ->` in the query sources") {
+    // perfbench/run.py finds the full query names with this pattern,
+    // so a name only ever built at run time is invisible to it
+    val dir = new java.io.File("src/main/scala/graft/queries")
+    val spelled = dir.listFiles.toSeq.flatMap { f =>
+      "\"(q\\d+_[a-z0-9_]+)\"\\s*->".r
+        .findAllMatchIn(java.nio.file.Files.readString(f.toPath)).map(_.group(1))
+    }.toSet
+    val hidden = SparkEntry.queries.keySet -- spelled
+    assert(hidden.isEmpty, s"names perfbench cannot find: $hidden")
+  }
+
   test("entry() flagship returns ranked proposal-publication matches") {
     val df = SparkEntry.entry(spark)
     assert(df.count() > 0)

@@ -137,6 +137,35 @@ class SweepOrderSpec extends AnyFunSuite {
     assert(clashes.isEmpty, s"family prefixes overlap: $clashes")
   }
 
+  test("the ANN-leg and training-chain tables are well formed") {
+    import graft.queries.{MatchingQueries, VectorQueries}
+    val legs = VectorQueries.annLegs
+    val known = SparkEntry.queries.keySet
+    def unique[A](xs: Seq[A]) = xs.distinct == xs
+    assert(unique(legs.map(_.method)), "a method label is declared twice")
+    assert(unique(legs.map(_.key)), "a memo key is declared twice")
+    // legs sharing a prefix are one family: parameterized, same parents
+    legs.groupBy(_.prefix).foreach { case (p, rows) =>
+      assert(rows.size == 1 || rows.forall(_.param.nonEmpty),
+        s"unparameterized legs share the prefix $p")
+      assert(rows.map(_.parents).distinct.size === 1, s"$p parents differ")
+    }
+    val named = (VectorQueries.legQueries ++ VectorQueries.graders).map(_._1)
+    assert(unique(named), "a query is named twice")
+    assert(named.toSet.subsetOf(known),
+      s"the tables name unknown queries: ${named.toSet -- known}")
+    assert(VectorQueries.legQueries.forall { case (_, l) => legs.contains(l) })
+    VectorQueries.graders.foreach { case (name, g) =>
+      assert(g.legs.nonEmpty && g.legs.toSet.subsetOf(legs.toSet),
+        s"$name's legs are not a non-empty subset of the rows")
+    }
+    val chains = MatchingQueries.trainingChains
+    assert(unique(chains.map(_.k)), "two chains share a k")
+    val chainQs = chains.flatMap(_.queries)
+    assert(unique(chainQs) && chainQs.toSet.subsetOf(known),
+      s"chain queries: $chainQs")
+  }
+
   test("clustered order is a permutation of its input") {
     val names = SparkEntry.queries.keys.toSeq.sorted
     val ordered = SweepOrder.sort(names.map(_ -> ())).map(_._1)

@@ -21,6 +21,21 @@ class TablesSpec extends AnyFunSuite {
     assert(held.exists(_ eq spark) && held.exists(_ eq other))
   }
 
+  test("every table's leading column is a usable hash-repartition key") {
+    // Tables.apply hash-repartitions a small-file scan on its leading
+    // column: a low-cardinality one would leave most partitions empty
+    // and serialize the scan again. lineitem's l_orderkey (about 4
+    // rows per key) is the tightest; every other table is unique on it.
+    import org.apache.spark.sql.functions.{col, count, countDistinct, lit}
+    Tables.names.foreach { name =>
+      val df = Tables(spark, sf, name)
+      val r = df.agg(count(lit(1)), countDistinct(col(df.columns.head))).head
+      val (rows, keys) = (r.getLong(0), r.getLong(1))
+      assert(rows > 0 && keys * 8 >= rows,
+        s"$name.${df.columns.head}: $keys distinct over $rows rows")
+    }
+  }
+
   test("a stopped session's scan entry is dropped") {
     // stopping a session stops its SparkContext, which the other specs
     // share — so the check runs in a child JVM on the same classpath

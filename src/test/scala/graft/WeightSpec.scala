@@ -47,7 +47,7 @@ class WeightSpec extends AnyFunSuite {
   }
 
   test("q160 3-type refinement: non-increasing error, simplex invariant, deterministic") {
-    def run() = MatchingQueries.q160WeightRefineK3(spark, sf).collect()
+    def run() = MatchingQueries.k3Chain.refine(spark, sf).collect()
       .map(r => (r.getAs[Int]("round"),
         Seq(r.getAs[Long]("n1"), r.getAs[Long]("n2"), r.getAs[Long]("n3")),
         Seq(r.getAs[Double]("w1"), r.getAs[Double]("w2"), r.getAs[Double]("w3")),
