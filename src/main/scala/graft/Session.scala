@@ -26,8 +26,8 @@ object Session {
       // bytes against lz4 for CPU the IO-waiting cores absorb
       .config("spark.io.compression.codec", "zstd")
       // subset-key co-partitioning: the match chain is cached
-      // hash-partitioned by doc1, and its (doc1, doc2) joins (e.g. the
-      // pivot's full outer) are exchange-free only when
+      // hash-partitioned by doc1, and its (doc1, doc2) joins are
+      // exchange-free only when
       // co-partitioning accepts a subset of the join keys, the rule
       // aggregations and windows already use. It only decides which
       // exchanges ENSURE_REQUIREMENTS inserts; results are unchanged.

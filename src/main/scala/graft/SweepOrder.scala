@@ -57,22 +57,16 @@ object SweepOrder {
     * declare, and on one prefix starting another (a release would
     * drop the live sibling). */
   val families: Seq[Family] = Seq(
-    Family("partCands", Match, Nil, Set("q13_entity_candidates")),
-    Family("partSuppScores", Match, Nil, Set("q17_multitype_filter",
-      "q43_total_score", "q94_matcher_pipeline")),
-    Family("partScores", Match, Seq("partCands"), Set("q14_entity_scores",
+    // both entity types' candidates; q13 alone reads them, so it opens
+    // the match cluster and the biggest frame releases right after it
+    Family("matchCands", Match, Nil, Set("q13_entity_candidates")),
+    Family("matchScores", Match, Seq("matchCands"), Set("q14_entity_scores",
       "q15_type_filter", "q16_date_filter", "q17_multitype_filter",
-      "q18_match_stats", "q43_total_score", "q44_pair_dedup",
-      "q71_rank_eval", "q94_matcher_pipeline")),
-    // q20/q72 consume the memoized pairScores2 INTERSECTION since
-    // round 16, leaving q19 as the pivot's only consumer — so the
-    // ~25 GiB (sf10) frame releases at the cluster's start instead of
-    // sitting resident until q72
-    Family("pivotedScores", Match, Seq("partScores", "partSuppScores"),
-      Set("q19_score_pivot")),
+      "q18_match_stats", "q19_score_pivot", "q43_total_score",
+      "q44_pair_dedup", "q71_rank_eval", "q94_matcher_pipeline")),
     // every training-chain query may build its chain's table from it
     // (small to hold)
-    Family("pairScores2", Match, Seq("pivotedScores"), Set("q20_weight_grid",
+    Family("pairScores2", Match, Seq("matchScores"), Set("q20_weight_grid",
       "q72_weight_refine") ++ MatchingQueries.trainingChains.flatMap(_.queries)),
     Family("dupPairs", Text, Nil, Set("q105_survivorship",
       "q111_curation_report", "q123_split_leakage", "q129_triangles",
@@ -160,7 +154,7 @@ object SweepOrder {
   def group(name: String): Int = queryGroup.getOrElse(name, 4)
 
   /** Derivation depth of a memo family — how long the rebuild chain
-    * under it is: partCands 0, partScores 1, pivotedScores 2, …
+    * under it is: matchCands 0, matchScores 1, pairScores2 2, …
     * Deeper chain = costlier rebuild class, without hand-coding
     * per-family sizes here. */
   private def chainDepth(f: Family): Int =
@@ -172,13 +166,12 @@ object SweepOrder {
     * [[families]], not hand-picked (VERDICT r16 item 1): a family with
     * exactly one consumer should have that consumer OPEN its cluster,
     * so the scheduler releases the frame after the very first query
-    * instead of holding it resident across the whole cluster — at sf10
-    * the ~25 GiB pivotedScores plus the score tables together exceed a
-    * 40 GiB budget, and in numeric order that residency forced the one
-    * round-15 eviction. Deeper-chain (costlier-rebuild-class) openers
-    * run first, so q19 opens the match cluster as a CONSEQUENCE; the
-    * next big single-consumer frame gets the release-early treatment
-    * automatically when its row lands in [[families]]. */
+    * instead of holding it resident across the whole cluster — q13
+    * opens the match cluster because it alone reads the candidate
+    * frame, the biggest one. Deeper-chain (costlier-rebuild-class)
+    * openers run first; the next big single-consumer frame gets the
+    * release-early treatment automatically when its row lands in
+    * [[families]]. */
   private[graft] val openerDepth: Map[String, Int] = families
     .collect { case f if f.consumers.size == 1 => f.consumers.head -> chainDepth(f) }
     .groupMapReduce(_._1)(_._2)(math.max)
@@ -198,14 +191,26 @@ object SweepOrder {
   def sort[T](qs: Seq[(String, T)]): Seq[(String, T)] =
     qs.sortBy { case (n, _) => key(n) }
 
+  /** Families built from `f`, transitively. */
+  private def derived(f: Family): Seq[Family] =
+    families.filter(_.parents.contains(f.prefix)).flatMap(c => c +: derived(c))
+
   /** index → memo-key prefixes whose last consumer in `order` sits at
     * that index: the sweep releases them right after running it
-    * ([[graft.queries.Shared.releaseMemo]]). */
-  def releaseSchedule(order: Seq[String]): Map[Int, Seq[String]] = {
+    * ([[graft.queries.Shared.releaseMemo]]). Without the staged warm
+    * (`warmed = false`), any family may be built at its first
+    * consumer, which reads its parents then: so a family is held until
+    * the last consumer of every family derived from it too, or a
+    * subset run would rebuild a released parent (q14 building
+    * matchScores after q13 released matchCands). */
+  def releaseSchedule(order: Seq[String],
+                      warmed: Boolean = true): Map[Int, Seq[String]] = {
     val idx = order.zipWithIndex.toMap
     families
       .flatMap { f =>
-        val hits = f.consumers.flatMap(idx.get)
+        val readers = if (warmed) f.consumers
+          else f.consumers ++ derived(f).flatMap(_.consumers)
+        val hits = readers.flatMap(idx.get)
         if (hits.isEmpty) None else Some(f.prefix -> hits.max)
       }
       .groupBy(_._2).view.mapValues(_.map(_._1).sorted).toMap
@@ -228,7 +233,9 @@ object SweepOrder {
     * the query's frame builder, and the cache retirement: the query's
     * transients and every family whose last consumer it was. Subset
     * runs skip warm and GC, so a replayed query builds only what it
-    * reads and carries no pause production queries never see. A
+    * reads and carries no pause production queries never see; they
+    * hold each family until the last reader of any family built from
+    * it ([[releaseSchedule]] unwarmed). A
     * failed warm degrades to lazy builds; a failed query
     * is recorded and the sweep goes on. Both print their cause on
     * stderr after `log`. */
@@ -238,7 +245,7 @@ object SweepOrder {
               (action: (String, () => DataFrame) => R): Swept[R] = {
     def cause(e: Throwable) = s"${e.getClass.getName}: ${e.getMessage}"
     val order = sort(qs)
-    val releaseAt = releaseSchedule(order.map(_._1))
+    val releaseAt = releaseSchedule(order.map(_._1), warmed = full)
     var warmSec = 0.0
     var warmOk = true
     var prevGroup = -1

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.expressions.Window
 import graft.functions.Exact
 
 /** TF-IDF entity-overlap candidate generation and scoring.
@@ -17,14 +18,20 @@ import graft.functions.Exact
   * The *implementation* is deliberately not the reference's: instead of
   * `groupBy(collect_list(struct))` followed by `explode` on both join
   * sides (which materialises postings arrays only to immediately
-  * re-flatten them), we keep everything as flat relations and let
-  * Catalyst plan plain shuffled equi-joins on `entity_id`. At cluster
-  * scale the only shuffles are: one hash-aggregate per grouping key and
-  * one shuffle of the postings relation on `entity_id` reused by both
-  * sides of the self-join (Spark reuses the exchange). Skew is bounded
-  * by the frequency guards, which are *semantic* (the reference applies
-  * them too, `EntitiesMatcherV2.scala:45-53`): a hot entity shared by
-  * f docs would otherwise emit f² pairs.
+  * re-flatten them), the postings stay one flat relation. Every
+  * per-entity statistic (tf, raw frequency, df, the guards, idf) is a
+  * window over ONE entity-partitioned tf frame and the per-document
+  * entity count a window over the same rows re-partitioned by
+  * document, so the input is scanned once and each key is shuffled
+  * once before the self-join on `entity_id`. Skew is bounded by the
+  * frequency guards, which are *semantic* (the reference applies them
+  * too, `EntitiesMatcherV2.scala:45-53`): a hot entity shared by f docs
+  * would otherwise emit f² pairs.
+  *
+  * Optional tag columns (`by`) match several entity types in one plan:
+  * each tag is matched on its own, exactly as if the input were split
+  * per tag and each part run untagged, the tag columns leading the
+  * output.
   *
   * IDF is quantized to integer micro-units (`idf_micro`) so pair-score
   * sums are exact integers — see [[graft.functions.Exact]].
@@ -39,76 +46,84 @@ object EntityMatching {
       minSharedEntities: Long = 1L,
       scoreFactor: Double = 10.0)
 
-  /** Per-(doc, entity) term frequency; duplicate input rows are the
-    * term count, as in the reference. Input columns: doc_id, entity_id. */
-  def termFrequencies(entities: DataFrame): DataFrame =
-    entities.groupBy("doc_id", "entity_id").agg(count(lit(1)).as("tf"))
-
-  /** Candidate pairs with per-entity TF-IDF contributions.
+  /** Candidate pairs with per-entity TF-IDF contributions. Input
+    * columns: doc_id, entity_id (duplicate rows are the term count, as
+    * in the reference) and the `by` tags; a row with a null entity is
+    * no entity and counts only towards N.
     *
-    * Output: doc1, doc2 (doc1 < doc2), entity_id, tf1, tf2, cnt1, cnt2,
-    * idf_micro (= round(log10(N/df)*1e6), exact integer).
+    * Output: the `by` columns, entity_id, doc1, doc2 (doc1 < doc2), tf1,
+    * tf2, cnt1, cnt2, idf_micro (= round(log10(N/df)*1e6), exact
+    * integer); untagged, exactly [[graft.Schemas.candidatePairs]].
     */
-  def candidatePairs(entities: DataFrame, cfg: Config = Config()): DataFrame = {
-    // N = distinct documents, as a 1-row broadcast frame (lazy, no
-    // driver-side action; at 100 TB this is a metadata-cheap agg).
-    val nDocs = entities.agg(countDistinct("doc_id").as("n_docs"))
+  def candidatePairs(entities: DataFrame, cfg: Config = Config(),
+                     by: Seq[String] = Nil): DataFrame = {
+    val entityKey = (by :+ "entity_id").map(col)
+    // the one shuffle on the entity key: the tf roll-up groups by a
+    // superset of it and the entity windows by it, both in place
+    val tf = entities.repartition(entityKey: _*)
+      .groupBy(entityKey :+ col("doc_id"): _*)
+      .agg(count(lit(1)).as("tf"))
+    // N = distinct documents per tag, as a broadcast frame (lazy, no
+    // driver-side action)
+    val nDocs = tf.groupBy(by.map(col): _*)
+      .agg(countDistinct("doc_id").as("n_docs"))
 
     // Safe-mode / cap guards count raw rows per entity (reference
-    // counts duplicates too, EntitiesMatcherV2.scala:46-50).
-    val rawFreq = entities.groupBy("entity_id").agg(count(lit(1)).as("raw_freq"))
-    val guarded = (cfg.safeModeFraction, cfg.maxOccurrence) match {
-      case (None, None) => entities
-      case (frac, cap) =>
-        val keep = rawFreq
-          .crossJoin(broadcast(nDocs))
-          .filter(
-            frac.map(f => col("raw_freq") < col("n_docs") * f).getOrElse(lit(true)) &&
-            cap.map(c => col("raw_freq") <= c).getOrElse(lit(true)))
-          .select("entity_id")
-        entities.join(keep, Seq("entity_id"), "left_semi")
-    }
-
-    val tf = termFrequencies(guarded)
-    val docCounts = guarded.groupBy("doc_id").agg(count(lit(1)).as("doc_entity_count"))
-    // df = distinct docs per entity; idf = log10(N/df), micro-quantized.
-    val idf = tf.groupBy("entity_id").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(nDocs))
+    // counts duplicates too, EntitiesMatcherV2.scala:46-50); df =
+    // distinct docs per entity (0 for the null entity), idf =
+    // log10(N/df), micro-quantized. The guards filter on window
+    // outputs only, so no predicate is pushed under the shared tf
+    // frame and the N branch keeps reading the same shuffle.
+    val perEntity = Window.partitionBy(entityKey: _*)
+    val keep = col("df") > 0 &&
+      cfg.safeModeFraction.fold(lit(true))(f => col("raw_freq") < col("n_docs") * f) &&
+      cfg.maxOccurrence.fold(lit(true))(c => col("raw_freq") <= c)
+    val postings = tf
+      .withColumn("raw_freq", sum("tf").over(perEntity))
+      .withColumn("df", count("entity_id").over(perEntity))
+      .join(broadcast(nDocs), by)
+      .filter(keep)
       .withColumn("idf_micro",
         round(log10(col("n_docs").cast("double") / col("df")) * 1e6).cast("long"))
-      .select("entity_id", "idf_micro")
+      .withColumn("doc_entity_count",
+        sum("tf").over(Window.partitionBy((by :+ "doc_id").map(col): _*)))
 
-    val postings = tf
-      .join(docCounts, "doc_id")
-      .select(col("doc_id"), col("entity_id"), col("tf"), col("doc_entity_count"))
-
-    val a = postings.select(
-      col("entity_id"),
-      col("doc_id").as("doc1"), col("tf").as("tf1"),
-      col("doc_entity_count").as("cnt1"))
-    val b = postings.select(
-      col("entity_id"),
-      col("doc_id").as("doc2"), col("tf").as("tf2"),
-      col("doc_entity_count").as("cnt2"))
-
-    a.join(b, Seq("entity_id"))
+    // idf_micro is a function of the entity, so keying the self-join
+    // on it too changes no pair, and it makes both sides the same
+    // plan: they read ONE shuffle of the postings
+    def side(i: Int) = postings.select(entityKey ++ Seq(col("idf_micro"),
+      col("doc_id").as(s"doc$i"), col("tf").as(s"tf$i"),
+      col("doc_entity_count").as(s"cnt$i")): _*)
+    side(1).join(side(2), by ++ Seq("entity_id", "idf_micro"))
       .filter(col("doc1") < col("doc2"))
-      .join(idf, Seq("entity_id"))
+      .select((by ++ Seq("entity_id", "doc1", "doc2", "tf1", "tf2", "cnt1",
+        "cnt2", "idf_micro")).map(col): _*)
   }
 
   /** Roll candidate pairs up to scored matches (reference
     * `EntitiesScorer.score`). Output: doc1, doc2, score_type,
-    * item_count, score_micro (exact), score (double, 6-dp rounded). */
+    * item_count, score (double, 6-dp rounded from an exact micro sum). */
   def scorePairs(cands: DataFrame, scoreType: String,
-                 cfg: Config = Config()): DataFrame = {
+                 cfg: Config = Config()): DataFrame =
+    rollUp(cands, Nil, cfg).withColumn("score_type", lit(scoreType))
+      .select("doc1", "doc2", "score_type", "item_count", "score")
+
+  /** [[scorePairs]] over candidates tagged with their score type
+    * (`candidatePairs(by = Seq("score_type"))`), each type scored on
+    * its own. */
+  def scoreTypedPairs(cands: DataFrame, cfg: Config = Config()): DataFrame =
+    rollUp(cands, Seq("score_type"), cfg)
+      .select("doc1", "doc2", "score_type", "item_count", "score")
+
+  private def rollUp(cands: DataFrame, by: Seq[String], cfg: Config): DataFrame = {
     // cnt1/cnt2 are functionally dependent on doc1/doc2 — aggregating
-    // them (instead of grouping by all four) leaves the output
-    // hash-partitioned on exactly (doc1, doc2), so every downstream
-    // pair-keyed groupBy/join runs shuffle-free off the cached frame
-    // (HashPartitioning on a grouping-key subset would NOT satisfy the
-    // four-column grouping the other way around).
+    // them (instead of grouping by them too) keeps the grouping keys a
+    // superset of doc1, so the roll-up runs exchange-free off a
+    // doc1-partitioned candidate cache and its output keeps that layout
+    // (HashPartitioning on a grouping-key subset satisfies the
+    // clustering; the other way around it would not).
     val rolled = cands
-      .groupBy("doc1", "doc2")
+      .groupBy((Seq("doc1", "doc2") ++ by).map(col): _*)
       .agg(
         max("cnt1").as("cnt1"),
         max("cnt2").as("cnt2"),
@@ -120,7 +135,5 @@ object EntityMatching {
         col("item_count") * (lit(0.5) / col("cnt1") + lit(0.5) / col("cnt2")))
       .withColumn("score", Exact.r6(
         (col("sum_micro") / 1e6) * (lit(1.0) + lit(cfg.scoreFactor) * col("team_factor"))))
-      .withColumn("score_type", lit(scoreType))
-      .select("doc1", "doc2", "score_type", "item_count", "score")
   }
 }

@@ -18,16 +18,18 @@ object MatchingQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** (doc_id, entity_id) from lineitem: entity = part. */
-  private def partEntities(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir).select(
-      col("l_orderkey").as("doc_id"), col("l_partkey").as("entity_id"))
-
-  /** Second entity type: (part, supplier) combos — distinct id space. */
-  private def partSuppEntities(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir).select(
-      col("l_orderkey").as("doc_id"),
-      (col("l_partkey") * 100000L + col("l_suppkey")).as("entity_id"))
+  /** (doc_id, score_type, entity_id) from ONE lineitem scan: both
+    * entity types, each tagged with the score type it feeds — the part,
+    * and the (part, supplier) combo in its own id space. */
+  private def matchEntities(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .select(col("l_orderkey").as("doc_id"), explode(array(
+        struct(lit("part_overlap").as("score_type"),
+          col("l_partkey").as("entity_id")),
+        struct(lit("partsupp_overlap").as("score_type"),
+          (col("l_partkey") * 100000L + col("l_suppkey")).as("entity_id"))))
+        .as("e"))
+      .select("doc_id", "e.score_type", "e.entity_id")
 
   /** The candidate/score pipelines are quadratic (~9M pair rows at
     * sf0.1) and shared by most queries here; without reuse a full
@@ -38,106 +40,74 @@ object MatchingQueries {
     * composing several queries over one match table would do. */
   import Shared.memoized
 
-  // Partitioned by doc1 ALONE (round 17, guide §2.4): HashPartitioning
-  // on a subset of downstream keys satisfies every ClusteredDistribution
-  // that includes doc1 — so scorePairs' groupBy(doc1, doc2), the pivot
-  // full-outer join on (doc1, doc2), AND the weight-family rank windows
-  // over (grid point, doc1) all plan with ZERO exchanges off this
-  // layout. The previous (doc1, doc2) layout satisfied the first two
-  // but NOT the windows, which re-shuffled |pairs|×|grid points| rows
-  // on every training evaluation pass.
-  private def partCands(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "partCands", Seq("doc1"))(
-      EntityMatching.candidatePairs(partEntities(s, dir)))
+  // Both entity types as one plan (one lineitem scan, one self-join on
+  // (score_type, entity_id)), partitioned by doc1 ALONE (round 17,
+  // guide §2.4): HashPartitioning on a subset of downstream keys
+  // satisfies every ClusteredDistribution that includes doc1 — so the
+  // (doc1, doc2, score_type) roll-up below, the (doc1, doc2) pivot and
+  // the weight-family rank windows over (grid point, doc1) all plan
+  // with ZERO exchanges off this layout, which the roll-up and the
+  // pivot keep. Only q13 reads it, so the sweep releases it after q13.
+  private def matchCands(s: SparkSession, dir: String): DataFrame =
+    memoized(s, dir, "matchCands", Seq("doc1"))(matchCandsPlan(s, dir))
 
-  // No repartition before caching: scorePairs groups by (doc1, doc2)
-  // over the doc1-partitioned candidate cache, so the aggregation is
+  /** The plan [[matchCands]] persists, before its doc1 repartition. */
+  private[graft] def matchCandsPlan(s: SparkSession, dir: String): DataFrame =
+    EntityMatching.candidatePairs(matchEntities(s, dir), by = Seq("score_type"))
+
+  // No repartition before caching: the roll-up groups by (doc1, doc2,
+  // score_type) over the doc1-partitioned candidate cache, so it is
   // exchange-free and its output KEEPS the doc1 hash layout — an extra
-  // repartition would re-shuffle 9M rows into the layout they are in.
+  // repartition would re-shuffle every scored pair into the layout it
+  // is in.
+  private def matchScores(s: SparkSession, dir: String): DataFrame =
+    memoized(s, dir, "matchScores")(
+      EntityMatching.scoreTypedPairs(matchCands(s, dir)))
+
   private def partScores(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "partScores")(
-      EntityMatching.scorePairs(partCands(s, dir), "part_overlap"))
+    matchScores(s, dir).filter(col("score_type") === "part_overlap")
 
-  // The partsupp chain is not memoized below the score level, so the
-  // doc1 layout is established by repartitioning the candidate frame
-  // BEFORE the roll-up: the groupBy then needs no exchange of its own
-  // (same one-exchange build cost as before, but the cached output is
-  // doc1-partitioned like partScores, which the pivot join and the
-  // weight windows require to stay exchange-free).
-  private def partSuppScores(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "partSuppScores") {
-      val n = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      EntityMatching.scorePairs(
-        EntityMatching.candidatePairs(partSuppEntities(s, dir))
-          .repartition(n, col("doc1")), "partsupp_overlap")
-    }
-
-  /** Pivoted per-pair scores (A13 shape), shared by q19/q20/q72: the
-    * pivot's input is the full 2×quadratic score union, so the 18M-row
-    * shuffle behind it is paid once per session, not once per consumer.
-    * Unmemoized, q20 recomputed the pivot twice (scores + labels) and
-    * shuffled the two copies into a 9M×9M join — measured 227 s vs
-    * ~2 s for the whole of q72's eleven cached evaluations at sf0.1. */
-  private def pivotedScores(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "pivotedScores")(
-      // Full-outer join instead of union + groupBy(max(when)) (round
-      // 17, guide §2.4): each score frame holds at most one row per
-      // (doc1, doc2) — its own groupBy key — so pivoting the union is
-      // equivalent to the keyed full outer with missing sides filled
-      // 0.0. Both inputs are cached hash-partitioned on doc1, so the
-      // join plans with ZERO exchanges (in-partition sorts only),
-      // where the union + groupBy spelling shuffled the full
-      // 2×quadratic row set (18M rows at sf0.1, ~25 GiB at sf10).
-      // (The earlier max(when) spelling — kept in q17 — replaced
-      // .pivot()'s ObjectHashAggregate for spillability; the join
-      // needs no aggregation buffer at all, and SMJ spills likewise.)
-      partScores(s, dir)
-        .select(col("doc1"), col("doc2"), col("score").as("part_overlap"))
-        .join(partSuppScores(s, dir)
-          .select(col("doc1"), col("doc2"),
-            col("score").as("partsupp_overlap")),
-          Seq("doc1", "doc2"), "full_outer")
-        .na.fill(0.0, Seq("part_overlap", "partsupp_overlap")))
+  /** Pivoted per-pair scores (A13 shape), for q19 and the pairScores2
+    * build: one row per pair, a type's missing score filled 0.0. Each
+    * score type holds at most one row per (doc1, doc2), so
+    * `max(when(type))` per pair is the pivot; the groupBy keys are a
+    * superset of the doc1 layout of [[matchScores]], so it plans with
+    * ZERO exchanges (and a plain codegen HashAggregate, where
+    * `.pivot()` takes a non-spilling ObjectHashAggregate). Cheap enough
+    * to recompute for its two readers, so it is not cached. */
+  private def pivotedScores(s: SparkSession, dir: String): DataFrame = {
+    def typed(t: String) = coalesce(
+      max(when(col("score_type") === t, col("score"))), lit(0.0)).as(t)
+    matchScores(s, dir).groupBy("doc1", "doc2")
+      .agg(typed("part_overlap"), typed("partsupp_overlap"))
+  }
 
   /** Weight-training input (q20/q72, and the base of the k=3/k=6
     * score tables): pairs matched by BOTH types — tiny (the
     * intersection of the two matchers). MEMOIZED as its own family
-    * (round 16): deriving it from [[pivotedScores]] on every consumer
-    * access kept the ~25 GiB (sf10) pivot frame resident across the
-    * whole match cluster just to serve this sub-GiB projection — the
-    * exact residency that forced the one round-15 eviction and q72's
-    * 98 s rebuild. With the intersection memoized at warm time, q19
-    * is the pivot's ONLY remaining consumer, so the scheduler can
-    * release the big frame at the cluster's start. */
+    * (round 16), so the training chains never hold the pair-score
+    * table: the sweep releases [[matchScores]] after its last reader,
+    * before the k-chains build from this frame. It keeps the doc1
+    * layout of the exchange-free pivot, so every training
+    * evaluation's rank window over (grid point, doc1) is exchange-free
+    * (subset clustering), for q20/q72 and the k=3/k=6 tables derived
+    * from this frame. */
   private[graft] def weightPairScores(s: SparkSession, dir: String): DataFrame =
-    // parts = doc1 (round 17): the pivot's full-outer join reports
-    // UnknownPartitioning (outer nulls), so the intersection re-pins
-    // the doc1 hash layout here — a sub-GiB repartition at build that
-    // makes every training evaluation's rank window over (grid point,
-    // doc1) exchange-free (subset clustering), for q20/q72 and the
-    // k=3/k=6 tables derived from this frame.
-    memoized(s, dir, "pairScores2", Seq("doc1"))(
+    memoized(s, dir, "pairScores2")(
       pivotedScores(s, dir)
         .filter(col("part_overlap") > 0.0 && col("partsupp_overlap") > 0.0)
         .select(col("doc1"), col("doc2"),
           col("part_overlap").as("s1"), col("partsupp_overlap").as("s2")))
 
   /** Materialize the match chain whose parents the sweep releases
-    * early (q13 partCands, q19 pivotedScores), so no consumer rebuilds
-    * a released parent. Each count() reuses the layer below, so each
-    * recorded build is incremental. The k=3/k=6 training chains build
-    * at their first consumer, with pairScores2 still cached. */
+    * early (q13 is matchCands' only reader), so no consumer rebuilds a
+    * released parent. Each build reads the layer below from the cache.
+    * The k=3/k=6 training chains build at their first consumer, with
+    * pairScores2 still cached. */
   private[queries] def warmShared(s: SparkSession, dir: String): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    // the part chain (cands → scores) and the partsupp chain are
-    // independent; the pivot needs both
-    val part = Future { partCands(s, dir).count(); partScores(s, dir).count() }
-    val supp = Future { partSuppScores(s, dir).count(); () }
-    Seq(part, supp).foreach(Await.result(_, Duration.Inf))
-    pivotedScores(s, dir).count()
-    weightPairScores(s, dir).count()
+    matchCands(s, dir)
+    matchScores(s, dir)
+    weightPairScores(s, dir)
   }
 
   /** Document-type dim: open orders play the PROPOSAL role. */
@@ -156,7 +126,7 @@ object MatchingQueries {
   /** J1/A1/A2: inverted-index candidate generation with TF, doc entity
     * counts and micro-quantized IDF. */
   def q13Candidates(s: SparkSession, dir: String): DataFrame =
-    partCands(s, dir)
+    matchCands(s, dir).filter(col("score_type") === "part_overlap")
       .select("entity_id", "doc1", "doc2", "tf1", "tf2", "cnt1", "cnt2", "idf_micro")
       .orderBy("entity_id", "doc1", "doc2")
 
@@ -180,8 +150,7 @@ object MatchingQueries {
 
   /** P5: multi-type filter over the union of both matchers. */
   def q17MultiTypeFilter(s: SparkSession, dir: String): DataFrame =
-    PairFilters.multiTypeFilter(
-        partScores(s, dir).unionByName(partSuppScores(s, dir)),
+    PairFilters.multiTypeFilter(matchScores(s, dir),
         whitelist = Seq("partsupp_overlap"),
         knownTypes = Some(Seq("part_overlap", "partsupp_overlap")))
       .orderBy("doc1", "doc2")
@@ -221,7 +190,7 @@ object MatchingQueries {
     * Sums are micro-quantized so the distributed agg is exact. */
   def q43TotalScore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scores = partScores(s, dir).unionByName(partSuppScores(s, dir))
+    val scores = matchScores(s, dir)
     val wdf = Seq(("part_overlap", 0.7), ("partsupp_overlap", 0.3))
       .toDF("score_type", "weight")
     val wCtx = Window.partitionBy("doc2", "score_type")
@@ -288,7 +257,9 @@ object MatchingQueries {
   // ---- oracle SQL --------------------------------------------------
 
   /** CTE chain computing candidate pairs for an entity selection —
-    * column-for-column the plan of EntityMatching.candidatePairs. */
+    * column-for-column the result of EntityMatching.candidatePairs, in
+    * its former join-based spelling (EntityMatchingSpec keeps that
+    * spelling as the operator's reference). */
   private def candsSql(entSel: String): String =
     s"""ents AS ($entSel),
        nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM ents),
@@ -472,8 +443,8 @@ object MatchingQueries {
     *    and every Walker round each drive a distributed pass over it
     *    (a user tuning weights persists the score table once);
     *    parts = doc1, since the dim joins broadcast one side or the
-    *    other, so the layout is re-pinned for the rank windows (the
-    *    pairScores2 rationale; the frame is intersection-sized).
+    *    other, so the doc1 layout the rank windows need is re-pinned
+    *    (the frame is intersection-sized).
     *  - `gridQuery`: the constrained k-type simplex lattice (Σnᵢ =
     *    `gridSteps`) generated by iterated constrained cross joins,
     *    every point evaluated in ONE distributed pass.
@@ -600,7 +571,7 @@ object MatchingQueries {
     * → per-document match-count stat (q18's counting leg). One row per
     * surviving pair with every stage's verdict. */
   def q94MatcherPipeline(s: SparkSession, dir: String): DataFrame = {
-    val scores = partScores(s, dir).unionByName(partSuppScores(s, dir))
+    val scores = matchScores(s, dir)
     val typed = PairFilters.typeFilter(scores, docTypes(s, dir),
       t => t.startsWith("PROPOSAL"))
     val dated = PairFilters.dateFilter(typed, docDates(s, dir))

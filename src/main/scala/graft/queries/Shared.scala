@@ -201,9 +201,10 @@ object Shared {
 
   /** Build ONE sweep-order group's staged families right before its
     * first query ([[graft.SweepOrder.sweep]]): match the chain whose
-    * parents q13/q19 release (partCands ‖ partSuppScores → partScores
-    * → pivotedScores → pairScores2), text dupPairs ‖ simhashes, vector
-    * lshBuckets → candCosines. Every other family builds at its first
+    * parent q13 releases (matchCands → matchScores → pairScores2), text
+    * dupPairs ‖ simhashes, vector lshBuckets → candCosines. Each
+    * accessor is called once: [[memoized]] has persisted and counted
+    * the frame when it returns. Every other family builds at its first
     * consumer, its parents still cached (their consumers include its
     * own). Per-group staging bounds residency to the cluster: an
     * up-front warm forced the one round-15 sf10 eviction. */
@@ -217,8 +218,8 @@ object Shared {
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
       Seq(
-        Future { dupPairs(s, dir).count(); () },
-        Future { simhashes(s, dir).count(); () })
+        Future { dupPairs(s, dir); () },
+        Future { simhashes(s, dir); () })
         .foreach(Await.result(_, Duration.Inf))
     case 2 => VectorQueries.warmShared(s, dir)
     case _ => ()

@@ -88,8 +88,8 @@ object VectorQueries {
     * lands in `cache_build`, not on whichever consumer runs first.
     * Every other vector family builds at its first consumer. */
   private[queries] def warmShared(s: SparkSession, dir: String): Unit = {
-    bucketsOf(s, dir)._1.count()
-    candCosines(s, dir).count()
+    bucketsOf(s, dir)
+    candCosines(s, dir)
   }
 
   /** (band, key) buckets for the whole corpus at the corpus-derived

@@ -143,7 +143,7 @@ class CacheRetirementSpec extends AnyFunSuite {
     val built = sweepBuilds(Seq("q20_weight_grid", "q161_trained_total",
       "q203_trained_total_k6"))
     val counts = built.groupMapReduce(_._1)(_ => 1)(_ + _)
-    assert(counts.get("pivotedScores") === Some(1), s"built: $built")
+    assert(counts.get("matchScores") === Some(1), s"built: $built")
     assert(counts.get("pairScores2") === Some(1), s"built: $built")
     assert(built.toSet.contains("pairScores3" -> "q161_trained_total"))
     assert(built.toSet.contains("k6walk" -> "q203_trained_total_k6"))

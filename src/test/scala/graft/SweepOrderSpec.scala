@@ -44,12 +44,25 @@ class SweepOrderSpec extends AnyFunSuite {
     val order = Seq("q13_entity_candidates", "q14_entity_scores",
       "q94_matcher_pipeline", "q29_cosine_shingles")
     val sched = SweepOrder.releaseSchedule(order)
-    assert(sched(0).contains("partCands"))       // only consumer: q13
-    assert(sched(2).contains("partScores"))      // last of q14/q94
-    assert(sched(2).contains("partSuppScores"))  // last: q94
+    assert(sched(0).contains("matchCands"))      // only consumer: q13
+    assert(sched(2).contains("matchScores"))     // last of q14/q94
     assert(sched(3) === Seq("cosineWeights"))
     // families with no consumer in the order are never scheduled
     assert(!sched.values.flatten.toSeq.contains("dupPairs"))
+  }
+
+  test("an unwarmed schedule holds a family until the last reader of " +
+      "anything built from it") {
+    val order = Seq("q13_entity_candidates", "q14_entity_scores",
+      "q20_weight_grid")
+    // warmed: matchScores and pairScores2 exist before q14/q20 run
+    val warmed = SweepOrder.releaseSchedule(order)
+    assert(warmed(0) === Seq("matchCands"))
+    assert(warmed(1) === Seq("matchScores"))
+    // unwarmed: q20 builds pairScores2 from matchScores, which q14 builds
+    // from matchCands, so both parents stay until q20
+    val lazyBuilt = SweepOrder.releaseSchedule(order, warmed = false)
+    assert(lazyBuilt === Map(2 -> Seq("matchCands", "matchScores", "pairScores2")))
   }
 
   test("key is total: names not shaped q<digits> sort into the tail group") {
@@ -58,28 +71,29 @@ class SweepOrderSpec extends AnyFunSuite {
     assert(SweepOrder.key("cache_build") === ((4, 1, 0, Int.MaxValue)))
     assert(SweepOrder.key("") === ((4, 1, 0, Int.MaxValue)))
     assert(SweepOrder.key("q") === ((4, 1, 0, Int.MaxValue)))
-    // q13 is partCands' sole consumer → an opener (flag 0, depth 0)
+    // q13 is matchCands' sole consumer → an opener (flag 0, depth 0)
     assert(SweepOrder.key("q13_entity_candidates") === ((0, 0, 0, 13)))
     assert(SweepOrder.key("q14_entity_scores") === ((0, 1, 0, 14)))
   }
 
-  test("sole-consumer openers are DERIVED: q19 opens the match cluster " +
-      "by chain depth, not by a hard-coded id (VERDICT r16)") {
+  test("sole-consumer openers are DERIVED: q13 opens the match cluster " +
+      "from the family rows, not by a hard-coded id (VERDICT r16)") {
     // the rule: a query that is the only consumer of a memo family
     // opens its cluster (release-early), deepest derivation chain
-    // first. q19/pivotedScores (depth 2) and q13/partCands (depth 0)
-    // fall out of the family rows' consumers and parents — no literal ids.
-    assert(SweepOrder.openerDepth("q19_score_pivot") === 2)
+    // first. q13/matchCands (depth 0) falls out of the family rows'
+    // consumers and parents — no literal ids. q19 reads matchScores
+    // with nine other queries, so it is no opener.
     assert(SweepOrder.openerDepth("q13_entity_candidates") === 0)
+    assert(!SweepOrder.openerDepth.contains("q19_score_pivot"),
+      "q19 shares matchScores with nine other consumers — not an opener")
     assert(!SweepOrder.openerDepth.contains("q14_entity_scores"),
-      "q14 shares partScores with eight other consumers — not an opener")
+      "q14 shares matchScores with nine other consumers — not an opener")
     val names = SparkEntry.queries.keys.toSeq.sorted
     val ordered = SweepOrder.sort(names.map(_ -> ())).map(_._1)
-    assert(ordered.take(2) === Seq("q19_score_pivot", "q13_entity_candidates"))
-    // and the release schedule drops the big frames right there
+    assert(ordered.take(2) === Seq("q13_entity_candidates", "q14_entity_scores"))
+    // and the release schedule drops the big frame right there
     val sched = SweepOrder.releaseSchedule(ordered)
-    assert(sched(0) === Seq("pivotedScores"))
-    assert(sched(1) === Seq("partCands"))
+    assert(sched(0) === Seq("matchCands"))
     // the vector cluster gets the same treatment for free: its
     // sole-consumer queries lead it (q29/cosineWeights, then
     // q57/mlMinhashTf and q163/mmrCands+mmrSims in numeric order)
@@ -115,6 +129,11 @@ class SweepOrderSpec extends AnyFunSuite {
     assert(warmed.contains("pairScores2") && !warmed.contains("k3walk"),
       s"unexpected staged warm: $warmed")
     assert(unsafeLazyFamilies(families, warmed).isEmpty)
+    // matchScores must stay warm-built: its consumers are not a subset
+    // of matchCands' ({q13}), so built lazily it would rebuild its
+    // released parent
+    assert(unsafeLazyFamilies(families, warmed - "matchScores") ===
+      Seq("matchScores" -> "matchCands"))
     // the rule bites: without the k-chain consumers on pairScores2 a
     // subset sweep would release it before q159/q199 build from it
     val reverted = families.map { f =>
