@@ -87,8 +87,6 @@ object SweepOrder {
     Family("candCosines", Vector, Seq("lshBuckets"), Set("q74_embedding_dups",
       "q162_embedding_dup_clusters", "q168_knn_graph", "q171_label_prop",
       "q178_dbscan")),
-    Family("knnEdges", Vector, Seq("candCosines"), Set("q168_knn_graph",
-      "q171_label_prop")),
     Family("kmeans", Vector, Nil, Set("q106_semdedup", "q118_ann_recall",
       "q158_ivf_kmeans", "q164_persisted_index", "q172_retrieval_metrics",
       "q174_ivf_pq", "q186_tombstone_serve", "q187_compaction_report",

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.queries.Shared
 
 /** Connected components over a DataFrame edge list — the dedup
   * clustering step (reference: GraphX `connectedComponents` in
@@ -15,6 +16,13 @@ import org.apache.spark.storage.StorageLevel
   * aggregate, both shuffling on the node id, so AQE reuses the
   * partitioning; `localCheckpoint` truncates the growing lineage so
   * plan size stays constant across iterations.
+  *
+  * Residency: each round is a local checkpoint, and a round's blocks
+  * are released ([[Shared.release]]) as soon as the next round is
+  * materialized, so a loop holds at most two rounds at once. Every
+  * round is registered with [[Shared.track]] ([[Shared.checkpoint]]),
+  * so the last one, which the returned labels read, is released with
+  * the query's other transients.
   *
   * Dedup graphs are huge forests of tiny clusters — diameters of 2-5 —
   * so rounds stay in single digits even at 100 TB. (For adversarial
@@ -59,8 +67,8 @@ object GraphComponents {
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var labels = nodes.select(col("node"), col("node").as("comp"))
-      .localCheckpoint()
+    var labels = Shared.checkpoint(
+      nodes.select(col("node"), col("node").as("comp")))
     // Convergence detection is a byproduct of the label aggregation
     // itself, not a second job: min-propagation only ever DECREASES
     // labels, so the label multiset changed iff sum(comp) strictly
@@ -75,10 +83,10 @@ object GraphComponents {
         .join(labels, undirected("src") === labels("node"))
         .select(undirected("dst").as("node"), col("comp"))
       val obs = org.apache.spark.sql.Observation(s"cc_round_$i")
-      val next = labels.union(neighbourComp)
+      val next = Shared.checkpoint(labels.union(neighbourComp)
         .groupBy("node").agg(min("comp").as("comp"))
-        .observe(obs, sum(col("comp").cast("decimal(38,0)")).as("label_sum"))
-        .localCheckpoint()
+        .observe(obs, sum(col("comp").cast("decimal(38,0)")).as("label_sum")))
+      Shared.release(labels)
       // string repr so the empty relation ("null" sum every round)
       // also reaches the prev == cur fixpoint instead of spinning
       val curSum = String.valueOf(obs.get("label_sum"))
@@ -87,7 +95,7 @@ object GraphComponents {
       labels = next
       i += 1
     }
-    undirected.unpersist()
+    undirected.unpersist(true)
     labels
   }
 
@@ -121,8 +129,8 @@ object GraphComponents {
           least(col("a"), col("b")).as("v"))
         .distinct()
 
-    var e = canon(edges.select(col("src").as("a"), col("dst").as("b")))
-      .localCheckpoint()
+    var e = Shared.checkpoint(
+      canon(edges.select(col("src").as("a"), col("dst").as("b"))))
     var prev: (Long, String) = (-1L, "")
     var converged = false
     var i = 0
@@ -137,10 +145,10 @@ object GraphComponents {
       // small-star over the canonical (hi, lo) orientation: all
       // neighbors v of u satisfy v <= u, so m = min neighbor
       val minsS = large.groupBy("u").agg(min("v").as("m"))
-      val small = canon(
+      val small = Shared.checkpoint(canon(
         large.join(minsS, "u").select(col("v").as("a"), col("m").as("b"))
-          .union(minsS.select(col("u").as("a"), col("m").as("b"))))
-        .localCheckpoint()
+          .union(minsS.select(col("u").as("a"), col("m").as("b")))))
+      Shared.release(e)
       val sig = small
         .agg(count(lit(1)).cast("long").as("n"),
           // decimal accumulator: a long sum of 64-bit hashes overflows

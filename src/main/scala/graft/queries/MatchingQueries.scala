@@ -55,12 +55,18 @@ object MatchingQueries {
   private[graft] def matchCandsPlan(s: SparkSession, dir: String): DataFrame =
     EntityMatching.candidatePairs(matchEntities(s, dir), by = Seq("score_type"))
 
-  // No repartition before caching: the roll-up groups by (doc1, doc2,
-  // score_type) over the doc1-partitioned candidate cache, so it is
-  // exchange-free and its output KEEPS the doc1 hash layout — an extra
-  // repartition would re-shuffle every scored pair into the layout it
-  // is in.
-  private def matchScores(s: SparkSession, dir: String): DataFrame =
+  /** Per-pair scores of both entity types, `Schemas.matchScores`.
+    * Invariant, which q44 relies on and EntityMatchingSpec checks:
+    * (doc1, doc2, score_type) is unique and doc1 < doc2 on every row —
+    * the roll-up groups on exactly those keys over candidates that
+    * `candidatePairs` filters to doc1 < doc2.
+    *
+    * No repartition before caching: the roll-up groups by (doc1, doc2,
+    * score_type) over the doc1-partitioned candidate cache, so it is
+    * exchange-free and its output KEEPS the doc1 hash layout — an extra
+    * repartition would re-shuffle every scored pair into the layout it
+    * is in. */
+  private[graft] def matchScores(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "matchScores")(
       EntityMatching.scoreTypedPairs(matchCands(s, dir)))
 
@@ -215,24 +221,19 @@ object MatchingQueries {
   /** A6 (reference `MatchCandidatePersisterStage.scala:52-62`): collapse
     * (dv1,dv2)/(dv2,dv1) duplicate directions. The reference used
     * nondeterministic `first()`; canonical (least, greatest) keys +
-    * min/max/sum aggregates make the result hash-stable (SURVEY §7.4-2). */
-  def q44PairDedup(s: SparkSession, dir: String): DataFrame = {
-    val sc = partScores(s, dir)
-    val dups = sc.unionByName(sc.select(
-      col("doc2").as("doc1"), col("doc1").as("doc2"),
-      col("score_type"), col("item_count"), col("score")))
-    dups
-      .select(
-        least(col("doc1"), col("doc2")).as("pair_lo"),
-        greatest(col("doc1"), col("doc2")).as("pair_hi"),
-        col("score_type"), col("item_count"), col("score"))
-      .groupBy("pair_lo", "pair_hi", "score_type")
-      .agg(
-        count(lit(1)).as("n_directions"),
-        sum("item_count").as("total_items"),
-        max("score").as("score"))
+    * min/max/sum aggregates make the result hash-stable (SURVEY §7.4-2),
+    * and the oracle still spells it that way: the score rows unioned
+    * with their mirror, grouped on (least, greatest, type). Over
+    * [[matchScores]] that group is exactly one row's two directions
+    * (its (doc1, doc2, score_type) is unique and doc1 < doc2), so the
+    * collapse is a projection: pair_lo = doc1, pair_hi = doc2, two
+    * directions, twice the items, the same score. */
+  def q44PairDedup(s: SparkSession, dir: String): DataFrame =
+    partScores(s, dir)
+      .select(col("doc1").as("pair_lo"), col("doc2").as("pair_hi"),
+        col("score_type"), lit(2L).as("n_directions"),
+        (col("item_count") * 2L).as("total_items"), col("score"))
       .orderBy("pair_lo", "pair_hi")
-  }
 
   /** Flagship pipeline: candidates → scores → type filter → date filter
     * → percentile normalisation → ranked output (reference
@@ -655,10 +656,9 @@ object MatchingQueries {
     * driver collect); 3 statically-unrolled rounds = 3 passes. */
   def q176FellegiSunter(s: SparkSession, dir: String): DataFrame = {
     val (pairs, out) = fsTrajectory(s, dir)
-    val res = out.orderBy("iter")
-      // materialize before unpersist: the returned frame must not
-      // recompute the EM chain against a dropped cache
-      .localCheckpoint()
+    // materialize before unpersist: the returned frame must not
+    // recompute the EM chain against a dropped cache
+    val res = Shared.checkpoint(out.orderBy("iter"))
     pairs.unpersist()
     res
   }
@@ -818,7 +818,7 @@ object MatchingQueries {
     * sum of constants. */
   def q185FsMatchWeights(s: SparkSession, dir: String): DataFrame = {
     val (pairs, hist) = fsWeightsChain(s, dir)
-    val res = hist.localCheckpoint()
+    val res = Shared.checkpoint(hist)
     pairs.unpersist()
     res
   }

@@ -295,7 +295,7 @@ object MiscQueries {
       // integer and partition-independent, so truncation cannot
       // change the result — only the plan depth)
       if (i % PrCheckpointEvery == 0 && i < iterations)
-        ranks = ranks.localCheckpoint()
+        ranks = Shared.checkpoint(ranks)
     }
     ranks.filter(col("node") >= S)
       .join(outdeg.withColumnRenamed("src", "node"), Seq("node"))

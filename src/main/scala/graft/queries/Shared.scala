@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
@@ -94,18 +95,62 @@ object Shared {
     * harness retires them as soon as the consuming query finishes
     * ([[retireTransients]]) instead of letting dead blocks accumulate
     * across a 207-query sweep — at sf10 that accumulation was ~55 G of
-    * scratch, the round-13 single-JVM ENOSPC mechanism. */
-  def track(df: DataFrame): DataFrame = { tracked.add(df); df }
+    * scratch, the round-13 single-JVM ENOSPC mechanism. A transient
+    * tracked inside a [[memoized]] build is that build's own: it is
+    * released as soon as the build is counted. */
+  def track(df: DataFrame): DataFrame = {
+    val mine = buildTracked.get
+    if (mine == null) tracked.add(df) else buildTracked.set(df :: mine)
+    df
+  }
 
-  /** Unpersist every anonymous per-query transient. BLOCKING, so the
-    * blocks are gone before the next query starts and a storage
+  // the transients `track`ed by the memo build running on THIS thread
+  // (null outside a build), released as soon as that build is counted.
+  // Per thread: builds run concurrently (the text warm), and releasing
+  // a frame under another build's not-yet-loaded cache entry makes
+  // Spark's CacheManager re-plan that entry, which is then built twice
+  // and its first copy orphaned
+  private val buildTracked = new ThreadLocal[List[DataFrame]]
+
+  /** Eager local checkpoint of `df`, registered for retirement like
+    * any per-query transient: a local checkpoint's blocks have no
+    * cache entry, so without [[release]] they stay until a GC lets
+    * Spark's ContextCleaner find the RDD unreachable. */
+  def checkpoint(df: DataFrame): DataFrame = track(df.localCheckpoint())
+
+  /** Free `df`'s blocks now (blocking): a cached frame's cache entry,
+    * or, for a local checkpoint ([[checkpoint]]), the blocks of the
+    * checkpointed RDD under its `LogicalRDD` — `unpersist` finds no
+    * cache entry there and frees nothing. A released checkpoint
+    * cannot be recomputed, so release one only when nothing will read
+    * it again. */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD =>
+      if (r.rdd.getStorageLevel != StorageLevel.NONE) {
+        // Spark warns on every such unpersist that the lineage is gone;
+        // here that is the point, so keep the warning off stderr (it
+        // is logged under the checkpointed RDD's class)
+        val logger = r.rdd.getClass.getName
+        quietLoggers.getOrElseUpdate(logger,
+          org.apache.logging.log4j.core.config.Configurator.setLevel(
+            logger, org.apache.logging.log4j.Level.ERROR))
+        r.rdd.unpersist(true)
+      }
+    case _ => df.unpersist(true)
+  }
+
+  private val quietLoggers =
+    scala.collection.concurrent.TrieMap.empty[String, Unit]
+
+  /** [[release]] every anonymous per-query transient. BLOCKING, so
+    * the blocks are gone before the next query starts and a storage
     * snapshot taken right after (perfbench's persisted peak) does not
-    * count already-dead blocks. Correctness is unaffected either way
-    * (an unpersisted frame recomputes if ever re-read) and no
-    * transient has consumers beyond its own query. */
+    * count already-dead blocks. No transient has consumers beyond its
+    * own query; an unpersisted cached frame would recompute if re-read,
+    * a released checkpoint would not. */
   def retireTransients(): Unit = {
     var df = tracked.poll()
-    while (df != null) { df.unpersist(true); df = tracked.poll() }
+    while (df != null) { release(df); df = tracked.poll() }
   }
 
   /** No-op: releasing each family after its last consumer
@@ -173,7 +218,9 @@ object Shared {
       lock.synchronized {
         memo.get(mk).getOrElse {
           val outer = nestedSec.get
+          val outerTracked = buildTracked.get
           nestedSec.set(0.0)
+          buildTracked.set(Nil)
           val t0 = System.nanoTime()
           try {
             val n = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
@@ -181,11 +228,20 @@ object Shared {
               else build.repartition(n, parts.map(col): _*)
             val p = df.persist(StorageLevel.MEMORY_AND_DISK)
             p.count()
+            // the build's own transients are dead once the memo is
+            // loaded (a loaded cache entry is never re-planned)
+            buildTracked.get.foreach(release)
+            buildTracked.set(Nil)
             val sec = (System.nanoTime() - t0) / 1e9
             builds.add(Build(mk, sec, sec - nestedSec.get, curQuery))
             memo.put(mk, p)
             p
-          } finally nestedSec.set(outer + (System.nanoTime() - t0) / 1e9)
+          } finally {
+            // a failed build's transients retire with the query
+            buildTracked.get.foreach(tracked.add)
+            buildTracked.set(outerTracked)
+            nestedSec.set(outer + (System.nanoTime() - t0) / 1e9)
+          }
         }
       }
     }

@@ -101,7 +101,7 @@ object VectorQueries {
     * sides co-located. */
   private val bitsMemo =
     scala.collection.concurrent.TrieMap.empty[String, Int]
-  private def bucketsOf(s: SparkSession, dir: String): (DataFrame, Int) = {
+  private[graft] def bucketsOf(s: SparkSession, dir: String): (DataFrame, Int) = {
     val bits = bitsMemo.getOrElseUpdate(
       s"${s.sparkContext.applicationId}|$dir",
       lshBits(Tables.embeddings(s, dir).count()))
@@ -112,33 +112,56 @@ object VectorQueries {
     (df, bits)
   }
 
-  /** Exact cosine over the LSH-bucket candidate pairs (v1 < v2) at
-    * the corpus-derived resolution — the shared verifier input of
-    * q74/q162 (near-dup pairs/clusters), q168/q171 (kNN graph/label
-    * prop) and q178 (DBSCAN neighbourhoods): all of them filter or
-    * rank exactly this frame, so the banded self-join + double
-    * embedding join + cosine runs ONCE per session instead of once
-    * per consumer (round 18, guide §2.4 — the same subplan was
-    * rebuilt three times per sweep). Pair volume is the bucket-depth-
-    * bounded candidate set (linear in the corpus at the derived band
-    * width), id + cosine columns only — never embeddings. */
-  private def candCosines(s: SparkSession, dir: String): DataFrame =
+  /** The ranked LSH neighbour list at the corpus-derived resolution,
+    * `(src, dst, cosine, rnk)`: one row per ORIENTATION of a candidate
+    * pair (two distinct vectors sharing a band key), its exact cosine,
+    * and `rnk`, the row's place among ALL of src's candidates by
+    * (cosine desc, dst). The shared verifier input of q74/q162
+    * (near-dup pairs/clusters: the `src < dst` rows at cosine ≥
+    * [[MinDupCosine]]), q168/q171 (kNN graph/label prop:
+    * [[knnEdges]]) and q178 (DBSCAN neighbourhoods: the rows at cosine
+    * ≥ [[DbscanEps]]), so the banded self-join + embedding joins +
+    * cosine + rank run ONCE per session (round 18).
+    *
+    * Pruned to what those readers can see: a row is kept iff its
+    * cosine ≥ [[CandFloor]] (the lowest threshold a reader filters
+    * at) or `rnk` ≤ [[KnnK]]. Exact for every reader: a pair above
+    * the floor is kept in both orientations, the rank is taken
+    * before the prune, and any row ranked above one of src's top-K
+    * rows is itself in the top K. Candidates are hash-partitioned on
+    * src before the dedup and the src embedding joins last, so the
+    * rank window adds a sort and no exchange.
+    * Pair volume is the bucket-depth-bounded candidate set (linear in
+    * the corpus at the derived band width); never embeddings. */
+  private[graft] def candCosines(s: SparkSession, dir: String): DataFrame =
     Shared.memoized(s, dir, "candCosines") {
       val emb = Tables.embeddings(s, dir)
       val (buckets, _) = bucketsOf(s, dir)
-      val cands = buckets.select(col("band"), col("key"), col("vec_id").as("v1"))
-        .join(buckets.select(col("band"), col("key"), col("vec_id").as("v2")),
+      val cands = buckets.select(col("band"), col("key"), col("vec_id").as("src"))
+        .join(buckets.select(col("band"), col("key"), col("vec_id").as("dst")),
           Seq("band", "key"))
-        .filter(col("v1") < col("v2"))
-        .select("v1", "v2").distinct()
+        .filter(col("src") =!= col("dst"))
+        .select("src", "dst")
+        .repartition(col("src")).distinct()
+      val w = Window.partitionBy("src").orderBy(col("cosine").desc, col("dst"))
       cands
-        .join(emb.select(col("vec_id").as("v1"), col("embedding").as("e1")),
-          Seq("v1"))
-        .join(emb.select(col("vec_id").as("v2"), col("embedding").as("e2")),
-          Seq("v2"))
-        .select(col("v1"), col("v2"),
+        .join(emb.select(col("vec_id").as("dst"), col("embedding").as("e2")),
+          Seq("dst"))
+        .join(emb.select(col("vec_id").as("src"), col("embedding").as("e1")),
+          Seq("src"))
+        .select(col("src"), col("dst"),
           r6(cosine(col("e1"), col("e2"))).as("cosine"))
+        .withColumn("rnk", row_number().over(w))
+        .filter(col("cosine") >= CandFloor || col("rnk") <= KnnK)
     }
+
+  /** The `src < dst` pairs of [[candCosines]] at cosine ≥
+    * [[MinDupCosine]], as (v1, v2, cosine): q74's output, q162's
+    * edges. */
+  private def dupCosines(s: SparkSession, dir: String): DataFrame =
+    candCosines(s, dir)
+      .filter(col("src") < col("dst") && col("cosine") >= MinDupCosine)
+      .select(col("src").as("v1"), col("dst").as("v2"), col("cosine"))
 
   /** Fixed query-batch bound: ids are dense, so `% 50 = 0 AND
     * < QBatchMax` keeps ≤ 20 queries forever (10 at the sf0.01 gate
@@ -326,11 +349,8 @@ object VectorQueries {
   def q74EmbeddingDups(s: SparkSession, dir: String): DataFrame =
     // the banded candidate + exact-cosine pass is the memoized
     // candCosines frame shared with q168/q178 (round 18); this query
-    // is its threshold filter
-    candCosines(s, dir)
-      .filter(col("cosine") >= MinDupCosine)
-      .select("v1", "v2", "cosine")
-      .orderBy("v1", "v2")
+    // is its threshold filter over one orientation
+    dupCosines(s, dir).orderBy("v1", "v2")
 
   /** Deterministic k-means over the embeddings (M8 — the reference's
     * experimental clustering, `analyser/` K-means prototypes): K=8
@@ -1091,8 +1111,7 @@ object VectorQueries {
     * recursive min-label reachability over the same pair CTEs. */
   def q162EmbeddingDupClusters(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val edges = candCosines(s, dir)
-      .filter(col("cosine") >= MinDupCosine)
+    val edges = dupCosines(s, dir)
       .select(col("v1").as("src"), col("v2").as("dst"))
     val comp = graft.operators.GraphComponents.connectedComponents(
         emb.select(col("vec_id").as("node")), edges)
@@ -1186,7 +1205,7 @@ object VectorQueries {
       // final round stays a live plan so the served plan shows the
       // real aggregation shape
       all =
-        if (r < MmrK) all.unionByName(pick).localCheckpoint()
+        if (r < MmrK) Shared.checkpoint(all.unionByName(pick))
         else all.unionByName(pick)
     }
     all.orderBy("qid", "pick_rank")
@@ -1345,6 +1364,10 @@ object VectorQueries {
   private val DbscanEps = 0.25
   private val DbscanMinPts = 3
 
+  /** The [[candCosines]] prune floor: the lowest cosine threshold any
+    * of its readers filters at. */
+  private val CandFloor = math.min(MinDupCosine, DbscanEps)
+
   /** q178: DBSCAN-STYLE DENSITY CLUSTERING (Ester et al. 1996) over
     * the LSH candidate graph — the density-based complement to q162's
     * single-threshold connected components: a point is CORE when it
@@ -1367,7 +1390,7 @@ object VectorQueries {
     * same construction with a recursive-CTE closure. */
   def q178Dbscan(s: SparkSession, dir: String): DataFrame = {
     val (sym, res) = dbscanChain(s, dir)
-    val out = res.localCheckpoint()
+    val out = Shared.checkpoint(res)
     sym.unpersist()
     out
   }
@@ -1379,23 +1402,17 @@ object VectorQueries {
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val emb = Tables.embeddings(s, dir)
     // the banded candidate + exact-cosine pass is the memoized
-    // candCosines frame shared with q74/q168 (round 18); DBSCAN's
-    // neighbourhood predicate is its eps filter
-    val nb = candCosines(s, dir)
+    // candCosines frame shared with q74/q168 (round 18), which holds
+    // both orientations of every pair: DBSCAN's symmetric neighbour
+    // list is its eps filter. It feeds FOUR consumers (degrees, the
+    // core-core edges, border assignment, the output join) — persist
+    // so the filter over the candCosines cache runs once. Cached
+    // hash-partitioned on `a` at a STATE-sized count (the graph is
+    // edge-list-sized, not corpus-sized — round 18); off
+    // the a-partitioned cache the deg aggregation plans exchange-free
+    val sym = candCosines(s, dir)
       .filter(col("cosine") >= DbscanEps)
-      .select("v1", "v2")
-    // the symmetrized neighbour list feeds FOUR consumers (degrees,
-    // the core-core edges, border assignment, the output join) —
-    // persist so the eps filter over the candCosines cache runs once.
-    // Cached hash-partitioned on `a` at a STATE-sized count (the
-    // graph is edge-list-sized, not corpus-sized — round 18, guide
-    // §2.2): the union of two 32-partition cached reads otherwise
-    // persists as 64 near-empty partitions that every consumer pays
-    // 64 task launches to read, and the deg groupBy + both semi
-    // joins re-shuffle; off the a-partitioned cache the deg
-    // aggregation plans exchange-free
-    val sym = nb.select(col("v1").as("a"), col("v2").as("b"))
-      .unionByName(nb.select(col("v2").as("a"), col("v1").as("b")))
+      .select(col("src").as("a"), col("dst").as("b"))
       .repartition(8, col("a"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = sym.groupBy("a").agg(count(lit(1)).as("deg"))
@@ -1413,9 +1430,9 @@ object VectorQueries {
     // state-sized round partitions are pinned INSIDE the operator
     // since round 18 (GraphComponents.withStatePartitions), so every
     // CC consumer gets the q178 treatment, not just this one
-    val comp = graft.operators.GraphComponents.connectedComponentsStar(
-        core.select(col("a").as("node")), coreEdges)
-      .localCheckpoint()
+    val comp = Shared.checkpoint(
+        graft.operators.GraphComponents.connectedComponentsStar(
+          core.select(col("a").as("node")), coreEdges))
       .select(col("node").as("a"), col("comp").as("cluster"))
     val border = sym
       .join(core, Seq("a"), "anti")
@@ -1443,35 +1460,23 @@ object VectorQueries {
     * variants, label propagation, and graph-based dedup: candidates
     * come from the SAME corpus-derived LSH buckets q31/q74 use (banded
     * self-join — linear in the corpus at the derived width, never
-    * all-pairs), each undirected candidate pair scores its exact
-    * cosine ONCE, and the per-node top-k ranks the symmetrized edge
+    * all-pairs), and the per-node top-k ranks each node's candidate
     * list. Nodes whose buckets hold no other member are absent (an
     * isolated node has no k-nearest edges at this resolution — the
     * honest LSH answer; RECALL.md owns the quality number).
     *
     * Scale shape: bucket join bounded by the derived band width
-    * (buckets ~16 deep at any n), cosine touched once per candidate
-    * PAIR (half the symmetrized volume), one window over the per-node
-    * edge lists. */
-  /** The ranked kNN edge list pre-sort, memoized (round 18): q171's
-    * two label-prop rounds re-ran the symmetrize + rank window on
-    * every call — the graph is built once per session now. */
-  private def knnEdges(s: SparkSession, dir: String): DataFrame =
-    Shared.memoized(s, dir, "knnEdges") {
-      // the banded candidate + exact-cosine pass is the memoized
-      // candCosines frame shared with q74/q178 (round 18)
-      val scored = candCosines(s, dir)
-      val sym = scored.select(col("v1").as("src"), col("v2").as("dst"), col("cosine"))
-        .unionByName(scored.select(col("v2").as("src"), col("v1").as("dst"),
-          col("cosine")))
-      val w = Window.partitionBy("src").orderBy(col("cosine").desc, col("dst"))
-      sym.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= KnnK)
-        .select("src", "dst", "cosine", "rnk")
-    }
-
+    * (buckets ~16 deep at any n), one window over the src-partitioned
+    * per-node candidate lists; both run inside the shared
+    * [[candCosines]] build, so the graph is its `rnk` filter. */
   def q168KnnGraph(s: SparkSession, dir: String): DataFrame =
     knnEdges(s, dir).orderBy("src", "rnk")
+
+  /** The kNN edge list pre-sort (q168, q171): the top-[[KnnK]] rows of
+    * the memoized [[candCosines]] frame, which ranks every candidate
+    * orientation before it prunes. */
+  private def knnEdges(s: SparkSession, dir: String): DataFrame =
+    candCosines(s, dir).filter(col("rnk") <= KnnK)
 
   /** q169: PER-DIMENSION EMBEDDING PROFILE — the ANALYZE pass for a
     * vector column (q127's column profile, embedding-side): count,

@@ -158,7 +158,8 @@ object CurationStream {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val out = s.table(name).orderBy("new_doc", "old_doc").localCheckpoint()
+    val out = graft.queries.Shared.checkpoint(
+      s.table(name).orderBy("new_doc", "old_doc"))
     exSets.unpersist(); exBuckets.unpersist()
     out
   }

@@ -151,6 +151,33 @@ class EntityMatchingSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(shuffles.size <= 5, s"${shuffles.size} shuffles:\n$plan")
   }
 
+  test("matchScores: (doc1, doc2, score_type) is unique and doc1 < doc2, " +
+      "so q44 is its projection") {
+    queries.Shared.clear()
+    val scores = queries.MatchingQueries.matchScores(spark, sf)
+    val n = scores.count()
+    assert(n > 0)
+    assert(scores.select("doc1", "doc2", "score_type").distinct().count() === n)
+    assert(scores.filter(col("doc1") >= col("doc2")).count() === 0L)
+    // q44's former spelling: the rows unioned with their mirror, one
+    // group per (least, greatest, type)
+    val part = scores.filter(col("score_type") === "part_overlap")
+    val grouped = part.unionByName(part.select(
+        col("doc2").as("doc1"), col("doc1").as("doc2"),
+        col("score_type"), col("item_count"), col("score")))
+      .select(least(col("doc1"), col("doc2")).as("pair_lo"),
+        greatest(col("doc1"), col("doc2")).as("pair_hi"),
+        col("score_type"), col("item_count"), col("score"))
+      .groupBy("pair_lo", "pair_hi", "score_type")
+      .agg(count(lit(1)).as("n_directions"),
+        sum("item_count").as("total_items"), max("score").as("score"))
+      .orderBy("pair_lo", "pair_hi")
+    val q44 = SparkEntry.queries("q44_pair_dedup")(spark, sf)
+    assert(q44.columns.toSeq === grouped.columns.toSeq)
+    assert(q44.collect().toSeq === grouped.collect().toSeq)
+    queries.Shared.clear()
+  }
+
   test("q19's pivot reads the doc1 layout of the score cache in place, " +
       "with no hash exchange") {
     // matchScores keeps matchCands' doc1 hash layout, so the (doc1,

@@ -14,8 +14,10 @@ tree, e.g. `git archive <rev> | tar -x -C <dir>` or a `git worktree`.
 
 Prints, per metric, the parent and change medians with their
 quartiles, the median of the per-pair change/parent ratios, and in how
-many pairs the change was lower; then each pair's ratios. `--out`
-also writes every run's metrics as JSON.
+many pairs the change was lower; then the same for the seconds of each
+warm and each query, read from each run's `result.json`
+(`harness.pass.warms` and `queries`); then each pair's metric ratios.
+`--out` also writes every run's metrics and step seconds as JSON.
 """
 import argparse
 import json
@@ -35,8 +37,9 @@ def seeds(spec):
 
 
 def run(checkout, workload, seed, trace):
-    """One perfbench run in `checkout`: {metric: value}, and whether it
-    reported itself correct."""
+    """One perfbench run in `checkout`: {metric: value}, whether it
+    reported itself correct, and {"warm <group>" | "query <name>":
+    seconds} from the run's detail record."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", "20", "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
@@ -46,7 +49,14 @@ def run(checkout, workload, seed, trace):
     except json.JSONDecodeError:
         sys.exit(f"perf_pairs: {checkout} seed {seed} printed no result "
                  f"(exit {p.returncode}):\n{p.stderr[-2000:]}")
-    return {k: v["value"] for k, v in res["metrics"].items()}, res["correct"]
+    detail = next(line[len("detail "):] for line in p.stdout.splitlines()
+                  if line.startswith("detail "))
+    with open(os.path.join(checkout, detail)) as f:
+        run_pass = json.load(f)["harness"]["pass"]
+    steps = {f"warm {w['group']}": w["seconds"] for w in run_pass["warms"]}
+    steps.update({f"query {q['name']}": q["seconds"] for q in run_pass["queries"]})
+    return ({k: v["value"] for k, v in res["metrics"].items()}, res["correct"],
+            steps)
 
 
 def quartiles(xs):
@@ -54,6 +64,21 @@ def quartiles(xs):
         return xs[0], xs[0]
     q = statistics.quantiles(xs, n=4, method="inclusive")
     return q[0], q[2]
+
+
+def table(pairs, key, names):
+    """One line per name: parent and change medians with quartiles, the
+    median change/parent ratio, and how many pairs the change was lower."""
+    for k in names:
+        par = [p["parent" + key][k] for p in pairs]
+        chg = [p["change" + key][k] for p in pairs]
+        ratios = [c / a for a, c in zip(par, chg) if a]
+        (pl, ph), (cl, ch) = quartiles(par), quartiles(chg)
+        ratio = f"{statistics.median(ratios):.3f}" if ratios else "n/a"
+        lower = sum(c < a for a, c in zip(par, chg))
+        print(f"  {k}: {statistics.median(par):.4g} ({pl:.4g}-{ph:.4g}) -> "
+              f"{statistics.median(chg):.4g} ({cl:.4g}-{ch:.4g}); "
+              f"x{ratio}; lower {lower}/{len(pairs)}")
 
 
 def main():
@@ -73,7 +98,7 @@ def main():
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         pair = {"seed": seed, "first": order[0]}
         for side in order:
-            pair[side], pair[side + "_correct"] = run(
+            pair[side], pair[side + "_correct"], pair[side + "_steps"] = run(
                 sides[side], args.workload, seed, args.trace)
         pairs.append(pair)
         print(f"seed {seed} ({order[0]} first): " + ", ".join(
@@ -87,16 +112,11 @@ def main():
     names = sorted(set(pairs[0]["parent"]) & set(pairs[0]["change"]))
     print(f"{args.workload}, {len(pairs)} pairs; median (quartiles) parent -> "
           f"change; median change/parent; pairs where change is lower")
-    for k in names:
-        par = [p["parent"][k] for p in pairs]
-        chg = [p["change"][k] for p in pairs]
-        ratios = [c / a for a, c in zip(par, chg) if a]
-        (pl, ph), (cl, ch) = quartiles(par), quartiles(chg)
-        ratio = f"{statistics.median(ratios):.3f}" if ratios else "n/a"
-        lower = sum(c < a for a, c in zip(par, chg))
-        print(f"  {k}: {statistics.median(par):.4g} ({pl:.4g}-{ph:.4g}) -> "
-              f"{statistics.median(chg):.4g} ({cl:.4g}-{ch:.4g}); "
-              f"x{ratio}; lower {lower}/{len(pairs)}")
+    table(pairs, "", names)
+    steps = [k for k in pairs[0]["parent_steps"]
+             if all(k in p[s + "_steps"] for p in pairs for s in ("parent", "change"))]
+    print("seconds per warm and query (same columns):")
+    table(pairs, "_steps", steps)
     print("per pair change/parent:")
     for p in pairs:
         print(f"  seed {p['seed']}: " + ", ".join(
