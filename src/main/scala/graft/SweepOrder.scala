@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.queries.{MatchingQueries, Shared, VectorQueries}
+import graft.queries.Shared
 
 /** Family-clustered sweep order for multi-query harnesses, and the one
   * [[sweep]] loop that runs a query list in it (Bench, Verify,
@@ -17,12 +17,14 @@ import graft.queries.{MatchingQueries, Shared, VectorQueries}
   * the live cluster and rebuilds to none, which is exactly how a user
   * would schedule a multi-query session over shared intermediates.
   *
-  * Every fact about a memo family lives in one [[Family]] row of
-  * [[families]]; a query's group, the cluster openers and the release
-  * schedule all derive from those rows. QueriesSpec checks the
-  * consumer sets against the touch log of an sf0.001 sweep. Queries
-  * touching no memo run last (their transients are retired per-query,
-  * so they exert no cache pressure on anyone).
+  * Every fact about a memo family lives in its one [[Family]] row,
+  * its key, layout and build included; [[families]] lists the rows. A
+  * query's group, the cluster openers, the release schedule and the
+  * staged warm set ([[warmSet]]) all derive from those rows.
+  * QueriesSpec checks the consumer sets against the touch log of an
+  * sf0.001 sweep, SweepOrderSpec the parents against what each build
+  * reads. Queries touching no memo run last (their transients are
+  * retired per-query, so they exert no cache pressure on anyone).
   *
   * Group order runs the most expensive family FIRST, straight after
   * the warm pass builds it, so the big frames are consumed while
@@ -40,99 +42,52 @@ object SweepOrder {
   final val Vector = 2
   final val Graph = 3
 
-  /** One memo family: the key-name `prefix` its `Shared.memoized` keys
-    * start with (parameterized keys carry scale-derived suffixes —
-    * "kmeans" covers "kmeans8"), its sweep `group`, the `parents`
-    * whose frames its build reads, and the `consumers` that read it. */
-  final case class Family(prefix: String, group: Int, parents: Seq[String],
-                          consumers: Set[String])
-
-  /** The memo families: the rows below, then one row per ANN-leg
-    * family and two per training chain, derived from
-    * [[VectorQueries.annLegs]] and [[MatchingQueries.trainingChains]].
-    * A drifted consumer set (a new query reading a released family)
-    * costs one visible rebuild, never a wrong answer; QueriesSpec
-    * fails on any touch not declared here, SweepOrderSpec on a lazily
-    * built family with a consumer one of its parents does not
-    * declare, and on one prefix starting another (a release would
-    * drop the live sibling). */
-  val families: Seq[Family] = Seq(
-    // both entity types' candidates; q13 alone reads them, so it opens
-    // the match cluster and the biggest frame releases right after it
-    Family("matchCands", Match, Nil, Set("q13_entity_candidates")),
-    Family("matchScores", Match, Seq("matchCands"), Set("q14_entity_scores",
-      "q15_type_filter", "q16_date_filter", "q17_multitype_filter",
-      "q18_match_stats", "q19_score_pivot", "q43_total_score",
-      "q44_pair_dedup", "q71_rank_eval", "q94_matcher_pipeline")),
-    // every training-chain query may build its chain's table from it
-    // (small to hold)
-    Family("pairScores2", Match, Seq("matchScores"), Set("q20_weight_grid",
-      "q72_weight_refine") ++ MatchingQueries.trainingChains.flatMap(_.queries)),
-    Family("dupPairs", Text, Nil, Set("q105_survivorship",
-      "q111_curation_report", "q123_split_leakage", "q129_triangles",
-      "q153_degree_dist", "q190_incremental_cc", "q193_source_contamination",
-      "q197_dataset_card", "q204_group_split", "q26_lsh_dup_pairs",
-      "q36_connected_components", "q59_level2_hamming",
-      "q93_curation_pipeline")),
-    Family("simhashes", Text, Nil, Set("q27_simhash", "q45_hamming_pairs",
-      "q59_level2_hamming")),
-    Family("shingleTf3", Text, Nil, Set("q111_curation_report",
-      "q197_dataset_card", "q49_rare_words", "q50_sentence_runs",
-      "q81_boilerplate_coverage", "q93_curation_pipeline")),
-    Family("lshBuckets", Vector, Nil, Set("q118_ann_recall",
-      "q162_embedding_dup_clusters", "q168_knn_graph", "q171_label_prop",
-      "q172_retrieval_metrics", "q178_dbscan", "q194_multiprobe_lsh",
-      "q31_knn_lsh", "q74_embedding_dups")),
-    // round 18: the shared candidate-cosine verifier frame
-    Family("candCosines", Vector, Seq("lshBuckets"), Set("q74_embedding_dups",
-      "q162_embedding_dup_clusters", "q168_knn_graph", "q171_label_prop",
-      "q178_dbscan")),
-    Family("kmeans", Vector, Nil, Set("q106_semdedup", "q118_ann_recall",
-      "q158_ivf_kmeans", "q164_persisted_index", "q172_retrieval_metrics",
-      "q174_ivf_pq", "q186_tombstone_serve", "q187_compaction_report",
-      "q82_kmeans")),
-    Family("pqCodebook", Vector, Nil, Set("q118_ann_recall",
-      "q172_retrieval_metrics", "q173_pq_ann")),
-    Family("pqCodes", Vector, Seq("pqCodebook"), Set("q118_ann_recall",
-      "q172_retrieval_metrics", "q173_pq_ann")),
-    Family("ivfpqBook", Vector, Seq("kmeans"), Set("q118_ann_recall",
-      "q172_retrieval_metrics", "q174_ivf_pq")),
-    Family("ivfpqCodes", Vector, Seq("ivfpqBook", "kmeans"),
-      Set("q118_ann_recall", "q172_retrieval_metrics", "q174_ivf_pq")),
-    Family("mmrCands", Vector, Nil, Set("q163_mmr_rerank")),
-    Family("mmrSims", Vector, Nil, Set("q163_mmr_rerank")),
-    Family("cosineWeights", Vector, Nil, Set("q29_cosine_shingles")),
-    Family("mlMinhashTf", Vector, Nil, Set("q57_ml_minhash")),
-    Family("prEdges", Graph, Nil, Set("q121_pagerank", "q182_trustrank")),
-    Family("bpeVocab", Graph, Nil, Set("q119_bpe_merges", "q131_bpe_encode"))
-  ) ++ annFamilies ++ chainFamilies
-
-  /** One family per ANN-leg memo prefix (the Matryoshka legs' keys
-    * annMrl8/16/32 are one family), read by each leg's standalone query
-    * and by every grader whose leg list holds it — the brute truth by
-    * every grader. */
-  private def annFamilies: Seq[Family] = {
-    val legs = VectorQueries.annLegs
-    legs.map(_.prefix).distinct.map { prefix =>
-      val mine = legs.filter(_.prefix == prefix)
-      val standalone = VectorQueries.legQueries
-        .collect { case (q, leg) if mine.contains(leg) => q }
-      val graders = VectorQueries.graders
-        .collect { case (q, g) if g.reads.exists(mine.contains) => q }
-      Family(prefix, Vector, mine.head.parents, (standalone ++ graders).toSet)
+  /** One memo family, declared once, next to the code it builds from:
+    * the key-name `prefix` its memo keys start with, its sweep
+    * `group`, the `parents` whose frames its build reads, the
+    * `consumers` that read it, the `parts` its frame is
+    * hash-partitioned on before caching ([[Shared.memoized]]) and its
+    * `build`. `A` is the key argument: `Unit` for a family with one
+    * key, the prefix; otherwise each argument is a key of its own, the
+    * prefix suffixed with it (k-means at k = 8 is "kmeans8", the
+    * Matryoshka leg at p = 8 "annMrl8"). Calling the row returns the
+    * frame, built once per (session, dir). */
+  final case class Family[A](prefix: String, group: Int,
+      parents: Seq[String], consumers: Set[String], parts: Seq[String] = Nil)(
+      val build: (SparkSession, String, A) => DataFrame) {
+    def key(arg: A): String = (arg: Any) match {
+      case () | None => prefix
+      case Some(a) => s"$prefix$a"
+      case a => s"$prefix$a"
     }
+
+    def apply(s: SparkSession, dir: String, arg: A): DataFrame =
+      Shared.memoized(s, dir, key(arg), parts)(build(s, dir, arg))
+
+    def apply(s: SparkSession, dir: String)
+             (implicit unit: Unit =:= A): DataFrame = apply(s, dir, unit(()))
   }
 
-  /** Each training chain's score table (built from pairScores2) and its
-    * Walker trajectory (built from the table). */
-  private def chainFamilies: Seq[Family] =
-    MatchingQueries.trainingChains.flatMap { c =>
-      Seq(Family(c.scoresKey, Match, Seq("pairScores2"), c.queries.toSet),
-        Family(c.walkKey, Match, Seq(c.scoresKey),
-          Set(c.walkQuery, c.serveQuery)))
-    }
+  /** Every memo family. A drifted consumer set (a new query reading a
+    * released family) costs one visible rebuild, never a wrong answer;
+    * QueriesSpec fails on any touch not declared in a row,
+    * SweepOrderSpec on a row whose build reads other families than its
+    * declared ancestors, and on one prefix starting another (a release
+    * would drop the live sibling). */
+  val families: Seq[Family[_]] = {
+    import graft.queries._
+    import MatchingQueries.{matchCands, matchScores, weightPairScores}
+    import VectorQueries.{annFamilies, candCosines, ivfpqBook, ivfpqCodes,
+      kmeans, lshBuckets, mmrCands, mmrSims, pqCodebook, pqCodes}
+    Seq(matchCands, matchScores, weightPairScores, Shared.dupPairs,
+      Shared.simhashes, ParityQueries.shingleTf3, lshBuckets, candCosines,
+      kmeans, pqCodebook, pqCodes, ivfpqBook, ivfpqCodes, mmrCands, mmrSims,
+      TextQueries.cosineWeights, MlQueries.q57Tf, MiscQueries.prEdges,
+      NlpQueries.bpeVocab) ++ annFamilies ++
+      MatchingQueries.trainingChains.flatMap(c => Seq(c.pairScores, c.walk))
+  }
 
-  private val byPrefix: Map[String, Family] =
+  private val byPrefix: Map[String, Family[_]] =
     families.map(f => f.prefix -> f).toMap
 
   private val queryGroup: Map[String, Int] = families
@@ -155,7 +110,7 @@ object SweepOrder {
     * under it is: matchCands 0, matchScores 1, pairScores2 2, …
     * Deeper chain = costlier rebuild class, without hand-coding
     * per-family sizes here. */
-  private def chainDepth(f: Family): Int =
+  private def chainDepth(f: Family[_]): Int =
     if (f.parents.isEmpty) 0
     else 1 + f.parents.map(p => chainDepth(byPrefix(p))).max
 
@@ -190,7 +145,7 @@ object SweepOrder {
     qs.sortBy { case (n, _) => key(n) }
 
   /** Families built from `f`, transitively. */
-  private def derived(f: Family): Seq[Family] =
+  private def derived(f: Family[_]): Seq[Family[_]] =
     families.filter(_.parents.contains(f.prefix)).flatMap(c => c +: derived(c))
 
   /** index → memo-key prefixes whose last consumer in `order` sits at
@@ -214,6 +169,27 @@ object SweepOrder {
       .groupBy(_._2).view.mapValues(_.map(_._1).sorted).toMap
   }
 
+  /** The families the staged warm builds, in parent order: each one
+    * that breaks the lazy-build rule — some parent's consumers do not
+    * cover its own, so a schedule may release that parent before the
+    * family's first consumer builds from it — and every ancestor of
+    * one, so the warm itself reads no released frame. Every other
+    * family builds at its first consumer, its parents still cached. */
+  private[graft] def warmBuilt(fams: Seq[Family[_]]): Seq[Family[_]] = {
+    val byName = fams.map(f => f.prefix -> f).toMap
+    def ancestors(f: Family[_]): Seq[Family[_]] =
+      f.parents.map(byName).flatMap(p => p +: ancestors(p))
+    val breaking = fams.filter(f =>
+      f.parents.exists(p => !f.consumers.subsetOf(byName(p).consumers)))
+    (breaking ++ breaking.flatMap(ancestors)).distinct
+      .sortBy(f => ancestors(f).distinct.size)
+  }
+
+  /** [[warmBuilt]] over [[families]]: matchCands → matchScores →
+    * pairScores2 (matchScores has readers q13 lacks, and pairScores2
+    * readers matchScores lacks). */
+  val warmSet: Seq[Family[_]] = warmBuilt(families)
+
   /** What one [[sweep]] did: each query's action result or failure, in
     * run order, and the staged warm's wall seconds and whether every
     * group built. */
@@ -221,10 +197,9 @@ object SweepOrder {
                             warmSec: Double, warmOk: Boolean)
 
   /** Run `qs` the way one user session over shared memos runs them: in
-    * clustered order; on a `full` sweep, each warmable group's
-    * release-critical memo families ([[Shared.warmGroup]]: those whose
-    * parent the sweep may release before their first consumer) built
-    * right before its first query, every other family at its first
+    * clustered order; on a `full` sweep, each group's share of the
+    * staged warm ([[warmSet]], via [[Shared.warmGroup]]) built right
+    * before its first query, every other family at its first
     * consumer, and a GC at each group boundary
     * (deleted shuffle files stay mmap'd until a GC; at sf10 that
     * transient ran df 20–40 G above du); then per query, `action` on

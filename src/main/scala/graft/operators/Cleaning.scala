@@ -41,10 +41,4 @@ object Cleaning {
   /** First embedded integer id, or null ("Customer#000000042" -> 42). */
   def embeddedId(c: Column): Column =
     nullif(regexp_extract(c, "([0-9]+)", 1), lit("")).cast("long")
-
-  /** First email-shaped token, or null (reference extracts emails from
-    * `<...>`-wrapped publication names). */
-  def extractEmail(c: Column): Column =
-    nullif(regexp_extract(c, "([A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,})", 1),
-      lit(""))
 }

@@ -23,14 +23,13 @@ import graft.functions.{Exact, TextFns}
   */
 object CosineText {
 
-  /** `memo` persists the doc×term weight frame, which feeds the norms
-    * AND both sides of the inverted-index self-join — without it the
-    * tokenize→shingle→tf→idf chain re-runs per consumer (callers pass
-    * a session-level cache, e.g. `Shared.memoized`). */
-  def cosinePairs(docs: DataFrame, idCol: String, textCol: String,
-                  k: Int = 3, maxDf: Long = 100,
-                  minCosine: Double = 0.1,
-                  memo: DataFrame => DataFrame = identity): DataFrame = {
+  /** The doc×term weight frame `(doc_id, term, w)`: k-shingle tf ×
+    * milli-quantized idf, terms above `maxDf` documents dropped. It
+    * feeds the norms AND both sides of the inverted-index self-join in
+    * [[cosinePairs]], so callers persist it (q29 memoizes it) or the
+    * tokenize→shingle→tf→idf chain re-runs per consumer. */
+  def cosineWeights(docs: DataFrame, idCol: String, textCol: String,
+                    k: Int = 3, maxDf: Long = 100): DataFrame = {
     val terms = docs
       .select(col(idCol).as("doc_id"),
         explode(TextFns.shingleHashes(TextFns.tokens(col(textCol)), k)).as("term"))
@@ -46,8 +45,13 @@ object CosineText {
       .select(col("term"),
         round(log10(col("n_docs").cast("double") / col("df")) * 1000).cast("long")
           .as("idf_milli"))
-    val weights = memo(tf.join(idf, "term")
-      .select(col("doc_id"), col("term"), (col("tf") * col("idf_milli")).as("w")))
+    tf.join(idf, "term")
+      .select(col("doc_id"), col("term"), (col("tf") * col("idf_milli")).as("w"))
+  }
+
+  /** Document pairs sharing a term of `weights` ([[cosineWeights]]) at
+    * cosine ≥ `minCosine`: `(doc1, doc2, n_shared, cosine)`. */
+  def cosinePairs(weights: DataFrame, minCosine: Double = 0.1): DataFrame = {
     // sxx = 0 (every surviving term of a doc at idf exactly 0 — only
     // possible in a corpus of <= maxDf docs) would make the cosine
     // 0/0, which Spark (NULL) and DuckDB (NaN, then a CAST error in

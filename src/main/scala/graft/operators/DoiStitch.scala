@@ -47,14 +47,6 @@ object DoiStitch {
     out.result()
   }
 
-  /** Plain DOI extraction (no stitching). */
-  def analyseDoi(text: String): Seq[String] = {
-    val m = doiRe.matcher(asciiFold(text))
-    val out = Seq.newBuilder[String]
-    while (m.find()) out += m.group(0)
-    out.result()
-  }
-
   /** DOI extraction with ILL suffix stitching. */
   def analyseIllDoi(text: String): Seq[String] = {
     val t = asciiFold(text)

@@ -88,13 +88,6 @@ object Multimodal {
 
   // ---- generic binary packing (audio / raw payloads) ------------------
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("payload", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("n_bytes", IntegerType),
-      StructField("kind", StringType))))))
-
   /** Pack a text column as an opaque media payload (raw modalities —
     * u8 PCM audio, raw frame reels — where the bytes ARE the decoded
     * samples; the image path goes through [[packImages]]). */

@@ -43,14 +43,6 @@ object PairFilters {
     joinBothSides(pairs, dates, "doc_date")
       .filter(year(col("doc_date_1")) <= year(col("doc_date_2")))
 
-  /** P4 valid-id filter: both endpoints must be in `validIds(doc_id)`
-    * — two left-semi joins. */
-  def validIdFilter(pairs: DataFrame, validIds: DataFrame): DataFrame = {
-    val v1 = validIds.select(col("doc_id").as("doc1"))
-    val v2 = validIds.select(col("doc_id").as("doc2"))
-    pairs.join(v1, Seq("doc1"), "left_semi").join(v2, Seq("doc2"), "left_semi")
-  }
-
   /** P5 MultipleTypeMatchFilter: keep a pair iff matched by >= 2 score
     * types, or by a whitelisted type. `matches` has (doc1, doc2,
     * score_type); returns one row per surviving pair with its sorted

@@ -97,11 +97,6 @@ object PersonDedup {
       (pubB.endsWith(concat(lit(" "), fwLastA)) &&
         pubB.startsWith(concat(firstA, lit(" ")))))
 
-  /** Convenience spelling deriving firstWord inline (fine outside
-    * quadratic contexts). */
-  def pubMatches(firstA: Column, lastA: Column, pubB: Column): Column =
-    pubMatchesPrepped(firstWord(lastA), firstA, pubB)
-
   /** The lastname + firstname/initials branch, over precomputed
     * leading lastname words. */
   def lastFirstAgreementPrepped(first1: Column, fwLast1: Column,
@@ -110,20 +105,6 @@ object PersonDedup {
       !nullOrEmpty(first1) && !nullOrEmpty(first2) && (
         (length(first1) >= 2 && length(first2) >= 2 && first1 === first2) ||
         substring(first1, 1, 1) === substring(first2, 1, 1))
-
-  /** The lastname + firstname/initials branch of the pair predicate. */
-  def lastFirstAgreement(first1: Column, last1: Column,
-                         first2: Column, last2: Column): Column =
-    lastFirstAgreementPrepped(first1, firstWord(last1),
-      first2, firstWord(last2))
-
-  /** getNamesProbablyEqual: publication-name match in either
-    * direction, or equal leading lastnames with full-firstname or
-    * first-initial agreement. */
-  def namesProbablyEqual(first1: Column, last1: Column, pub1: Column,
-                         first2: Column, last2: Column, pub2: Column): Column =
-    pubMatches(first1, last1, pub2) || pubMatches(first2, last2, pub1) ||
-      lastFirstAgreement(first1, last1, first2, last2)
 
   // ---- DuckDB spellings (oracle side, kept adjacent like TextFns) ---
 

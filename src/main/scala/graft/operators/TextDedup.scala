@@ -135,30 +135,4 @@ object TextDedup {
       .filter(col("jaccard") >= minJaccard)
       .select("new_doc", "old_doc", "n_shared", "jaccard")
   }
-
-  /** Exact n-gram Jaccard over pairs sharing at least one shingle —
-    * the brute-force (full-recall) near-dup path. Candidate pairs via
-    * inverted index on shingle hash, like EntityMatching but set-
-    * semantics; the df cap bounds hot shingles. */
-  def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                   k: Int = 5, minJaccard: Double = 0.1,
-                   maxShingleDf: Long = 100): DataFrame = {
-    val sets = shingleSets(docs, idCol, textCol, k)
-    val posting = sets.select(col("doc_id"), explode(col("hashes")).as("h"))
-    val guarded = posting.withColumn("df",
-      count(lit(1)).over(Window.partitionBy("h")))
-      .filter(col("df") <= maxShingleDf)
-    val pairs = guarded.select(col("h"), col("doc_id").as("doc1"))
-      .join(guarded.select(col("h"), col("doc_id").as("doc2")), Seq("h"))
-      .filter(col("doc1") < col("doc2"))
-      .select("doc1", "doc2").distinct()
-    val h1 = sets.select(col("doc_id").as("doc1"), col("hashes").as("h1"))
-    val h2 = sets.select(col("doc_id").as("doc2"), col("hashes").as("h2"))
-    pairs.join(h1, Seq("doc1")).join(h2, Seq("doc2"))
-      .withColumn("n_shared", size(array_intersect(col("h1"), col("h2"))))
-      .withColumn("jaccard", Exact.r6(
-        col("n_shared") / (size(col("h1")) + size(col("h2")) - col("n_shared"))))
-      .filter(col("jaccard") >= minJaccard)
-      .select("doc1", "doc2", "n_shared", "jaccard")
-  }
 }

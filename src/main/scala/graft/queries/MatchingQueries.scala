@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
 import graft.Tables
+import graft.SweepOrder.{Family, Match}
 import graft.operators._
 
 /** Entity-matching operator family (SURVEY.md §2 J1/A1-A3/A6-A9/P1-P5/
@@ -37,23 +38,22 @@ object MatchingQueries {
     * the accumulated shuffle files can exhaust local disk (the round-1
     * bench died exactly that way). Persisting the shared frame once per
     * (session, dir) is the idiomatic Spark answer — same thing a user
-    * composing several queries over one match table would do. */
-  import Shared.memoized
-
-  // Both entity types as one plan (one lineitem scan, one self-join on
-  // (score_type, entity_id)), partitioned by doc1 ALONE (round 17,
-  // guide §2.4): HashPartitioning on a subset of downstream keys
-  // satisfies every ClusteredDistribution that includes doc1 — so the
-  // (doc1, doc2, score_type) roll-up below, the (doc1, doc2) pivot and
-  // the weight-family rank windows over (grid point, doc1) all plan
-  // with ZERO exchanges off this layout, which the roll-up and the
-  // pivot keep. Only q13 reads it, so the sweep releases it after q13.
-  private def matchCands(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "matchCands", Seq("doc1"))(matchCandsPlan(s, dir))
-
-  /** The plan [[matchCands]] persists, before its doc1 repartition. */
-  private[graft] def matchCandsPlan(s: SparkSession, dir: String): DataFrame =
-    EntityMatching.candidatePairs(matchEntities(s, dir), by = Seq("score_type"))
+    * composing several queries over one match table would do.
+    *
+    * Both entity types as one plan (one lineitem scan, one self-join on
+    * (score_type, entity_id)), partitioned by doc1 ALONE (round 17,
+    * guide §2.4): HashPartitioning on a subset of downstream keys
+    * satisfies every ClusteredDistribution that includes doc1 — so the
+    * (doc1, doc2, score_type) roll-up below, the (doc1, doc2) pivot and
+    * the weight-family rank windows over (grid point, doc1) all plan
+    * with ZERO exchanges off this layout, which the roll-up and the
+    * pivot keep. Only q13 reads it, so it opens the match cluster and
+    * the sweep releases the biggest frame right after it. */
+  private[graft] lazy val matchCands: Family[Unit] = Family[Unit](
+      "matchCands", Match, Nil, Set("q13_entity_candidates"), Seq("doc1")) {
+    (s, dir, _) =>
+      EntityMatching.candidatePairs(matchEntities(s, dir), by = Seq("score_type"))
+  }
 
   /** Per-pair scores of both entity types, `Schemas.matchScores`.
     * Invariant, which q44 relies on and EntityMatchingSpec checks:
@@ -66,9 +66,13 @@ object MatchingQueries {
     * exchange-free and its output KEEPS the doc1 hash layout — an extra
     * repartition would re-shuffle every scored pair into the layout it
     * is in. */
-  private[graft] def matchScores(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "matchScores")(
-      EntityMatching.scoreTypedPairs(matchCands(s, dir)))
+  private[graft] lazy val matchScores: Family[Unit] = Family[Unit](
+      "matchScores", Match, Seq(matchCands.prefix), Set("q14_entity_scores",
+        "q15_type_filter", "q16_date_filter", "q17_multitype_filter",
+        "q18_match_stats", "q19_score_pivot", "q43_total_score",
+        "q44_pair_dedup", "q71_rank_eval", "q94_matcher_pipeline")) {
+    (s, dir, _) => EntityMatching.scoreTypedPairs(matchCands(s, dir))
+  }
 
   private def partScores(s: SparkSession, dir: String): DataFrame =
     matchScores(s, dir).filter(col("score_type") === "part_overlap")
@@ -93,27 +97,21 @@ object MatchingQueries {
     * intersection of the two matchers). MEMOIZED as its own family
     * (round 16), so the training chains never hold the pair-score
     * table: the sweep releases [[matchScores]] after its last reader,
-    * before the k-chains build from this frame. It keeps the doc1
+    * before the k-chains build from this frame. Every training-chain
+    * query is a consumer, since each may build its chain's table from
+    * it (small to hold). It keeps the doc1
     * layout of the exchange-free pivot, so every training
     * evaluation's rank window over (grid point, doc1) is exchange-free
     * (subset clustering), for q20/q72 and the k=3/k=6 tables derived
     * from this frame. */
-  private[graft] def weightPairScores(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "pairScores2")(
-      pivotedScores(s, dir)
-        .filter(col("part_overlap") > 0.0 && col("partsupp_overlap") > 0.0)
-        .select(col("doc1"), col("doc2"),
-          col("part_overlap").as("s1"), col("partsupp_overlap").as("s2")))
-
-  /** Materialize the match chain whose parents the sweep releases
-    * early (q13 is matchCands' only reader), so no consumer rebuilds a
-    * released parent. Each build reads the layer below from the cache.
-    * The k=3/k=6 training chains build at their first consumer, with
-    * pairScores2 still cached. */
-  private[queries] def warmShared(s: SparkSession, dir: String): Unit = {
-    matchCands(s, dir)
-    matchScores(s, dir)
-    weightPairScores(s, dir)
+  private[graft] lazy val weightPairScores: Family[Unit] = Family[Unit](
+      "pairScores2", Match, Seq(matchScores.prefix),
+      Set("q20_weight_grid", "q72_weight_refine") ++
+        trainingChains.flatMap(_.queries)) { (s, dir, _) =>
+    pivotedScores(s, dir)
+      .filter(col("part_overlap") > 0.0 && col("partsupp_overlap") > 0.0)
+      .select(col("doc1"), col("doc2"),
+        col("part_overlap").as("s1"), col("partsupp_overlap").as("s2"))
   }
 
   /** Document-type dim: open orders play the PROPOSAL role. */
@@ -472,30 +470,28 @@ object MatchingQueries {
       dims: Seq[ScoreDim], gridQuery: String, walkQuery: String,
       serveQuery: String) {
     val k: Int = 2 + dims.size
-    val scoresKey: String = s"pairScores$k"
-    val walkKey: String = s"k${k}walk"
     def queries: Seq[String] = Seq(gridQuery, walkQuery, serveQuery)
 
-    def pairScores(s: SparkSession, dir: String): DataFrame =
-      memoized(s, dir, scoresKey, Seq("doc1")) {
-        val dim = Tables.orders(s, dir).select(
-          col("o_orderkey").as("doc_id") +: dims.map(d => d.value.as(d.name)): _*)
-        def side(i: Int) = dim.select(col("doc_id").as(s"doc$i") +:
-          dims.map(d => col(d.name).as(s"${d.name}$i")): _*)
-        dims.zipWithIndex
-          .foldLeft(weightPairScores(s, dir)
-            .join(side(1), Seq("doc1")).join(side(2), Seq("doc2"))) {
-            case (df, (d, i)) => df.withColumn(s"s${i + 3}",
-              d.score(col(s"${d.name}1"), col(s"${d.name}2")))
-          }
-          .select(("doc1" +: "doc2" +: (1 to k).map(i => s"s$i")).map(col): _*)
-      }
+    lazy val pairScores: Family[Unit] = Family[Unit](s"pairScores$k", Match,
+        Seq(weightPairScores.prefix), queries.toSet, Seq("doc1")) { (s, dir, _) =>
+      val dim = Tables.orders(s, dir).select(
+        col("o_orderkey").as("doc_id") +: dims.map(d => d.value.as(d.name)): _*)
+      def side(i: Int) = dim.select(col("doc_id").as(s"doc$i") +:
+        dims.map(d => col(d.name).as(s"${d.name}$i")): _*)
+      dims.zipWithIndex
+        .foldLeft(weightPairScores(s, dir)
+          .join(side(1), Seq("doc1")).join(side(2), Seq("doc2"))) {
+          case (df, (d, i)) => df.withColumn(s"s${i + 3}",
+            d.score(col(s"${d.name}1"), col(s"${d.name}2")))
+        }
+        .select(("doc1" +: "doc2" +: (1 to k).map(i => s"s$i")).map(col): _*)
+    }
 
-    def walk(s: SparkSession, dir: String): DataFrame =
-      memoized(s, dir, walkKey) {
-        WeightTraining.refineWeightsSimplexLabeled(s,
-          withLabels(pairScores(s, dir)), k = k)
-      }
+    lazy val walk: Family[Unit] = Family[Unit](s"k${k}walk", Match,
+        Seq(pairScores.prefix), Set(walkQuery, serveQuery)) { (s, dir, _) =>
+      WeightTraining.refineWeightsSimplexLabeled(s,
+        withLabels(pairScores(s, dir)), k = k)
+    }
 
     def grid(s: SparkSession, dir: String): DataFrame =
       WeightTraining.evaluateSimplexLabeled(

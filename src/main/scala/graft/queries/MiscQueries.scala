@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.SweepOrder.{Family, Graph}
 import graft.functions.TextFns
 
 
@@ -250,22 +251,30 @@ object MiscQueries {
   /** Exposed for the NewQueryPlanSpec lineage assertion. */
   private[graft] def prCheckpointCadence: Int = PrCheckpointEvery
 
+  /** Supplier-node offset of the trade graph (disjoint from custkeys). */
+  private val S = 100000000L
+
+  /** The undirected customer–supplier trade graph `(src, dst)` q121
+    * and q182 rank over. Hash-partitioned by src before caching: every
+    * iteration joins on src, so the cached layout satisfies the join's
+    * distribution and only the tiny rank frame shuffles per iteration. */
+  private[graft] lazy val prEdges: Family[Unit] = Family[Unit]("prEdges",
+      Graph, Nil, Set("q121_pagerank", "q182_trustrank"), Seq("src")) {
+    (s, dir, _) =>
+      val trades = Tables.orders(s, dir)
+        .select(col("o_orderkey"), col("o_custkey"))
+        .join(Tables.lineitem(s, dir)
+          .select(col("l_orderkey").as("o_orderkey"), col("l_suppkey")),
+          Seq("o_orderkey"))
+        .select(col("o_custkey").as("c"), (col("l_suppkey") + S).as("p"))
+        .distinct()
+      trades.select(col("c").as("src"), col("p").as("dst"))
+        .unionByName(trades.select(col("p").as("src"), col("c").as("dst")))
+  }
+
   private[graft] def pageRank(s: SparkSession, dir: String,
                               iterations: Int): DataFrame = {
-    val S = 100000000L // supplier-node offset (disjoint from custkeys)
-    val trades = Tables.orders(s, dir)
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, dir)
-        .select(col("l_orderkey").as("o_orderkey"), col("l_suppkey")),
-        Seq("o_orderkey"))
-      .select(col("o_custkey").as("c"), (col("l_suppkey") + S).as("p"))
-      .distinct()
-    // hash-partitioned by src before caching: every iteration joins on
-    // src, so the cached layout satisfies the join's distribution and
-    // only the tiny rank frame shuffles per iteration
-    val edges = Shared.memoized(s, dir, "prEdges", Seq("src"))(
-      trades.select(col("c").as("src"), col("p").as("dst"))
-        .unionByName(trades.select(col("p").as("src"), col("c").as("dst"))))
+    val edges = prEdges(s, dir)
     // outdeg is node-count-sized and read by EVERY iteration (plus the
     // init and final projections) — persist it once instead of
     // re-aggregating the edge cache per iteration (round 17, guide
@@ -386,17 +395,7 @@ object MiscQueries {
     * combinable sum by dst per iteration over the cached edges; the
     * seed flag rides in a broadcast. */
   def q182TrustRank(s: SparkSession, dir: String): DataFrame = {
-    val S = 100000000L
-    val trades = Tables.orders(s, dir)
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, dir)
-        .select(col("l_orderkey").as("o_orderkey"), col("l_suppkey")),
-        Seq("o_orderkey"))
-      .select(col("o_custkey").as("c"), (col("l_suppkey") + S).as("p"))
-      .distinct()
-    val edges = Shared.memoized(s, dir, "prEdges", Seq("src"))(
-      trades.select(col("c").as("src"), col("p").as("dst"))
-        .unionByName(trades.select(col("p").as("src"), col("c").as("dst"))))
+    val edges = prEdges(s, dir)
     // persisted node-sized outdeg + single edge join per iteration —
     // same round-17 restructure as q121 (see pageRank)
     val outdeg = Shared.track(edges.groupBy("src")

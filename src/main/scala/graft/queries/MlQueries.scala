@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.feature.MinHashLSH
 import graft.Tables
+import graft.SweepOrder.{Family, Vector}
 import graft.functions.{Exact, StemExpression, TextFns}
 
 /** ML-adjacent operators from SURVEY.md §2.8-2.9: Porter stem indexing
@@ -209,18 +210,18 @@ object MlQueries {
     * approxSimilarityJoin consumes it on BOTH sides of its self-join,
     * which would otherwise recompute the tokenize→shingle→index
     * pipeline twice; also reused by MlSpec's parity assertions. */
-  def q57Tf(s: SparkSession, dir: String): DataFrame = {
+  private[graft] lazy val q57Tf: Family[Unit] = Family[Unit]("mlMinhashTf",
+      Vector, Nil, Set("q57_ml_minhash")) { (s, dir, _) =>
     val toVec = udf((idx: Seq[Long]) =>
       org.apache.spark.ml.linalg.Vectors.sparse(
         minhashDim, idx.map(_.toInt).toArray, Array.fill(idx.size)(1.0)))
-    Shared.memoized(s, dir, "mlMinhashTf")(
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          array_sort(array_distinct(transform(
-            TextFns.shingleHashes(TextFns.tokens(col("text")), 5),
-            h => h % minhashDim))).as("idx"))
-        .filter(size(col("idx")) > 0)
-        .withColumn("features", toVec(col("idx"))))
+    Tables.documents(s, dir)
+      .select(col("doc_id"),
+        array_sort(array_distinct(transform(
+          TextFns.shingleHashes(TextFns.tokens(col("text")), 5),
+          h => h % minhashDim))).as("idx"))
+      .filter(size(col("idx")) > 0)
+      .withColumn("features", toVec(col("idx")))
   }
 
   /** `spark.ml` MinHashLSH approximate-similarity join (M4/J9) over

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.SweepOrder.{Family, Graph}
 import graft.functions.TextFns
 import graft.operators.{DoiStitch, SuffixLemmatizer, SuffixPosTagger, WordClassifier}
 
@@ -317,14 +318,15 @@ object NlpQueries {
     * shape) scan. The corpus itself is read once. */
   /** The marker-wrapped word-frequency segmentation table BPE learning
     * and encoding share (built once per session). */
-  private def bpeVocab(s: SparkSession, dir: String): DataFrame =
-    Shared.memoized(s, dir, "bpeVocab")(
-      Tables.documents(s, dir)
-        .select(explode(TextFns.tokens(col("text"))).as("word"))
-        .filter(col("word").rlike("^[a-z]+$"))
-        .groupBy("word").agg(count(lit(1)).as("freq"))
-        .withColumn("s", concat_ws(" ",
-          transform(split(col("word"), ""), c => concat(lit("<"), c, lit(">"))))))
+  private[graft] lazy val bpeVocab: Family[Unit] = Family[Unit]("bpeVocab",
+      Graph, Nil, Set("q119_bpe_merges", "q131_bpe_encode")) { (s, dir, _) =>
+    Tables.documents(s, dir)
+      .select(explode(TextFns.tokens(col("text"))).as("word"))
+      .filter(col("word").rlike("^[a-z]+$"))
+      .groupBy("word").agg(count(lit(1)).as("freq"))
+      .withColumn("s", concat_ws(" ",
+        transform(split(col("word"), ""), c => concat(lit("<"), c, lit(">")))))
+  }
 
   /** Most frequent adjacent symbol pair of `seg` (freq-weighted, ties
     * lexicographic) — one bounded argmax collect, the q72 driver-loop

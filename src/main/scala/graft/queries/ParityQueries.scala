@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.SweepOrder.{Family, Text}
 import graft.functions.TextFns
 
 /** Reference-parity operator family, round 2: the analyser/matcher
@@ -85,11 +86,15 @@ object ParityQueries {
   }
 
   /** 3-shingle occurrences with term frequency per doc. */
-  private def shingleTf(s: SparkSession, dir: String): DataFrame =
+  private[graft] lazy val shingleTf3: Family[Unit] = Family[Unit](
+      "shingleTf3", Text, Nil, Set("q111_curation_report",
+        "q197_dataset_card", "q49_rare_words", "q50_sentence_runs",
+        "q81_boilerplate_coverage", "q93_curation_pipeline")) { (s, dir, _) =>
     Tables.documents(s, dir)
       .select(col("doc_id"),
         explode(TextFns.shingles(TextFns.tokens(col("text")), 3)).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
+  }
 
   /** P8 + A4: rare-word matcher — keep terms passing the rare-word
     * predicate (document frequency in [2, 30], length in [5, 90],
@@ -100,7 +105,7 @@ object ParityQueries {
     // memoized: tf feeds the corpus count, the rare-term filter AND
     // both sides of the pair self-join — uncached, the tokenize →
     // explode → groupBy pipeline re-runs five times
-    val tf = Shared.memoized(s, dir, "shingleTf3")(shingleTf(s, dir))
+    val tf = shingleTf3(s, dir)
     val nDocs = tf.agg(countDistinct("doc_id").as("n_docs"))
     val rare = tf.groupBy("w").agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, 30) &&
@@ -143,7 +148,7 @@ object ParityQueries {
     // postings collect then only ever sees ≤ df-cap docs per w, and
     // (doc1, pos1) determines w, so the expansion is already
     // (doc1, doc2, pos1)-distinct.
-    val keep = Shared.memoized(s, dir, "shingleTf3")(shingleTf(s, dir))
+    val keep = shingleTf3(s, dir)
       .groupBy("w").agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, 20)).select("w")
     val postings = pos.join(keep, Seq("w"), "left_semi")
@@ -237,7 +242,7 @@ object ParityQueries {
     // same memoized frame as q49 (each tf row is a distinct (doc, w),
     // so per-w df = row count and per-doc positions = sum(tf)) — the
     // raw-occurrence shape re-ran the tokenize+explode four times
-    val tf = Shared.memoized(s, dir, "shingleTf3")(shingleTf(s, dir))
+    val tf = shingleTf3(s, dir)
     val nDocs = tf.agg(countDistinct("doc_id").as("n_docs"))
     val common = tf.groupBy("w").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))

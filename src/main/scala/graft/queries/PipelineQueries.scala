@@ -327,7 +327,6 @@ object PipelineQueries {
     * weight_micro = (bucket · 2654435761) mod 2001 − 1000 — a frozen
     * pseudo-random weight table that exists as a FORMULA, so
     * inference needs no weight-table join at all. */
-  private val linBuckets = 4096L
   private[graft] def linWeightSql(tok: String): String =
     s"""((((instr('0123456789abcdef', substring(md5('graft-lin:' || $tok), 1, 1)) - 1) * 256
         + (instr('0123456789abcdef', substring(md5('graft-lin:' || $tok), 2, 1)) - 1) * 16

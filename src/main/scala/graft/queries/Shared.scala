@@ -5,7 +5,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
-import graft.Tables
+import graft.{SweepOrder, Tables}
+import graft.SweepOrder.{Family, Text}
 import graft.functions.TextFns
 import graft.operators.TextDedup
 
@@ -27,6 +28,13 @@ import graft.operators.TextDedup
   * query ([[retireTransients]]). No byte budget is needed on top: the
   * round-16 sf10 sweep (207/207) ran under one with zero forced
   * evictions and 24 scheduler releases.
+  *
+  * Each family's key, layout and build are declared once, in its
+  * [[graft.SweepOrder.Family]] row; [[memoized]] is called by those
+  * rows only. No sweep runs two memo builds at once: the staged warm
+  * builds on the calling thread, and queries run one after another.
+  * The per-key build locks and the per-thread build bookkeeping stay
+  * for user sessions, which may call the rows from several threads.
   */
 object Shared {
 
@@ -73,6 +81,9 @@ object Shared {
   def touchReport: Seq[(String, Seq[String])] = touches.keys.toSeq
     .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toSeq.sortBy(_._1)
 
+  /** Every live memo frame, by full memo key. */
+  private[graft] def memoFrames: Seq[(String, DataFrame)] = memo.toSeq
+
   /** Every memo build for (session, dir) since the last [[clear]], in
     * build order, keyed by key name. */
   private[graft] def buildRecord(s: SparkSession, dir: String): Seq[Build] = {
@@ -106,7 +117,7 @@ object Shared {
 
   // the transients `track`ed by the memo build running on THIS thread
   // (null outside a build), released as soon as that build is counted.
-  // Per thread: builds run concurrently (the text warm), and releasing
+  // Per thread: a session's builds may run concurrently, and releasing
   // a frame under another build's not-yet-loaded cache entry makes
   // Spark's CacheManager re-plan that entry, which is then built twice
   // and its first copy orphaned
@@ -247,51 +258,40 @@ object Shared {
     }
   }
 
-  /** Sweep groups with staged-warm cache families ([[graft.SweepOrder]]:
-    * 0 match, 1 text, 2 vector). Groups 3/4 have none — their sub-MiB
-    * frames build lazily at first consumer — so warming them is a
-    * no-op that would only log a bogus `cache_build group 3/4` row and
-    * muddy the cache forensics (ADVICE r16). Harnesses gate the staged
-    * warm on this. */
-  def warmable(group: Int): Boolean = group <= 2
+  /** Whether sweep group `group` has a share of the staged warm
+    * ([[graft.SweepOrder.warmSet]]). Harnesses gate the warm on this,
+    * so a group with nothing to build logs no `cache_build` row. */
+  def warmable(group: Int): Boolean = SweepOrder.warmSet.exists(_.group == group)
 
-  /** Build ONE sweep-order group's staged families right before its
-    * first query ([[graft.SweepOrder.sweep]]): match the chain whose
-    * parent q13 releases (matchCands → matchScores → pairScores2), text
-    * dupPairs ‖ simhashes, vector lshBuckets → candCosines. Each
-    * accessor is called once: [[memoized]] has persisted and counted
-    * the frame when it returns. Every other family builds at its first
-    * consumer, its parents still cached (their consumers include its
-    * own). Per-group staging bounds residency to the cluster: an
+  /** Build sweep group `group`'s share of the staged warm right before
+    * its first query ([[graft.SweepOrder.sweep]]), in parent order on
+    * the calling thread: each build reads the one before it from the
+    * cache. Per-group staging bounds residency to the cluster: an
     * up-front warm forced the one round-15 sf10 eviction. */
-  def warmGroup(s: SparkSession, dir: String, group: Int): Unit = group match {
-    case 0 => MatchingQueries.warmShared(s, dir)
-    case 1 =>
-      // two independent text families — build them as concurrent
-      // Spark jobs so the warm uses the whole box (memoized's TrieMap
-      // is concurrent and Spark job submission is thread-safe)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      Seq(
-        Future { dupPairs(s, dir); () },
-        Future { simhashes(s, dir); () })
-        .foreach(Await.result(_, Duration.Inf))
-    case 2 => VectorQueries.warmShared(s, dir)
-    case _ => ()
-  }
+  def warmGroup(s: SparkSession, dir: String, group: Int): Unit =
+    // every family in the set has one key (SweepOrderSpec runs this
+    // for each group): a keyed family's argument comes from its consumer
+    SweepOrder.warmSet.filter(_.group == group)
+      .foreach(_.asInstanceOf[Family[Unit]](s, dir))
 
   /** MinHash-LSH near-dup pairs over documents (q26/q36/q59). */
-  def dupPairs(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "dupPairs")(
-      TextDedup.minhashDupPairs(Tables.documents(s, dir), "doc_id", "text"))
+  lazy val dupPairs: Family[Unit] = Family[Unit]("dupPairs", Text, Nil,
+    Set("q105_survivorship", "q111_curation_report", "q123_split_leakage",
+      "q129_triangles", "q153_degree_dist", "q190_incremental_cc",
+      "q193_source_contamination", "q197_dataset_card", "q204_group_split",
+      "q26_lsh_dup_pairs", "q36_connected_components", "q59_level2_hamming",
+      "q93_curation_pipeline")) { (s, dir, _) =>
+    TextDedup.minhashDupPairs(Tables.documents(s, dir), "doc_id", "text")
+  }
 
   /** Per-doc 32-bit simhash over token hashes (q27/q45/q59). */
-  def simhashes(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "simhashes")(
+  lazy val simhashes: Family[Unit] = Family[Unit]("simhashes", Text, Nil,
+    Set("q27_simhash", "q45_hamming_pairs", "q59_level2_hamming")) {
+    (s, dir, _) =>
       Tables.documents(s, dir)
         .select(col("doc_id"), TextFns.tokens(col("text")).as("toks"))
         .filter(size(col("toks")) > 0)
         .select(col("doc_id"),
-          TextFns.simhash32(TextFns.tokenHashes(col("toks"))).as("simhash")))
+          TextFns.simhash32(TextFns.tokenHashes(col("toks"))).as("simhash"))
+  }
 }

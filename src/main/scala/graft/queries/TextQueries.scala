@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.SweepOrder.{Family, Vector}
 import graft.functions.Exact.r6
 import graft.functions.TextFns
 import graft.functions.TextFns._
@@ -243,9 +244,14 @@ object TextQueries {
 
   /** Shingle TF-IDF cosine pairs (the CosineMatcher analogue). */
   def q29CosineShingles(s: SparkSession, dir: String): DataFrame =
-    CosineText.cosinePairs(Tables.documents(s, dir), "doc_id", "text",
-        memo = Shared.memoized(s, dir, "cosineWeights")(_))
-      .orderBy("doc1", "doc2")
+    CosineText.cosinePairs(cosineWeights(s, dir)).orderBy("doc1", "doc2")
+
+  /** q29's doc×term weights, read by its norms and both sides of its
+    * self-join. Its one reader opens the vector cluster. */
+  private[graft] lazy val cosineWeights: Family[Unit] = Family[Unit](
+      "cosineWeights", Vector, Nil, Set("q29_cosine_shingles")) { (s, dir, _) =>
+    CosineText.cosineWeights(Tables.documents(s, dir), "doc_id", "text")
+  }
 
   /** SimHash hamming near-dup pairs (the PictureScorer-hamming
     * analogue, `matching/scorer/PictureScorer.scala:45,75-92`, with the

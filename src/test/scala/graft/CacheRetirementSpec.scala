@@ -133,7 +133,7 @@ class CacheRetirementSpec extends AnyFunSuite {
       "q43_total_score", "q44_pair_dedup")).map(_._1)
     assert(built.contains("pairScores2"))
     val kChains = graft.queries.MatchingQueries.trainingChains
-      .flatMap(c => Seq(c.scoresKey, c.walkKey)).toSet
+      .flatMap(c => Seq(c.pairScores.prefix, c.walk.prefix)).toSet
     assert(built.filter(kChains).isEmpty, s"built: $built")
   }
 

@@ -29,7 +29,7 @@ class CandCosinesSpec extends AnyFunSuite {
     * (v1 < v2). */
   private def pairSpelling: DataFrame = {
     val emb = Tables.embeddings(spark, sf)
-    val (buckets, _) = VectorQueries.bucketsOf(spark, sf)
+    val buckets = VectorQueries.lshBuckets(spark, sf)
     val cands = buckets.select(col("band"), col("key"), col("vec_id").as("v1"))
       .join(buckets.select(col("band"), col("key"), col("vec_id").as("v2")),
         Seq("band", "key"))
@@ -90,7 +90,7 @@ class CandCosinesSpec extends AnyFunSuite {
     Shared.clear()
     // the unpruned reference, memoized under the memo's own key, so
     // every reader below reads it instead of the pruned build
-    Shared.memoized(spark, sf, "candCosines")(rankedSpelling)
+    Shared.memoized(spark, sf, VectorQueries.candCosines.key(()))(rankedSpelling)
     val reference = readers.map(n => n -> run(n)).toMap
     Shared.clear()
     for (n <- readers) {

@@ -141,7 +141,7 @@ class EntityMatchingSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // both entity types share the scan and every shuffle (tf by
     // entity, N, postings by doc, the self-join); one chain per type
     // would scan lineitem once per statistic and type
-    val plan = executed(queries.MatchingQueries.matchCandsPlan(spark, sf))
+    val plan = executed(queries.MatchingQueries.matchCands.build(spark, sf, ()))
     val scans = collect(plan) {
       case s: FileSourceScanExec if s.relation.location.rootPaths
         .exists(_.getName == "lineitem.parquet") => s

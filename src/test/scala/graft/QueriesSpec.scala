@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, classic}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all specs: the session users get. */
@@ -26,8 +26,16 @@ class QueriesSpec extends AnyFunSuite {
   // run first).
   private def runAttributedSweep(): Unit = {
     queries.Shared.clear()
+    val cache = spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
     val swept = SweepOrder.sweep(spark, sf, SparkEntry.queries.toSeq,
         full = true, "[queries-spec]") { (name, query) =>
+      // Spark keys cache entries by plan: a transient with a memo's
+      // plan shares its entry, so retiring the transient would drop
+      // the memo with it
+      val lost = queries.Shared.memoFrames.collect {
+        case (k, m) if cache.lookupCachedData(m.asInstanceOf[classic.Dataset[_]]).isEmpty => k
+      }
+      assert(lost.isEmpty, s"memo frames with no cache entry before $name: $lost")
       val df = query()
       assert(df.columns.nonEmpty, s"$name has no columns")
       val n = df.count()

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Shared
 
@@ -95,53 +97,110 @@ class SweepOrderSpec extends AnyFunSuite {
     val sched = SweepOrder.releaseSchedule(ordered)
     assert(sched(0) === Seq("matchCands"))
     // the vector cluster gets the same treatment for free: its
-    // sole-consumer queries lead it (q29/cosineWeights, then
-    // q57/mlMinhashTf and q163/mmrCands+mmrSims in numeric order)
+    // sole-consumer queries lead it (q163/mmrSims, built from mmrCands,
+    // first; then q29/cosineWeights and q57/mlMinhashTf in numeric
+    // order)
     val vec = ordered.filter(n => SweepOrder.group(n) == 2)
-    assert(vec.take(3) === Seq("q29_cosine_shingles", "q57_ml_minhash",
-      "q163_mmr_rerank"))
+    assert(vec.take(3) === Seq("q163_mmr_rerank", "q29_cosine_shingles",
+      "q57_ml_minhash"))
   }
 
   /** (family, parent) pairs breaking the lazy-build rule: a family the
     * staged warm does not build must declare no consumer its parent
     * lacks, or a schedule may release the parent before the family's
     * first consumer builds it (and so rebuilds the parent). */
-  private def unsafeLazyFamilies(fams: Seq[Family],
+  private def unsafeLazyFamilies(fams: Seq[Family[_]],
                                  warmed: Set[String]): Seq[(String, String)] = {
     val consumers = fams.map(f => f.prefix -> f.consumers).toMap
     fams.sortBy(_.prefix).flatMap { f =>
-      if (warmed.exists(_.startsWith(f.prefix))) Nil
+      if (warmed(f.prefix)) Nil
       else f.parents.filterNot(p => f.consumers.subsetOf(consumers(p)))
         .map(f.prefix -> _)
     }
   }
 
+  private def withConsumers[A](f: Family[A], consumers: Set[String]): Family[A] =
+    f.copy(consumers = consumers)(f.build)
+
   test("a family built at its first consumer is never outlived by a " +
       "parent's release") {
-    import TestSpark._
-    // the exempt set is what the staged warm really builds
-    val warmed = (0 to 2).filter(Shared.warmable).flatMap { g =>
-      Shared.clear()
-      Shared.warmGroup(spark, sf, g)
-      Shared.buildRecord(spark, sf).map(_.key)
-    }.toSet
-    Shared.clear()
-    assert(warmed.contains("pairScores2") && !warmed.contains("k3walk"),
-      s"unexpected staged warm: $warmed")
-    assert(unsafeLazyFamilies(families, warmed).isEmpty)
+    // the staged warm set is computed from the rule, in parent order
+    val warmed = SweepOrder.warmSet.map(_.prefix)
+    assert(warmed === Seq("matchCands", "matchScores", "pairScores2"))
+    assert(unsafeLazyFamilies(families, warmed.toSet).isEmpty)
     // matchScores must stay warm-built: its consumers are not a subset
     // of matchCands' ({q13}), so built lazily it would rebuild its
     // released parent
-    assert(unsafeLazyFamilies(families, warmed - "matchScores") ===
+    assert(unsafeLazyFamilies(families, warmed.toSet - "matchScores") ===
       Seq("matchScores" -> "matchCands"))
     // the rule bites: without the k-chain consumers on pairScores2 a
-    // subset sweep would release it before q159/q199 build from it
+    // subset sweep would release it before q159/q199 build from it, so
+    // the computed set then warm-builds both k-chain tables too
     val reverted = families.map { f =>
       if (f.prefix != "pairScores2") f
-      else f.copy(consumers = Set("q20_weight_grid", "q72_weight_refine"))
+      else withConsumers(f, Set("q20_weight_grid", "q72_weight_refine"))
     }
-    assert(unsafeLazyFamilies(reverted, warmed).toSet ===
+    assert(unsafeLazyFamilies(reverted, warmed.toSet).toSet ===
       Set("pairScores3" -> "pairScores2", "pairScores6" -> "pairScores2"))
+    val rewarmed = SweepOrder.warmBuilt(reverted).map(_.prefix)
+    assert(rewarmed.toSet === warmed.toSet + "pairScores3" + "pairScores6")
+    assert(unsafeLazyFamilies(reverted, rewarmed.toSet).isEmpty)
+  }
+
+  test("the staged warm builds its computed set, in group 0 only") {
+    import TestSpark._
+    for (g <- 0 to 4) {
+      Shared.clear()
+      Shared.warmGroup(spark, sf, g)
+      val want = SweepOrder.warmSet.filter(_.group == g).map(_.prefix)
+      assert(Shared.buildRecord(spark, sf).map(_.key) === want, s"group $g")
+      assert(Shared.warmable(g) === want.nonEmpty, s"group $g")
+    }
+    Shared.clear()
+  }
+
+  test("each family's build reads exactly its declared ancestors") {
+    // parents drive chainDepth, the unwarmed release schedule and the
+    // warm set: a build reading an undeclared family (or declaring one
+    // it never reads) would mis-schedule both
+    import TestSpark._
+    import graft.queries.VectorQueries
+    // a key argument for each keyed family: q82's k-means K, and a leg
+    // of each ANN family
+    val args: Map[String, Any] =
+      VectorQueries.annLegs.map(l => l.prefix -> l.param).toMap + ("kmeans" -> 8)
+    val byPrefix = families.map(f => f.prefix -> f).toMap
+    def ancestors(f: Family[_]): Set[String] =
+      f.parents.toSet.flatMap((p: String) => ancestors(byPrefix(p)) + p)
+    def familyOf(key: String): String = families.map(_.prefix).filter(key.startsWith).head
+    val wrong = families.flatMap { f =>
+      Shared.clear()
+      f.asInstanceOf[Family[Any]](spark, sf, args.getOrElse(f.prefix, ()))
+      val built = Shared.buildRecord(spark, sf).map(b => familyOf(b.key)).toSet
+      val declared = ancestors(f) + f.prefix
+      if (built == declared) None
+      else Some(s"${f.prefix} builds ${built.toSeq.sorted}, declares ${declared.toSeq.sorted}")
+    }
+    Shared.clear()
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
+  test("memoized is called only by the family rows") {
+    // each memo family's key, partition keys and build are spelled in
+    // its Family row; a direct call would hide a family from the
+    // schedule, the warm set and the parent check
+    val call = """\bmemoized\(""".r
+    val walk = Files.walk(Paths.get("src/main"))
+    val sources = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val calls = sources.flatMap { p =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if call.findFirstIn(line).nonEmpty &&
+            !line.contains("def memoized(") => s"${p.getFileName}:${i + 1}"
+      }
+    }
+    assert(calls.size === 1 && calls.head.startsWith("SweepOrder.scala:"),
+      s"call Shared.memoized through a SweepOrder.Family row: $calls")
   }
 
   test("every family row names declared parents and a disjoint prefix") {
@@ -162,7 +221,8 @@ class SweepOrderSpec extends AnyFunSuite {
     val known = SparkEntry.queries.keySet
     def unique[A](xs: Seq[A]) = xs.distinct == xs
     assert(unique(legs.map(_.method)), "a method label is declared twice")
-    assert(unique(legs.map(_.key)), "a memo key is declared twice")
+    assert(unique(legs.map(l => l.family.key(l.param))),
+      "a memo key is declared twice")
     // legs sharing a prefix are one family: parameterized, same parents
     legs.groupBy(_.prefix).foreach { case (p, rows) =>
       assert(rows.size == 1 || rows.forall(_.param.nonEmpty),
